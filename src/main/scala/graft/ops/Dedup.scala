@@ -10,7 +10,9 @@ import graft.queries.Tables._
  * Deduplication operators for large-scale text pipelines (north-star surface,
  * SURVEY §2.3 D17 family): exact fingerprint dedup, MinHash+LSH near-dup,
  * SimHash near-dup, and exact n-gram Jaccard — all expressed as declarative
- * column programs (codegen-friendly, no driver materialization).
+ * column programs (codegen-friendly, no driver materialization — with one
+ * bounded exception: [[minLabelComponents]] clusters a pair graph of at
+ * most [[LabelLog.SmallMergeMaxEdges]] edges on the driver).
  *
  * Scale design: every path shuffles on a constant-width key (md5 hex, a
  * 64-bit band hash, or a 16-bit SimHash block), never on raw document text;
@@ -523,23 +525,25 @@ object Dedup {
    * pure shortcut, never a correctness risk; fixpoint = components either
    * way. The driver sees ONE scalar per round (the has-anything-changed
    * existence check that controls the loop — the iterative-algorithm
-   * exception to the no-driver-materialization rule); labels/edges stay
-   * distributed throughout. A non-converged exit raises rather than
-   * returning partial labels, and persisted intermediates are released in
-   * a finally on both paths. Each round's labels are eagerly
-   * `localCheckpoint`ed: that truncates the growing join-tree lineage (the
-   * doubling join has two consumers, so raw lineage would nest 2^k plan
-   * copies by round k and Catalyst re-analysis would blow up) and the
-   * blocks are ContextCleaner-managed (freed when the Dataset is GC'd),
-   * unlike CacheManager entries which outlive the call — the round-5 leak.
+   * exception to the no-driver-materialization rule); above the driver
+   * path's edge ceiling, labels/edges stay distributed throughout. A
+   * non-converged exit raises rather than returning partial labels, and
+   * persisted intermediates are released in a finally on both paths.
+   * Each round's labels are eagerly `localCheckpoint`ed: that truncates
+   * the growing join-tree lineage (the doubling join has two consumers,
+   * so raw lineage would nest 2^k plan copies by round k and Catalyst
+   * re-analysis would blow up) and the blocks are ContextCleaner-managed
+   * (freed when the Dataset is GC'd), unlike CacheManager entries which
+   * outlive the call — the round-5 leak.
    *
-   * Local bench cost is the iterative fixed floor, not data: pair
-   * generation (~1 s at sf0.1) plus O(log diameter)+1 rounds of four tiny
-   * shuffles each (the doubling self-join buys a round count drop for one
-   * extra small shuffle per round) — the same per-round scheduling floor
-   * the streaming replays pay per micro-batch. At corpus scale those
-   * rounds amortize over billions of edges; rounds, not rows, are the
-   * local cost driver.
+   * Local bench cost is the fixed floor, not data. A distributed call
+   * pays O(log diameter)+1 rounds of tiny shuffles and a checkpoint each
+   * — the same per-round scheduling floor the streaming replays pay per
+   * micro-batch, which at corpus scale amortizes over billions of edges.
+   * Bench-sized pair graphs (a few hundred edges) sit under the driver
+   * path's ceiling instead (see [[minLabelComponents]]): one checkpoint
+   * job that also counts the pairs, one collect, and a union-find on the
+   * driver — the rounds' jobs are gone, pair generation remains.
    */
   def nearDupClusters(docs: DataFrame, threshold: Double = 0.8,
                       maxIters: Int = 50): DataFrame =
@@ -554,8 +558,24 @@ object Dedup {
    * text pairs, exact embedding pairs, …) shares one clustering engine.
    * Input: a frame with columns `aCol`, `bCol` (one row per matched pair);
    * output: (`outId`, cluster_id, is_canonical), one row per distinct
-   * endpoint. `onConverged` receives the round count (instrumentation —
-   * the scale-curve tooling records it).
+   * endpoint, ids typed as the input's. `onConverged` receives the round
+   * count (instrumentation — the scale-curve tooling records it); the
+   * driver path below runs no rounds and reports 0.
+   *
+   * Two paths, chosen by the edge count. The pair list is materialized
+   * ONCE by an eager `localCheckpoint` whose job also counts it (an
+   * `Observation`, no extra job). A graph of at most
+   * [[LabelLog.SmallMergeMaxEdges]] edges — ≤ 64 KiB of id pairs, the
+   * ceiling the index twins' small-merge path already uses — is collected
+   * and clustered on the driver by the same min-root union-find
+   * ([[LabelLog.deltasLocal]] with no current labels: every endpoint →
+   * its component minimum), and comes back as a 1-slice RDD-backed frame
+   * (a `LogicalRDD`, the same plan shape as the distributed path's final
+   * checkpoint). On such graphs each distributed round was a hop
+   * aggregation, a pointer self-join and a checkpoint over a few hundred
+   * rows: ~all job fixed cost (at the batch benchmark's 400 documents,
+   * n38 32 → 18 jobs and n56 34 → 20). Larger graphs run the distributed
+   * rounds.
    *
    * Round-cap calibration: dup-cluster graphs converge in a handful of
    * rounds, but a pair graph near the random-graph percolation threshold
@@ -567,12 +587,71 @@ object Dedup {
    */
   def minLabelComponents(pairList: DataFrame, aCol: String, bCol: String,
                          outId: String, maxIters: Int = 50,
-                         onConverged: Int => Unit = _ => ()): DataFrame = {
-    // persist BEFORE the symmetric union: the two edge directions are two
-    // consumers of the (possibly expensive) pair pipeline, and without the
-    // barrier each one re-runs it
+                         onConverged: Int => Unit = _ => ()): DataFrame =
+    minLabelComponents(pairList, aCol, bCol, outId, maxIters, onConverged,
+      LabelLog.SmallMergeMaxEdges)
+
+  /** [[minLabelComponents]] with an explicit driver-path edge ceiling —
+    * lets specs run either path on the same graph (0 forces the
+    * distributed rounds on any non-empty graph). */
+  private[ops] def minLabelComponents(pairList: DataFrame, aCol: String,
+                                      bCol: String, outId: String,
+                                      maxIters: Int, onConverged: Int => Unit,
+                                      localMaxEdges: Int): DataFrame = {
+    // one eager materialization: the two edge directions below are two
+    // consumers of the (possibly expensive) pair pipeline, and the count
+    // that picks the path rides the same job
+    val edgeObs = org.apache.spark.sql.Observation()
     val pairs = pairList
-      .select(col(aCol).as("doc_a"), col(bCol).as("doc_b")).persist()
+      .select(col(aCol).as("doc_a"), col(bCol).as("doc_b"))
+      .observe(edgeObs, count(lit(1)).as("n_edges"))
+      .localCheckpoint()
+    val nEdges = edgeObs.get.get("n_edges") match {
+      case Some(l: java.lang.Long) => l.longValue()
+      case _ => 0L
+    }
+    val (out, path, rounds) =
+      if (nEdges <= localMaxEdges) (localComponents(pairs, outId), "driver", 0)
+      else {
+        val (labels, r) = distributedComponents(pairs, outId, maxIters)
+        (labels, "distributed", r)
+      }
+    log.info(s"minLabelComponents path=$path edges=$nEdges rounds=$rounds")
+    onConverged(rounds)
+    out
+  }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The driver path of [[minLabelComponents]]: collect the (bounded)
+    * checkpointed pairs, union-find them to component minima, and return
+    * the result with the distributed path's exact schema — the id type is
+    * the widened type the symmetric edge union would give the pair
+    * columns, `cluster_id`/`is_canonical` nullable as the aggregation
+    * makes them. */
+  private def localComponents(pairs: DataFrame, outId: String): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val spark = pairs.sparkSession
+    val idField = pairs.select(col("doc_a").as("id"))
+      .unionByName(pairs.select(col("doc_b").as("id"))).schema("id")
+    val edges = pairs
+      .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (labels, _) = LabelLog.deltasLocal(edges, Map.empty)
+    val rows = labels.map { case (id, lbl) => Row(id, lbl, id == lbl) }
+    val asLong = StructType(Seq(StructField(outId, LongType, idField.nullable),
+      StructField("cluster_id", LongType), StructField("is_canonical", BooleanType)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), asLong)
+      .select(col(outId).cast(idField.dataType).as(outId),
+        col("cluster_id").cast(idField.dataType).as("cluster_id"),
+        col("is_canonical"))
+  }
+
+  /** The distributed rounds of [[minLabelComponents]] over the
+    * checkpointed pair list: the labels frame and the round count. */
+  private def distributedComponents(pairs: DataFrame, outId: String,
+                                    maxIters: Int): (DataFrame, Int) = {
     // symmetric edge set, hash-partitioned on dst ONCE at materialization
     // (round-19, guide §2.4 "two operations keyed the same way can share
     // one exchange"): round 0's groupBy(dst) and every later round's
@@ -675,14 +754,12 @@ object Dedup {
         s"label propagation did not converge in $maxIters rounds — a cluster " +
           "diameter exceeds the cap; raise maxIters rather than returning " +
           "partial labels")
-      onConverged(iter)
       // cheap projection over the final round's checkpoint blocks — the
       // result stays valid after the finally because checkpoint blocks are
       // lineage-free and live as long as the returned Dataset references them
-      labels.select(col("doc_id").as(outId), col("lbl").as("cluster_id"),
-        (col("doc_id") === col("lbl")).as("is_canonical"))
+      (labels.select(col("doc_id").as(outId), col("lbl").as("cluster_id"),
+        (col("doc_id") === col("lbl")).as("is_canonical")), iter)
     } finally {
-      pairs.unpersist()
       edges.unpersist()
       if (labels != null) labels.unpersist()
     }

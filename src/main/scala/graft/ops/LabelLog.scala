@@ -73,7 +73,14 @@ private[ops] object LabelLog {
     * band pruning) or an over-ceiling edge set keeps the distributed
     * path, as does a nonempty relabel log (the fast path would otherwise
     * have to resolve through it driver-side; post-fold batches — the
-    * steady state — have an empty log). */
+    * steady state — have an empty log).
+    *
+    * The same ceiling bounds the second driver path,
+    * [[Dedup.minLabelComponents]]: a pair graph of at most this many
+    * edges is clustered by [[deltasLocal]] on the driver instead of by
+    * distributed label rounds. That path serves every batch clustering
+    * query (n27, n36, n37, n38, n53, n56, n57, n74) and the bulk batches
+    * that [[deltas]] still sends through the distributed merge. */
   private[ops] val SmallMergeMaxEdges = 4096
 
   /** [[deltas]] computed driver-side for a bounded edge set: identical
@@ -198,16 +205,22 @@ private[ops] object LabelLog {
     *  - RELABEL rows: existing labels (mapping nodes that are some current
     *    label — disjoint from new ids, same argument) whose component
     *    minimum moved.
+    *
+    * `ccLocalMaxEdges` is the contracted graph's driver-path ceiling in
+    * [[Dedup.minLabelComponents]] (specs pass 0 to force the distributed
+    * rounds).
     */
-  def deltas(edges: DataFrame, endpoints: DataFrame,
-             cur: DataFrame): (DataFrame, DataFrame) = {
+  def deltas(edges: DataFrame, endpoints: DataFrame, cur: DataFrame,
+             ccLocalMaxEdges: Int = SmallMergeMaxEdges)
+      : (DataFrame, DataFrame) = {
     val contracted = edges
       .join(cur.select(col("id").as("a"), col("lbl").as("la0")), Seq("a"), "left")
       .join(cur.select(col("id").as("b"), col("lbl").as("lb0")), Seq("b"), "left")
       .select(coalesce(col("la0"), col("a")).as("la"),
         coalesce(col("lb0"), col("b")).as("lb"))
       .filter(col("la") =!= col("lb"))
-    val mapping = Dedup.minLabelComponents(contracted, "la", "lb", "node")
+    val mapping = Dedup.minLabelComponents(contracted, "la", "lb", "node",
+        maxIters = 50, onConverged = _ => (), ccLocalMaxEdges)
       .select(col("node"), col("cluster_id"))
     val newAssign = endpoints
       .join(cur.select("id"), Seq("id"), "left_anti")

@@ -450,7 +450,7 @@ object Similarity {
     * each task builds ~one cell. Env-tunable for cluster geometries; the
     * default keeps 8·16 = 128 granules ≈ 4×w locally. */
   private val CellJoinSaltWidth: Int =
-    sys.env.get("SPARK_GRAFT_CELL_SALT").map(_.toInt).getOrElse(16)
+    graft.tools.Sessions.envInt("SPARK_GRAFT_CELL_SALT", 16)
 
   /** The cell equi-join with the crossover applied. Above the threshold
     * the join is hinted to shuffled-hash — so neither static planning

@@ -24,9 +24,11 @@ import org.apache.spark.sql.SparkSession
 object Sessions {
   /** Fail fast on a malformed env override (round-18 ADVICE: a raw string
     * forwarded to Spark conf only fails at the first shuffle with an opaque
-    * error rather than at session construction, naming the variable). */
-  private def envInt(name: String, default: Int): Int =
-    sys.env.get(name).map { s =>
+    * error rather than at session construction, naming the variable).
+    * `env` is the variable lookup (specs pass a map). */
+  private[graft] def envInt(name: String, default: Int,
+                            env: String => Option[String] = sys.env.get): Int =
+    env(name).map { s =>
       val v = try s.toInt catch {
         case _: NumberFormatException =>
           throw new IllegalArgumentException(
@@ -76,6 +78,5 @@ object Sessions {
 
   /** [[local]] sized from the `SPARK_GRAFT_CPUS` env var. */
   def fromEnv(default: Int, logLevel: String = "WARN"): SparkSession =
-    local(sys.env.getOrElse("SPARK_GRAFT_CPUS", default.toString).toInt,
-      logLevel)
+    local(envInt("SPARK_GRAFT_CPUS", default), logLevel)
 }

@@ -113,8 +113,11 @@ object LabelLogProps extends Properties("LabelLog") {
         val (gotAssign, gotRelabel) = LabelLog.deltasLocal(edges, cur)
         val endpointsDf = edges.flatMap { case (a, b) => Seq(a, b) }
           .distinct.toDF("id")
+        // ceiling 0: the distributed label rounds — under the default
+        // ceiling deltas would cluster these graphs with deltasLocal too
         val (wantAssignDf, wantRelabelDf) = LabelLog.deltas(
-          edges.toDF("a", "b"), endpointsDf, cur.toSeq.toDF("id", "lbl"))
+          edges.toDF("a", "b"), endpointsDf, cur.toSeq.toDF("id", "lbl"),
+          ccLocalMaxEdges = 0)
         val wantAssign = wantAssignDf.select("id", "lbl").collect()
           .map(r => (r.getLong(0), r.getLong(1))).toSet
         val wantRelabel = wantRelabelDf.collect()

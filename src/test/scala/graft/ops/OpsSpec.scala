@@ -125,8 +125,37 @@ class OpsSpec extends AnyFunSuite {
     assert(dupCount == texts.size - texts.values.toSet.size)
   }
 
-  test("minLabelComponents equals union-find on random graphs (fixed seed)") {
+  /** Union-find reference: every endpoint → its component minimum. */
+  private def unionFindComponents(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.groupBy(find).flatMap { case (_, ms) =>
+      val min = ms.min; ms.map(_ -> min)
+    }
+  }
+
+  /** minLabelComponents at driver-path ceiling `ceiling`: labels, rounds
+    * reported (0 = driver path) and the output schema. */
+  private def components(edges: Seq[(Long, Long)], ceiling: Int) = {
     import spark.implicits._
+    var rounds = -1
+    val out = Dedup.minLabelComponents(edges.toDF("a", "b"), "a", "b", "id",
+      maxIters = 50, onConverged = r => rounds = r, ceiling)
+    val got = out.collect().map { r =>
+      assert(r.getBoolean(2) == (r.getLong(0) == r.getLong(1)))
+      r.getLong(0) -> r.getLong(1)
+    }.toMap
+    (got, rounds, out.schema)
+  }
+
+  test("minLabelComponents equals union-find on random graphs (fixed seed)") {
     val rng = new scala.util.Random(42)
     for (trial <- 1 to 3) {
       val n = 30 + rng.nextInt(40)
@@ -135,24 +164,37 @@ class OpsSpec extends AnyFunSuite {
       // stressing the doubling path far harder than planted 2-3 cliques
       val edges = Seq.fill(n)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
         .filter { case (a, b) => a != b }.distinct
-      val got = Dedup.minLabelComponents(
-          edges.toDF("a", "b"), "a", "b", "id")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // union-find reference
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElseUpdate(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val members = parent.keys.toSeq
-      val expect = members.groupBy(find).flatMap { case (_, ms) =>
-        val min = ms.min; ms.map(_ -> min)
-      }.toMap
-      assert(got == expect, s"trial $trial (n=$n) mismatch")
+      val expect = unionFindComponents(edges)
+      // both paths on every trial: the driver union-find (default
+      // ceiling) and the distributed rounds (ceiling 0)
+      val (local, localRounds, localSchema) =
+        components(edges, LabelLog.SmallMergeMaxEdges)
+      val (dist, distRounds, distSchema) = components(edges, 0)
+      assert(localRounds == 0 && distRounds >= 1,
+        s"trial $trial: rounds $localRounds / $distRounds")
+      assert(local == expect, s"trial $trial (n=$n) driver path mismatch")
+      assert(dist == expect, s"trial $trial (n=$n) distributed mismatch")
+      assert(localSchema == distSchema,
+        s"trial $trial: schemas differ\n$localSchema\n$distSchema")
+    }
+  }
+
+  test("minLabelComponents: the default ceiling splits the paths at 4096 edges") {
+    // a subcritical random graph (average degree ≈ 0.7): many small
+    // trees, so the distributed side converges in a few rounds
+    val rng = new scala.util.Random(7)
+    val n = 12000
+    val edges = Iterator.continually(
+        (rng.nextInt(n).toLong, rng.nextInt(n).toLong))
+      .filter { case (a, b) => a != b }
+      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+      .distinct.take(LabelLog.SmallMergeMaxEdges + 1).toSeq
+    for (m <- Seq(LabelLog.SmallMergeMaxEdges, LabelLog.SmallMergeMaxEdges + 1)) {
+      val (got, rounds, _) =
+        components(edges.take(m), LabelLog.SmallMergeMaxEdges)
+      assert((rounds == 0) == (m <= LabelLog.SmallMergeMaxEdges),
+        s"$m edges: $rounds rounds")
+      assert(got == unionFindComponents(edges.take(m)), s"$m edges mismatch")
     }
   }
 
