@@ -566,7 +566,7 @@ object Dedup {
    * ONCE by an eager `localCheckpoint` whose job also counts it (an
    * `Observation`, no extra job). A graph of at most
    * [[LabelLog.SmallMergeMaxEdges]] edges — ≤ 64 KiB of id pairs, the
-   * ceiling the index twins' small-merge path already uses — is collected
+   * ceiling of [[LabelledBandIndex]]'s per-batch small merge — is collected
    * and clustered on the driver by the same min-root union-find
    * ([[LabelLog.deltasLocal]] with no current labels: every endpoint →
    * its component minimum), and comes back as a 1-slice RDD-backed frame

@@ -180,8 +180,6 @@ final class IncrementalIvfPqIndex(root: Path,
     Seq(PartTable("codes", CodesDdl,
       bucket = Some(Bucketing(col("cell"), nList))))
 
-  override protected def snapTables: Seq[(String, String)] = Seq.empty
-
   /** The `foreachBatch` entry point (replay-idempotent, n41 contract):
     * one map-side encode pass, one batch-sized part write — per-batch
     * cost ∝ batch, never ∝ index, with nothing to merge. */

@@ -54,8 +54,6 @@ final class IncrementalDecontam(root: Path, benchGrams: DataFrame,
   override protected def partTables: Seq[PartTable] =
     Seq(PartTable("admitted", AdmittedDdl))
 
-  override protected def snapTables: Seq[(String, String)] = Seq.empty
-
   // built once per gate: the benchmark is static input, not stream state
   private lazy val bench = benchGrams.select(col("gram")).distinct().persist()
   private lazy val mightContain = {

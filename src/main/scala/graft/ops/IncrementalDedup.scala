@@ -2,9 +2,8 @@ package graft.ops
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.queries.Tables
@@ -12,140 +11,56 @@ import graft.queries.Tables
 /**
  * Incremental / streaming deduplication: the n38 per-document manifest
  * maintained continuously as documents arrive, instead of recomputed from
- * scratch. This is the composition a production corpus pipeline actually
- * runs — the reference's flagship path is a streaming source→sink lifecycle
- * (`/root/reference/tests/test_delta_end_to_end.py:72-90`) and the dedup
- * family (n01→n38) is what the micro-batches must maintain. All
- * state-machine machinery (parts + markers, versioned snapshots, tiered
- * compaction levels, collision-bucket layouts, retention GC, crash
- * consistency) lives in [[IncrementalStateMachine]]; this class keeps the
- * text domain logic.
+ * scratch — the text modality of [[LabelledBandIndex]], which owns the
+ * band table, the candidate probe, the label store and the per-batch
+ * skeleton. This class keeps the text domain logic.
  *
- * Per micro-batch (`foreachBatch`, the d61 idempotent-write shape):
- *   1. compute the batch's shingle hashes, MinHash band hashes, and md5
- *      fingerprints with the SAME kernels the batch queries use
- *      ([[Dedup.wordShingles]] / [[Dedup.minHashSignature]] /
- *      [[Dedup.lshBands]]) — banding is per-document and deterministic, so
- *      candidate recall is batching-invariant;
- *   2. append them to the persisted index (one `b<batchId>` parquet part
- *      per table, overwrite mode + commit marker ⇒ checkpoint-replay
- *      idempotent, exactly the `IdempotentParquetWriter` contract);
- *   3. generate candidates STREAM-STATIC: batch bands ⋈ (index ∪ batch)
- *      on (band, bh) — every qualifying pair has at least one endpoint in
- *      the current batch, so each unordered pair is discovered exactly
- *      once across the run, in the batch where its younger member arrives;
- *   4. verify candidates with exact Jaccard ([[Dedup.verifyJaccard]]) and
- *      fold the new edges into the persisted cluster labels by CONTRACTING
- *      them through the current labels (endpoint → its component minimum)
- *      and running [[Dedup.minLabelComponents]] on the contracted graph —
- *      the graph of *touched components*, bounded by the batch's edge
- *      count, never the corpus. Labels are component-minimum doc_ids, so
- *      contraction preserves the global fixpoint: after every batch the
- *      label table equals what the batch algorithm would produce on all
- *      documents seen so far (bridging merges included — a batch that
- *      connects two existing clusters relabels the larger-min one, which
- *      can flip an old "keep" verdict to "near_dup", exactly as a batch
- *      recompute would);
- *   5. append the batch's (fp, min doc_id) keeper rows and arrival-time
- *      verdicts for the batch's documents to their part tables.
+ * Payload per micro-batch: the documents' shingle hashes and MinHash band
+ * hashes, computed with the kernels the batch n38 query uses
+ * ([[Dedup.wordShingles]] / [[Dedup.minHashSignature]] /
+ * [[Dedup.lshBands]]), and their md5 fingerprints. Candidates verify with
+ * exact Jaccard ([[Dedup.verifyJaccard]]) at n38's 0.8 against the
+ * `shingles` table (id-bucketed, so the verification read prunes to the
+ * candidate endpoints' buckets). After the label merge the batch appends
+ * its (fp, min doc_id) keeper rows and its arrival-time verdicts.
+ * `docs`/`manifest` compact flat: they are only read corpus-wide
+ * (finalManifest / arrivalLog).
  *
- * COLLISION-BUCKET PRUNING (the [[IncrementalEmbedIndex]] treatment):
- * `bands` levels are hive-bucketed on `hash(band, bh) % P` and the
- * candidate probe prunes to the batch's band-key buckets (round 11);
- * `shingles` levels are bucketed on `hash(doc_id) % P` and the exact
- * Jaccard verification prunes to the candidate endpoints' id buckets
- * (round 12 — listing-time pruning of the broadcast-candidate double
- * scan, not the rejected endpoint semi-join). `docs`/`manifest` compact
- * flat: they are only read corpus-wide (finalManifest / arrivalLog).
+ * The fingerprint keepers are min-resolved per-batch parts, like the
+ * label store: every batch writes only its own rows, lookups prune to the
+ * batch's fp buckets, and the full merge collapses them to one min row
+ * per fp.
  *
- * Cluster labels live in the [[LabelLog]] relabel-log store and the
- * fingerprint keepers as min-resolved per-batch parts (round 13): both
- * were versioned snapshots through round 12, whose per-batch full
- * read+rewrite was O(store) — the last per-batch terms that grew with
- * index size. Now every batch writes only its own rows, lookups prune to
- * the batch's key buckets, and the full merge folds the relabel log /
- * collapses the keepers (path compression at the bin-pack). The expensive
- * stages — shingling, banding, candidate generation, verification — touch
- * only the batch and its collision partners, which is the entire point of
- * maintaining the index incrementally.
- *
- * Correctness claim (tested in `IncrementalDedupSpec`, oracle-gated as
- * n41): after `processAllAvailable`, [[IncrementalDedupIndex.finalManifest]]
- * equals the batch n38 manifest on the same documents — for ANY split of
- * the corpus into batches, because the edge set is batching-invariant
- * (step 3) and min-label contraction commutes with edge arrival order.
+ * A bridging merge that connects two existing clusters relabels the
+ * larger-min one, which can flip an old "keep" verdict to "near_dup",
+ * exactly as a batch recompute would — which is why [[finalManifest]]
+ * derives from state and [[arrivalLog]] is only the audit trail.
  */
-final class IncrementalDedupIndex(root: Path, threshold: Double = 0.8,
-                                  bandBuckets: Int = 64,
-                                  override protected val maxLevels: Int = 4,
+final class IncrementalDedupIndex(root: Path, bandBuckets: Int = 64,
+                                  maxLevels: Int = 4,
                                   bucketMaxDirs: Int = 4096,
                                   idBuckets: Int = 64)
-  extends IncrementalStateMachine(root) {
+  extends LabelledBandIndex(root, "doc_id", bandBuckets, maxLevels,
+    bucketMaxDirs, idBuckets) {
 
   private val DocsDdl = "doc_id BIGINT, source STRING, fp STRING"
   private val ShinglesDdl = "doc_id BIGINT, sh_hashes ARRAY<BIGINT>"
-  private val BandsDdl = "doc_id BIGINT, band INT, bh BIGINT"
-  private val AssignDdl = "doc_id BIGINT, lbl BIGINT"
   private val FpKeepDdl = "fp STRING, fp_keep BIGINT"
   private val ManifestDdl =
     "doc_id BIGINT, source STRING, verdict STRING, keep_doc BIGINT"
 
-  /** The band tree's hive-bucket column — the candidate probe's pruning
-    * key. */
-  private def bandBucketCol: Column =
-    pmod(xxhash64(col("band"), col("bh")), lit(bandBuckets.toLong))
-
-  /** The shingle table's hive-bucket column over a doc_id column — the
-    * verification read's pruning key. Sized by the shingle table's own
-    * row count (one row per doc — `idBuckets`), not the 16×-larger band
-    * table's (see the embed twin's note on file-sized buckets). */
-  private def idBucketCol(c: Column): Column =
-    pmod(xxhash64(c), lit(idBuckets.toLong))
-
-  override protected def partTables: Seq[PartTable] = Seq(
+  override protected def payloadTables: Seq[PartTable] = Seq(
     PartTable("docs", DocsDdl),
-    PartTable("shingles", ShinglesDdl,
-      Some(Bucketing(idBucketCol(col("doc_id")), idBuckets, bucketMaxDirs))),
-    PartTable("bands", BandsDdl,
-      Some(Bucketing(bandBucketCol, bandBuckets, bucketMaxDirs))),
+    PartTable("shingles", ShinglesDdl, idBucketed(col("doc_id"))),
     PartTable("manifest", ManifestDdl),
-    // the relabel-log label store (see [[LabelLog]], the embed twin's
-    // note) plus the fingerprint keepers as min-resolved per-batch parts:
-    // both formerly versioned snapshots whose per-batch full rewrite was
-    // O(store) — now every batch writes only its own rows and readers
-    // resolve (label chains / group-min) over bucket-pruned reads
-    PartTable("assign", AssignDdl,
-      Some(Bucketing(idBucketCol(col("doc_id")), idBuckets, bucketMaxDirs))),
-    PartTable("relabel", LabelLog.RelabelDdl, trackNonempty = true),
-    PartTable("fpkeep", FpKeepDdl,
-      Some(Bucketing(fpBucketCol, idBuckets, bucketMaxDirs))))
+    PartTable("fpkeep", FpKeepDdl, idBucketed(col("fp"))))
 
-  override protected def snapTables: Seq[(String, String)] = Seq.empty
-
-  /** Full merges resolve the assignment level through the whole relabel
-    * log and empty the log level (path compression — the embed twin's
-    * contract), and collapse the fingerprint keepers to one min row per
-    * fp; all three are deterministic functions of committed state and
-    * content-equivalent under the tables' read-time resolutions. */
+  /** Full merges also collapse the fingerprint keepers to one min row per
+    * fp — content-equivalent under [[fpView]]'s group-min. */
   override protected def fullMergeContent(spark: SparkSession, t: PartTable,
                                           df: DataFrame): DataFrame =
-    t.name match {
-      case "assign" => LabelLog.resolve(df,
-        liveRelabels(spark, Long.MaxValue, requireMarker = true))
-      case "relabel" => emptyDf(spark, LabelLog.RelabelDdl)
-      case "fpkeep" => df.groupBy("fp").agg(min(col("fp_keep")).as("fp_keep"))
-      case _ => df
-    }
-
-  private def liveRelabels(spark: SparkSession, max: Long,
-                           requireMarker: Boolean = false): DataFrame =
-    readParts(spark, "relabel", max, LabelLog.RelabelDdl,
-      requireMarker = requireMarker)
-
-  /** The fingerprint-keeper table's hive-bucket column — the arrival
-    * manifest's fp lookup prunes to the batch's fp buckets. */
-  private def fpBucketCol: Column =
-    pmod(xxhash64(col("fp")), lit(idBuckets.toLong))
+    if (t.name == "fpkeep") df.groupBy("fp").agg(min(col("fp_keep")).as("fp_keep"))
+    else super.fullMergeContent(spark, t, df)
 
   /** The keeper view below `max`: min doc_id per fingerprint over the
     * (optionally bucket-pruned) keeper parts — group-min is associative,
@@ -157,239 +72,66 @@ final class IncrementalDedupIndex(root: Path, threshold: Double = 0.8,
         pruneTo = pruneTo)
       .groupBy("fp").agg(min(col("fp_keep")).as("fp_keep"))
 
-  /** Assignments resolved through the relabel log, with the driver-side
-    * fast path (the embed twin's shape): skip the resolve machinery
-    * entirely when the log cannot hold rows. */
-  private def resolved(spark: SparkSession, assign: DataFrame, max: Long,
-                       requireMarker: Boolean = false): DataFrame =
-    if (!trackedHasData("relabel", max)) assign
-    else LabelLog.resolve(assign,
-      liveRelabels(spark, max, requireMarker = requireMarker))
-
-  /** The label view below `max`: assignments (optionally bucket-pruned —
-    * sound under the manifest's LEFT join, rows outside the pruned
-    * buckets cannot match the probe side) resolved through the live
-    * relabel log. */
-  private def labelView(spark: SparkSession, max: Long,
-                        pruneTo: Option[Seq[Long]] = None,
-                        requireMarker: Boolean = false): DataFrame =
-    resolved(spark, readParts(spark, "assign", max, AssignDdl,
-      requireMarker = requireMarker, pruneTo = pruneTo), max,
-      requireMarker = requireMarker)
-
-  /** The bounded driver-side label merge — the embed twin's
-    * [[IncrementalEmbedIndex]] `smallMerge`, on doc ids; see
-    * [[LabelLog.SmallMergeMaxEdges]] for the contract and
-    * `LabelLogProps` for the distributed-equivalence pin. */
-  private def smallMerge(spark: SparkSession, rows: Seq[(Long, Long)],
-                         batchId: Long): Unit = {
-    import spark.implicits._
-    val endpoints = rows.flatMap { case (a, b) => Seq(a, b) }.distinct
-    val bSet = endpoints.map(idBucketLocal).distinct
-    val cur = readParts(spark, "assign", batchId, AssignDdl,
-        pruneTo = Some(bSet).filter(_.size <= idBuckets / 2))
-      .filter(col("doc_id").isInCollection(endpoints))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val (newAssign, relabel) = LabelLog.deltasLocal(rows, cur)
-    newAssign.toDF("doc_id", "lbl").coalesce(1)
-      .write.mode("overwrite").parquet(partDir("assign", batchId).toString)
-    // never write an EMPTY relabel part (the trackNonempty contract) —
-    // emptiness is known driver-side here, no probe job
-    if (relabel.nonEmpty)
-      relabel.toDF("old", "new").coalesce(1)
-        .write.mode("overwrite").parquet(partDir("relabel", batchId).toString)
-  }
-
-  /** Driver-side twin of [[idBucketCol]] (seed-42 XXH64, floorMod). */
-  private def idBucketLocal(id: Long): Long =
-    java.lang.Math.floorMod(
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L),
-      idBuckets.toLong)
-
-  /** Dev/spec accessors (the text analogue of the embed probes). */
-  private[graft] def debugReadBands(spark: SparkSession, max: Long,
-                                    pruneTo: Option[Seq[Long]] = None): DataFrame =
-    readParts(spark, "bands", max, BandsDdl, pruneTo = pruneTo)
   private[graft] def debugReadShingles(spark: SparkSession, max: Long,
                                        pruneTo: Option[Seq[Long]] = None): DataFrame =
-    readParts(spark, "shingles", max, ShinglesDdl, pruneTo = pruneTo)
-  private[graft] def debugBandBucket: Column = bandBucketCol
-  private[graft] def debugIdBucket(c: Column): Column = idBucketCol(c)
+    debugRead(spark, "shingles", max, pruneTo)
 
-  /** The `foreachBatch` entry point. Replay-idempotent: a committed batch
-    * short-circuits; an interrupted one recomputes deterministically and
-    * overwrites its own parts (both end states identical — the
-    * [[graft.sinks.IdempotentParquetWriter]] contract). */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (isCommitted(batchId)) return
-    rejectBelowWatermark(batchId)
-    val spark = batch.sparkSession
-    val b = batch.persist()
-    val sh = b
-      .select(col("doc_id"), Dedup.wordShingles(col("text")).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .select(col("doc_id"),
-        array_sort(transform(col("shingles"), s => xxhash64(s))).as("sh_hashes"))
-      .persist()
-    val bandsB = sh
-      .select(col("doc_id"),
-        explode(Dedup.lshBands(Dedup.minHashSignature(col("sh_hashes")))).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-      .persist()
-    // candidate probe pruned to the batch's band-key buckets; exact
-    // verification pruned to the candidate endpoints' id buckets (see the
-    // class doc — same broadcast-candidate join shape, fewer leaf dirs).
-    // Endpoint pruning is attempted only in the TRICKLE regime (band
-    // pruning engaged): a bulk batch's endpoint set covers most buckets
-    // anyway, and its collect would force the candidate join once extra
-    // plus a persist (the embed twin measured that as the whole bulk-batch
-    // overhead at ×100).
-    val pbSet = pruneSet(bandsB, bandBucketCol, batchId, bandBuckets)
-    val tryEndpointPrune = pbSet.isDefined
-    val candidates0 = candidatePairs(spark, bandsB, batchId, pbSet)
-    val candidates = if (tryEndpointPrune) candidates0.persist() else candidates0
-    val shSet =
-      if (!tryEndpointPrune) None
-      else pruneSet(candidates,
-        explode(array(idBucketCol(col("doc_a")), idBucketCol(col("doc_b")))),
-        batchId, idBuckets)
-    // EAGER localCheckpoint, not persist (the embed twin's note): the
-    // label-merge actions below would each re-pay the candidate+verify
-    // pipeline's plan ANALYSIS; the checkpoint pins the batch-bounded
-    // edge set as a LogicalRDD. The edge COUNT rides the checkpoint job
-    // itself (round-19, the minLabelComponents Observation pattern): it
-    // drives both the small-merge dispatch and the has-edges gate,
-    // replacing the former limit-collect / limit(1).count() probe jobs
-    val edgeObs = org.apache.spark.sql.Observation()
-    val edges = Dedup.verifyJaccard(candidates,
-        readParts(spark, "shingles", batchId, ShinglesDdl, pruneTo = shSet)
-          .unionByName(sh),
-        threshold)
-      .select("doc_a", "doc_b")
-      .observe(edgeObs, count(lit(1)).as("n_edges"))
-      .localCheckpoint(true)
-    val nEdges = edgeObs.get.get("n_edges") match {
-      case Some(l: java.lang.Long) => l.longValue()
-      case _ => 0L
-    }
-    try {
-      val docsB = b.select(col("doc_id"), col("source"), md5(col("text")).as("fp"))
-      // four independent jobs into distinct dirs — overlapped per guide
-      // §2.6 (per-batch scale: the wall is job fixed cost, not data; the
-      // fp keepers derive from the cached batch, not from any other part,
-      // and nothing below reads them before the manifest's fpView)
-      inParallel(
+  override protected def openBatch(batch: DataFrame, batchId: Long): BatchWork =
+    new BatchWork {
+      private val spark = batch.sparkSession
+      private val b = batch.persist()
+      private val sh = b
+        .select(col("doc_id"), Dedup.wordShingles(col("text")).as("shingles"))
+        .filter(size(col("shingles")) > 0)
+        .select(col("doc_id"),
+          array_sort(transform(col("shingles"), s => xxhash64(s))).as("sh_hashes"))
+        .persist()
+      val bands: DataFrame = sh
+        .select(col("doc_id"),
+          explode(Dedup.lshBands(Dedup.minHashSignature(col("sh_hashes")))).as("bb"))
+        .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
+        .persist()
+      private val docsB =
+        b.select(col("doc_id"), col("source"), md5(col("text")).as("fp"))
+
+      // the fp keepers derive from the cached batch, not from any other
+      // part, and nothing reads them before the manifest's fpView
+      def writes: Seq[() => Unit] = Seq(
         () => docsB.write.mode("overwrite")
           .parquet(partDir("docs", batchId).toString),
         () => sh.write.mode("overwrite")
           .parquet(partDir("shingles", batchId).toString),
-        () => bandsB.write.mode("overwrite")
-          .parquet(partDir("bands", batchId).toString),
         () => docsB.groupBy("fp").agg(min(col("doc_id")).as("fp_keep"))
           .write.mode("overwrite").parquet(partDir("fpkeep", batchId).toString))
 
-      // SMALL-MERGE dispatch (the embed twin's shape — see
-      // [[LabelLog.SmallMergeMaxEdges]]): trickle regime + empty relabel
-      // log ⇒ the merge runs driver-side over the edge set, collected
-      // only when the OBSERVED count is within the ceiling; bulk,
-      // over-ceiling, or nonempty-log batches keep the distributed path
-      val smallEdges =
-        if (nEdges > 0 && nEdges <= LabelLog.SmallMergeMaxEdges &&
-            tryEndpointPrune && !trackedHasData("relabel", batchId))
-          Some(edges.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
-        else None
-      val hasEdges = nEdges > 0
-      if (hasEdges && smallEdges.isDefined) {
-        smallMerge(spark, smallEdges.get, batchId)
-      } else if (hasEdges) {
-        // relabel-log label merge (the embed twin's shape, see [[LabelLog]]):
-        // endpoint lookup pruned to the endpoints' id-hash buckets in the
-        // trickle regime, then write only the batch's own rows
-        val endpoints = edges.select(col("doc_a").as("doc_id"))
-          .unionByName(edges.select(col("doc_b").as("doc_id")))
-          .distinct().persist()
-        val aSet =
-          if (!tryEndpointPrune) None
-          else pruneSet(endpoints, idBucketCol(col("doc_id")), batchId, idBuckets)
-        // join the ENDPOINTS before resolving (the embed twin's order,
-        // round-13 ADVICE): resolving first would run the relabel hop
-        // over every assignment in the pruned buckets — the whole store
-        // when endpoint pruning is off — instead of the batch's endpoints
-        val cur = resolved(spark,
-          readParts(spark, "assign", batchId, AssignDdl, pruneTo = aSet)
-            .join(endpoints, "doc_id"), batchId)
-          .select(col("doc_id").as("id"), col("lbl")).persist()
-        val (newAssign, relabel) = LabelLog.deltas(
-          edges.select(col("doc_a").as("a"), col("doc_b").as("b")),
-          endpoints.select(col("doc_id").as("id")), cur)
-        newAssign.select(col("id").as("doc_id"), col("lbl"))
-          .write.mode("overwrite").parquet(partDir("assign", batchId).toString)
-        // never write an EMPTY relabel part (the trackNonempty contract —
-        // part existence ⇒ rows; emptiness is deterministic under replay).
-        // ONE probe job over the persisted relabel frame — the former
-        // cur.isEmpty pre-gate was a second job of the same size class on
-        // every edge-bearing batch with existing assignments (round-19)
-        val rel = relabel.persist()
-        if (rel.limit(1).count() > 0)
-          rel.write.mode("overwrite").parquet(partDir("relabel", batchId).toString)
-        rel.unpersist()
-        cur.unpersist(); endpoints.unpersist()
+      def verify(candidates: DataFrame, pruneTo: Option[Seq[Long]]): DataFrame =
+        Dedup.verifyJaccard(candidates,
+          readParts(spark, "shingles", batchId, ShinglesDdl, pruneTo = pruneTo)
+            .unionByName(sh), 0.8)
+
+      // arrival-time verdicts for THIS batch's documents. The fp lookup
+      // prunes to the batch's fp buckets in the trickle regime (the join is
+      // inner, so out-of-bucket rows cannot match). The LABEL input needs
+      // no store read: this batch's docs join only against labels keyed by
+      // this batch's doc ids, and a doc cannot be assigned before it is
+      // ingested — so a batch doc's label as of batchId+1 is either in
+      // this batch's own assign part or absent. (A PRE-EXISTING doc can
+      // well be assigned by a later batch's bridging edge; those rows land
+      // in that batch's part and are irrelevant to this join.)
+      override def afterLabels(hasEdges: Boolean, trickle: Boolean): Unit = {
+        val fpSet =
+          if (!trickle) None else pruneIdBuckets(docsB, col("fp"), batchId + 1)
+        val batchLabels =
+          if (hasEdges) spark.read.schema(StructType.fromDDL(AssignDdl))
+            .parquet(partDir("assign", batchId).toString)
+          else emptyDf(spark, AssignDdl)
+        manifestFor(docsB, fpView(spark, batchId + 1, pruneTo = fpSet),
+            batchLabels)
+          .write.mode("overwrite").parquet(partDir("manifest", batchId).toString)
       }
 
-      // fingerprint keepers: written in the parallel group above — the
-      // batch's own (fp, min doc_id) rows; readers group-min over the
-      // parts, so no corpus-wide rewrite and no change-gate join
-
-      // arrival-time verdicts for THIS batch's documents (the append-only
-      // audit log; a later bridging merge can supersede an old doc's
-      // verdict, which is why finalManifest derives from state instead).
-      // The fp lookup prunes to the BATCH's fp buckets in the trickle
-      // regime (the join is inner, so out-of-bucket rows cannot match).
-      // The LABEL input needs no store read at all. The claim relied on
-      // is the restricted one: THIS batch's docs join only against labels
-      // keyed by THIS batch's doc ids, and a doc cannot be assigned
-      // before it is ingested — so a batch doc's label as of batchId+1 is
-      // either in this batch's own assign part or absent. (A PRE-EXISTING
-      // doc can well be assigned by a later batch's bridging edge; those
-      // rows land in that batch's part and are irrelevant to this join.)
-      val fpSet =
-        if (!tryEndpointPrune) None
-        else pruneSet(docsB, fpBucketCol, batchId + 1, idBuckets)
-      val batchLabels =
-        if (hasEdges) spark.read.schema(StructType.fromDDL(AssignDdl))
-          .parquet(partDir("assign", batchId).toString)
-        else emptyDf(spark, AssignDdl)
-      manifestFor(docsB, fpView(spark, batchId + 1, pruneTo = fpSet),
-          batchLabels)
-        .write.mode("overwrite").parquet(partDir("manifest", batchId).toString)
-
-      commitBatch(batchId)
-    } finally {
-      // edges is localCheckpointed — ContextCleaner-managed, no unpersist
-      if (tryEndpointPrune) candidates.unpersist()
-      bandsB.unpersist(); sh.unpersist(); b.unpersist()
+      def release(): Unit = { bands.unpersist(); sh.unpersist(); b.unpersist() }
     }
-  }
-
-  /** Stream-static candidate generation: batch bands against the committed
-    * index plus the batch itself (within-batch pairs), deduped on the
-    * normalized unordered pair. Every pair with a shared band has at least
-    * one endpoint in SOME batch's `bandsB`, and the older endpoint is in
-    * that batch's index view — so the union over batches of these candidate
-    * sets is exactly the batch algorithm's candidate set. The level read
-    * prunes to the batch's band-key buckets (a batch key can only collide
-    * inside its own bucket). */
-  private def candidatePairs(spark: SparkSession, bandsB: DataFrame,
-                             batchId: Long,
-                             pbSet: Option[Seq[Long]]): DataFrame = {
-    val all = readParts(spark, "bands", batchId, BandsDdl,
-      pruneTo = pbSet).unionByName(bandsB)
-    bandsB.as("x").join(all.as("y"), Seq("band", "bh"))
-      .filter(col("x.doc_id") =!= col("y.doc_id"))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("doc_a"),
-        greatest(col("x.doc_id"), col("y.doc_id")).as("doc_b"))
-      .distinct()
-  }
 
   /** The n38 verdict CASE ([[Dedup.manifestVerdictCols]], the shared
     * builder) over (docs ⋈ fp keepers ⋈ cluster labels) —
@@ -410,8 +152,7 @@ final class IncrementalDedupIndex(root: Path, threshold: Double = 0.8,
     * never joins a docs part against missing keeper/label rows. */
   def finalManifest(spark: SparkSession): DataFrame =
     manifestFor(readParts(spark, "docs", Long.MaxValue, DocsDdl, requireMarker = true),
-      fpView(spark, Long.MaxValue, requireMarker = true),
-      labelView(spark, Long.MaxValue, requireMarker = true))
+      fpView(spark, Long.MaxValue, requireMarker = true), finalLabels(spark))
 
   /** The append-only arrival audit log: one verdict row per document,
     * written in the batch that ingested it, judged against the state AS OF
@@ -443,7 +184,7 @@ object IncrementalDedup {
 
   /** n41: ingest the documents table as a 4-batch file stream through the
     * incremental index, COMPACT the part tables (putting the maintenance
-    * pass inside the driver's oracle gate, as in the n52 twin), then emit
+    * pass inside the driver's oracle gate, as n52 does), then emit
     * the manifest implied by the final state. Oracle: the batch n38 SQL
     * ([[Dedup.dedupManifestOracle]]) verbatim — the whole point is that
     * incremental maintenance converges to the batch answer. */

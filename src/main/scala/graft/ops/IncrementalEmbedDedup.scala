@@ -2,360 +2,81 @@ package graft.ops
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.queries.Tables
 
 /**
  * Incremental / streaming embedding near-dup index: the n37 embedding
  * cluster table maintained continuously as vectors arrive — the embedding
- * twin of [[IncrementalDedup]] (n41), completing the round-7/8 advice
- * ("n41 proved the pattern for text; the embedding twin is missing").
- * All state-machine machinery (per-batch parts + markers, versioned
- * snapshots, tiered compaction levels, collision-bucket layouts,
- * retention GC, crash consistency) lives in [[IncrementalStateMachine]];
- * this class keeps only the embedding domain logic.
+ * modality of [[LabelledBandIndex]], which owns the band table, the
+ * candidate probe, the label store and the per-batch skeleton. Media
+ * (n58) rides the same class: any (vec_id, embedding) frame works.
  *
- * Per micro-batch (`foreachBatch`):
- *   1. unit-normalize the batch's vectors and compute their sign-projection
- *      band hashes with a PINNED (bits, bands) geometry
- *      ([[Dedup.signBandCol]]) — the adaptive sizing the batch path uses
- *      ([[Dedup.lshBitsFor]]) is a function of corpus size, which GROWS
- *      under streaming, so the index pins the geometry of the expected
- *      final corpus at construction and every batch hashes identically
- *      (banding is per-vector and deterministic ⇒ candidate recall is
- *      batching-invariant, the n41 argument verbatim);
- *   2. append (vec_id, u) and (vec_id, band, bh) parts to the persisted
- *      index (overwrite + per-batch commit marker ⇒ checkpoint-replay
- *      idempotent — the [[graft.sinks.IdempotentParquetWriter]] contract);
- *   3. generate candidates STREAM-STATIC: batch bands ⋈ (index ∪ batch) on
- *      (band, bh) — every qualifying pair has at least one endpoint in the
- *      current batch, so each unordered pair is discovered exactly once
- *      across the run, in the batch where its younger member arrives;
- *   4. verify candidates with the exact codegen DotProduct at `threshold`
- *      and fold the verified edges into the persisted cluster labels by
- *      contracting them through the current labels and re-clustering only
- *      the contracted graph ([[Dedup.minLabelComponents]]) — bounded by
- *      the batch's edges, never the corpus; labels are component-minimum
- *      vec_ids, so contraction preserves the global fixpoint including
- *      bridging merges across batches.
- *
- * COLLISION-BUCKET PRUNING: both index-sized tables the per-batch work
- * joins against are hive-bucketed in their compacted levels and pruned at
- * OUR listing (the [[IncrementalStateMachine]] layout/pruning contract):
- *
- *  - `bands` on `hash(band, bh) % P` (round 11): the candidate probe
- *    reads only the buckets the batch's band keys can collide with —
- *    per-batch read volume `coverage(K, P) × index` with
- *    `coverage = 1-(1-1/P)^K` for K batch band keys, so a trickle batch
- *    (K ≪ P) reads a constant fraction regardless of index lifetime and
- *    a bulk batch covering more than half the buckets falls back to the
- *    one-listing full scan it needed anyway;
- *  - `units` on `hash(vec_id) % P` (round 12 — the last per-batch growth
- *    term): the exact-verify join reads only the buckets holding the
- *    candidate ENDPOINTS, collected from the (constant-sized, persisted)
- *    candidate frame. This is listing-time pruning of the same
- *    broadcast-candidate double scan — NOT the round-11-rejected endpoint
- *    semi-join, which added shuffles and doubled the gated replay; the
- *    join shape is unchanged, the scan just reads fewer leaf dirs.
- *
- * Cluster labels live in the [[LabelLog]] relabel-log store (round 13):
- * write-once assignments in the id-bucketed `assign` table plus a
- * per-batch `relabel` map, folded together at every full merge — so the
- * label merge, formerly an O(store) snapshot rewrite on every
- * edge-bearing batch, is now ∝ the batch's edges like everything else.
- * At 100 TB the bucketed trees are the banded index any production
- * ANN/near-dup service persists anyway (with P sized so buckets stay
- * file-sized); the per-batch work touches only the batch and its
- * band-collision partners.
- *
- * Correctness claim (tested in `IncrementalEmbedDedupSpec`, oracle-gated
- * as n52): after `processAllAvailable` over the n37 corpus (embeddings ∪
- * planted copies), [[IncrementalEmbedIndex.finalClusters]] equals the
- * batch [[Dedup.embeddingClustersQuery]] answer — same DuckDB oracle
- * verbatim — for ANY batching, because the edge set is batching-invariant
- * (step 3) and min-label contraction commutes with edge arrival order.
+ * Payload per micro-batch: the unit-normalized vectors and their
+ * sign-projection band hashes at a PINNED (bits, bands) geometry
+ * ([[Dedup.signBandCol]]). The adaptive sizing the batch path uses
+ * ([[Dedup.lshBitsFor]]) is a function of corpus size, which GROWS under
+ * streaming, so the index pins the geometry of the expected final corpus
+ * at construction and every batch hashes identically. Candidates verify
+ * with the exact codegen DotProduct at n37's 0.9 against the `units`
+ * table (id-bucketed, pruned to the candidate endpoints' buckets); the
+ * candidate side broadcasts, so the units are SCANNED twice, never
+ * shuffled — two cheap columnar scans beat one scan plus three shuffles
+ * at every scale measured. At 100 TB the bucketed trees are the banded
+ * index any production ANN/near-dup service persists anyway, with the
+ * bucket counts sized so buckets stay file-sized.
  */
-final class IncrementalEmbedIndex(root: Path, threshold: Double = 0.9,
-                                  geometry: (Int, Int),
+final class IncrementalEmbedIndex(root: Path, geometry: (Int, Int),
                                   bandBuckets: Int = 64,
-                                  override protected val maxLevels: Int = 4,
+                                  maxLevels: Int = 4,
                                   bucketMaxDirs: Int = 4096,
                                   idBuckets: Int = 64)
-  extends IncrementalStateMachine(root) {
+  extends LabelledBandIndex(root, "vec_id", bandBuckets, maxLevels,
+    bucketMaxDirs, idBuckets) {
 
-  private val (bits, bands) = geometry
+  private val (bits, nBands) = geometry
   private val UnitsDdl = "vec_id BIGINT, u ARRAY<DOUBLE>"
-  private val BandsDdl = "vec_id BIGINT, band INT, bh BIGINT"
-  private val AssignDdl = "vec_id BIGINT, lbl BIGINT"
 
-  /** The band tree's hive-bucket column — the candidate probe's pruning
-    * key (a batch band key can only collide inside its own bucket). */
-  private def bandBucketCol: Column =
-    pmod(xxhash64(col("band"), col("bh")), lit(bandBuckets.toLong))
+  override protected def payloadTables: Seq[PartTable] =
+    Seq(PartTable("units", UnitsDdl, idBucketed(col("vec_id"))))
 
-  /** The unit table's hive-bucket column over a vec_id column — the
-    * verification read's pruning key (a candidate endpoint's unit row
-    * lives in its id-hash bucket). Sized by the UNIT table's own row
-    * count (`idBuckets` ≈ one bucket per ~2k vectors), not the band
-    * table's: units hold `bands`× fewer rows, and inheriting the band
-    * count measured as ~49-row files at ×100 — all dir/discovery
-    * overhead, no extra pruning power. */
-  private def idBucketCol(c: Column): Column =
-    pmod(xxhash64(c), lit(idBuckets.toLong))
-
-  override protected def partTables: Seq[PartTable] = Seq(
-    PartTable("units", UnitsDdl,
-      Some(Bucketing(idBucketCol(col("vec_id")), idBuckets, bucketMaxDirs))),
-    PartTable("bands", BandsDdl,
-      Some(Bucketing(bandBucketCol, bandBuckets, bucketMaxDirs))),
-    // the relabel-log label store (see [[LabelLog]]): write-once
-    // assignments pruned by id-hash bucket at lookup, plus the per-batch
-    // relabel map — replaces the round-≤12 versioned label snapshot whose
-    // per-batch full rewrite was the last index-proportional term
-    PartTable("assign", AssignDdl,
-      Some(Bucketing(idBucketCol(col("vec_id")), idBuckets, bucketMaxDirs))),
-    PartTable("relabel", LabelLog.RelabelDdl, trackNonempty = true))
-
-  override protected def snapTables: Seq[(String, String)] = Seq.empty
-
-  /** Full merges resolve the assignment level through the whole relabel
-    * log and empty the log level (union-find path compression at the
-    * bin-pack): read-time chains restart from zero, and both transforms
-    * are deterministic functions of committed state. */
-  override protected def fullMergeContent(spark: SparkSession, t: PartTable,
-                                          df: DataFrame): DataFrame =
-    t.name match {
-      case "assign" => resolved(spark, df, Long.MaxValue, requireMarker = true)
-      case "relabel" => emptyDf(spark, LabelLog.RelabelDdl)
-      case _ => df
-    }
-
-  /** The live relabel log strictly below `max` (levels + parts — empty
-    * again right after every full merge). */
-  private def liveRelabels(spark: SparkSession, max: Long,
-                           requireMarker: Boolean = false): DataFrame =
-    readParts(spark, "relabel", max, LabelLog.RelabelDdl,
-      requireMarker = requireMarker)
-
-  /** Assignments resolved through the relabel log, with the driver-side
-    * fast path: when the log cannot hold rows (most batches of most
-    * streams — this corpus's planted clusters are pairs, which never
-    * relabel), skip the resolve and its fixpoint jobs entirely. */
-  private def resolved(spark: SparkSession, assign: DataFrame, max: Long,
-                       requireMarker: Boolean = false): DataFrame =
-    if (!trackedHasData("relabel", max)) assign
-    else LabelLog.resolve(assign,
-      liveRelabels(spark, max, requireMarker = requireMarker))
-
-  /** The bounded driver-side label merge ([[LabelLog.SmallMergeMaxEdges]]
-    * — job-count is the trickle batch's whole cost): endpoint labels from
-    * the bucket-pruned WRITE-ONCE assign table (≤ 2·edges rows; the log is
-    * empty by the dispatch guard, so no resolve), min-root union-find via
-    * [[LabelLog.deltasLocal]], the two delta parts written from literal
-    * frames. Same outputs as the distributed path (`LabelLogProps` pins
-    * the equivalence), so replay may interleave the two freely. */
-  private def smallMerge(spark: SparkSession, rows: Seq[(Long, Long)],
-                         batchId: Long): Unit = {
-    import spark.implicits._
-    val endpoints = rows.flatMap { case (a, b) => Seq(a, b) }.distinct
-    val bSet = endpoints.map(idBucketLocal).distinct
-    val cur = readParts(spark, "assign", batchId, AssignDdl,
-        pruneTo = Some(bSet).filter(_.size <= idBuckets / 2))
-      .filter(col("vec_id").isInCollection(endpoints))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val (newAssign, relabel) = LabelLog.deltasLocal(rows, cur)
-    newAssign.toDF("vec_id", "lbl").coalesce(1)
-      .write.mode("overwrite").parquet(partDir("assign", batchId).toString)
-    // never write an EMPTY relabel part (the trackNonempty contract) —
-    // emptiness is known driver-side here, no probe job
-    if (relabel.nonEmpty)
-      relabel.toDF("old", "new").coalesce(1)
-        .write.mode("overwrite").parquet(partDir("relabel", batchId).toString)
-  }
-
-  /** Driver-side twin of [[idBucketCol]] — `pmod(xxhash64(id), idBuckets)`
-    * via the same XXH64 kernel Spark's expression runs (seed 42);
-    * `LabelLogProps` pins the parity. */
-  private def idBucketLocal(id: Long): Long =
-    java.lang.Math.floorMod(
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 42L),
-      idBuckets.toLong)
-
-  /** Dev-probe accessors ([[graft.tools.ProbeEmbedBatchBreakdown]], the
-    * pruning plan pins in `IncrementalPruningSpec`): the index views a
-    * batch at `max` would join against, optionally pruned to a
-    * collision-bucket set as the probe does. */
-  private[graft] def debugReadBands(spark: SparkSession, max: Long,
-                                    pruneTo: Option[Seq[Long]] = None): DataFrame =
-    readParts(spark, "bands", max, BandsDdl, pruneTo = pruneTo)
   private[graft] def debugReadUnits(spark: SparkSession, max: Long,
                                     pruneTo: Option[Seq[Long]] = None): DataFrame =
-    readParts(spark, "units", max, UnitsDdl, pruneTo = pruneTo)
-  private[graft] def debugBandBucket: Column = bandBucketCol
-  private[graft] def debugIdBucket(c: Column): Column = idBucketCol(c)
-  private[graft] def debugReadLabels(spark: SparkSession, max: Long): DataFrame =
-    resolved(spark, readParts(spark, "assign", max, AssignDdl), max)
+    debugRead(spark, "units", max, pruneTo)
 
-  /** The `foreachBatch` entry point (replay-idempotent, n41 contract):
-    * a committed batch short-circuits; an interrupted one recomputes
-    * deterministically and overwrites its own parts. */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    if (isCommitted(batchId)) return
-    rejectBelowWatermark(batchId)
-    val spark = batch.sparkSession
-    val unitB = batch
-      .select(col("vec_id"), Dedup.unitVector(col("embedding")).as("u"))
-      .persist()
-    val bandsB = unitB
-      .select(col("vec_id"),
-        posexplode(Dedup.signBandCol(col("u"), bits, bands)).as(Seq("band", "bh")))
-      .persist()
-    // collision-bucket pruning of the candidate probe: the batch's band
-    // keys can only collide inside their own hash buckets (the bounded
-    // pruneSet collect only pays once a compacted level exists)
-    val pbSet = pruneSet(bandsB, bandBucketCol, batchId, bandBuckets)
-    // stream-static candidates: the union over batches of (batch ⋈ index ∪
-    // batch) band collisions is exactly the batch algorithm's candidate set
-    val allBands = readParts(spark, "bands", batchId, BandsDdl,
-      pruneTo = pbSet).unionByName(bandsB)
-    val candidates0 = bandsB.as("x").join(allBands.as("y"), Seq("band", "bh"))
-      .filter(col("x.vec_id") =!= col("y.vec_id"))
-      .select(least(col("x.vec_id"), col("y.vec_id")).as("vec_a"),
-        greatest(col("x.vec_id"), col("y.vec_id")).as("vec_b"))
-      .distinct()
-    // endpoint pruning is attempted only in the TRICKLE regime (band
-    // pruning engaged): a bulk batch's endpoint set covers most buckets
-    // anyway, and its collect would force the big candidate join once
-    // extra plus a persist — measured as the whole +30% bulk-batch cost
-    // at ×100. Persisted only then: the endpoint-bucket collect and the
-    // verification join are two consumers of the candidate frame.
-    val tryEndpointPrune = pbSet.isDefined
-    val candidates = if (tryEndpointPrune) candidates0.persist() else candidates0
-    // verification joins the distinct'd candidate frame (small — constant
-    // under the lshBitsFor design) against the unit table twice; the
-    // candidate side broadcasts, so the units are SCANNED, never shuffled.
-    // A round-11 experiment replaced this with an endpoint semi-join
-    // (scan units once, then two joins against the endpoint frame): the
-    // extra distinct + semi-join barriers defeated the limit-short-circuit
-    // and doubled the gated n52 replay — two cheap columnar scans beat one
-    // scan plus three shuffles at every scale we can measure. Round 12
-    // instead prunes the SCAN: the compacted unit levels are id-hash
-    // bucketed, and the read is restricted to the candidate endpoints'
-    // buckets at listing time — same join shape, fewer leaf dirs.
-    val ubSet =
-      if (!tryEndpointPrune) None
-      else pruneSet(candidates,
-        explode(array(idBucketCol(col("vec_a")), idBucketCol(col("vec_b")))),
-        batchId, idBuckets)
-    val allUnits = readParts(spark, "units", batchId, UnitsDdl,
-      pruneTo = ubSet).unionByName(unitB)
-    // EAGER localCheckpoint, not persist: the label merge below issues
-    // several small actions over the edge set (endpoint distinct, lookup
-    // join, the contraction loop, the delta writes), and Catalyst
-    // re-analyzes the FULL logical tree on every action — caching
-    // short-circuits execution, not analysis — so each would re-pay the
-    // whole candidate+verify pipeline's analysis. The checkpoint pins the
-    // (batch-bounded) edge set as a LogicalRDD; its distinct() forces full
-    // computation anyway, so eagerness costs nothing over the first use.
-    // the edge COUNT rides the checkpoint job itself (round-19, the
-    // minLabelComponents Observation pattern): it drives BOTH the
-    // small-merge dispatch and the has-edges gate below, replacing the
-    // former limit-collect / limit(1).count() probe jobs — one scalar,
-    // zero extra jobs per batch
-    val edgeObs = org.apache.spark.sql.Observation()
-    val edges = candidates
-      .join(allUnits.select(col("vec_id").as("vec_a"), col("u").as("ua")), "vec_a")
-      .join(allUnits.select(col("vec_id").as("vec_b"), col("u").as("ub")), "vec_b")
-      .filter(graft.functions.DotProduct(col("ua"), col("ub")) >= threshold)
-      .select("vec_a", "vec_b")
-      .observe(edgeObs, count(lit(1)).as("n_edges"))
-      .localCheckpoint(true)
-    val nEdges = edgeObs.get.get("n_edges") match {
-      case Some(l: java.lang.Long) => l.longValue()
-      case _ => 0L
-    }
-    try {
-      // the two part writes are independent jobs into distinct dirs —
-      // overlapped per guide §2.6 (per-batch scale: the wall is job
-      // fixed cost, not data)
-      inParallel(
-        () => unitB.write.mode("overwrite")
-          .parquet(partDir("units", batchId).toString),
-        () => bandsB.write.mode("overwrite")
-          .parquet(partDir("bands", batchId).toString))
-      // SMALL-MERGE dispatch (see [[LabelLog.SmallMergeMaxEdges]]): in the
-      // trickle regime with an empty relabel log, the whole label merge
-      // runs driver-side over the bounded collected edge set — the collect
-      // reads the already-materialized checkpoint blocks and is bounded by
-      // the OBSERVED count (≤ ceiling rows of two longs). Bulk batches,
-      // over-ceiling edge sets, and nonempty logs keep the distributed
-      // path below unchanged.
-      val smallEdges =
-        if (nEdges > 0 && nEdges <= LabelLog.SmallMergeMaxEdges &&
-            tryEndpointPrune && !trackedHasData("relabel", batchId))
-          Some(edges.collect().toSeq.map(r => (r.getLong(0), r.getLong(1))))
-        else None
-      if (smallEdges.isDefined) {
-        smallMerge(spark, smallEdges.get, batchId)
-      } else if (nEdges > 0) {
-        // relabel-log label merge (see [[LabelLog]]): look up the edge
-        // ENDPOINTS' current labels — the assign read pruned to the
-        // endpoints' id-hash buckets in the trickle regime, resolved
-        // through the live relabel log — then write only the batch's own
-        // assignment + relabel rows. Per-batch label cost ∝ batch, never
-        // ∝ store (the round-≤12 snapshot rewrite was the last such term).
-        val endpoints = edges.select(col("vec_a").as("vec_id"))
-          .unionByName(edges.select(col("vec_b").as("vec_id")))
-          .distinct().persist()
-        val aSet =
-          if (!tryEndpointPrune) None
-          else pruneSet(endpoints, idBucketCol(col("vec_id")), batchId, idBuckets)
-        // persisted: the contraction, the new-endpoint anti-join, and the
-        // relabel restriction are three consumers of the pruned lookup
-        val cur = resolved(spark,
-          readParts(spark, "assign", batchId, AssignDdl, pruneTo = aSet)
-            .join(endpoints, "vec_id"), batchId)
-          .select(col("vec_id").as("id"), col("lbl")).persist()
-        val (newAssign, relabel) = LabelLog.deltas(
-          edges.select(col("vec_a").as("a"), col("vec_b").as("b")),
-          endpoints.select(col("vec_id").as("id")), cur)
-        newAssign.select(col("id").as("vec_id"), col("lbl"))
-          .write.mode("overwrite").parquet(partDir("assign", batchId).toString)
-        // never write an EMPTY relabel part (the trackNonempty contract:
-        // part existence ⇒ rows, which is what buys every later batch the
-        // driver-side skip; emptiness is deterministic, so replay agrees).
-        // ONE probe job over the persisted relabel frame — the former
-        // cur.isEmpty pre-gate was a second job of the same size class
-        // on every edge-bearing batch with existing assignments (the
-        // steady state), bought to skip this probe only on batches with
-        // no prior labels, where both frames are equally tiny (round-19)
-        val rel = relabel.persist()
-        if (rel.limit(1).count() > 0)
-          rel.write.mode("overwrite").parquet(partDir("relabel", batchId).toString)
-        rel.unpersist()
-        cur.unpersist(); endpoints.unpersist()
+  override protected def openBatch(batch: DataFrame, batchId: Long): BatchWork =
+    new BatchWork {
+      private val spark = batch.sparkSession
+      private val unitB = batch
+        .select(col("vec_id"), Dedup.unitVector(col("embedding")).as("u"))
+        .persist()
+      val bands: DataFrame = unitB
+        .select(col("vec_id"),
+          posexplode(Dedup.signBandCol(col("u"), bits, nBands)).as(Seq("band", "bh")))
+        .persist()
+
+      def writes: Seq[() => Unit] = Seq(() => unitB.write.mode("overwrite")
+        .parquet(partDir("units", batchId).toString))
+
+      def verify(candidates: DataFrame, pruneTo: Option[Seq[Long]]): DataFrame = {
+        val allUnits = readParts(spark, "units", batchId, UnitsDdl,
+          pruneTo = pruneTo).unionByName(unitB)
+        candidates
+          .join(allUnits.select(col("vec_id").as("vec_a"), col("u").as("ua")), "vec_a")
+          .join(allUnits.select(col("vec_id").as("vec_b"), col("u").as("ub")), "vec_b")
+          .filter(graft.functions.DotProduct(col("ua"), col("ub")) >= 0.9)
       }
-      commitBatch(batchId)
-    } finally {
-      // edges is localCheckpointed, not persisted — its blocks are
-      // ContextCleaner-managed, nothing to unpersist
-      if (tryEndpointPrune) candidates.unpersist()
-      bandsB.unpersist(); unitB.unpersist()
+
+      def release(): Unit = { bands.unpersist(); unitB.unpersist() }
     }
-  }
 
   /** The cluster table implied by the final state — row-identical to the
-    * batch n37 answer over every ingested vector: assignments resolved
-    * through the relabel log are component minima, exactly the snapshot
-    * the pre-round-13 store materialized. Marker-gated: only fully
+    * batch n37 answer over every ingested vector. Marker-gated: only fully
     * committed batches contribute. */
   def finalClusters(spark: SparkSession): DataFrame =
-    resolved(spark,
-        readParts(spark, "assign", Long.MaxValue, AssignDdl, requireMarker = true),
-        Long.MaxValue, requireMarker = true)
+    finalLabels(spark)
       .select(col("vec_id"), col("lbl").as("cluster_id"),
         (col("vec_id") === col("lbl")).as("is_canonical"))
 }

@@ -63,8 +63,6 @@ final class IncrementalQuota(root: Path, perHost: Int = 10,
     Seq(PartTable("cands", CandsDdl,
       bucket = Some(Bucketing(hostBucketCol, hostBuckets))))
 
-  override protected def snapTables: Seq[(String, String)] = Seq.empty
-
   /** The quota cut: `perHost` best rows per host under the n62 total
     * order (quality desc, doc_id asc — deterministic, doc_id unique).
     * Runs on the bounded-heap [[graft.plans.TopKPerKey]] operator, so at

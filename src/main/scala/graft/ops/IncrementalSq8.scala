@@ -56,8 +56,6 @@ final class IncrementalSq8Index(root: Path,
     Seq(PartTable("codes", CodesDdl,
       bucket = Some(Bucketing(col("cell"), nList))))
 
-  override protected def snapTables: Seq[(String, String)] = Seq.empty
-
   /** The `foreachBatch` entry point (replay-idempotent, n41 contract):
     * one map-side pass — unit-normalize, SQ8-encode, assign + probe
     * cells — one batch-sized part write; per-batch cost ∝ batch, never

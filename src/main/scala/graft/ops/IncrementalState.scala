@@ -7,13 +7,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /**
- * Shared crash-consistent incremental state machine under the two
- * streaming dedup indexes ([[IncrementalDedupIndex]] text n41,
- * [[IncrementalEmbedIndex]] embeddings n52 / media n58) — the round-11
- * verdict's task 7: rounds 10 and 11 applied the same non-trivial commit /
- * compaction / GC edits to both files line-for-line, so the machinery now
- * lives once here and the subclasses keep only their domain logic
- * (shingling/banding/verification/label merge).
+ * Shared crash-consistent incremental state machine under every
+ * incremental index: [[LabelledBandIndex]] (the near-dup indexes, text
+ * n41 and embeddings n52 / media n58, which add the band table and the
+ * label store on top), and the drift, quota, decontamination, ANN and SQ8
+ * indexes. The commit / compaction / GC machinery lives once here; the
+ * subclasses keep only their tables and per-batch domain logic.
  *
  * The reference's flagship path is a streaming source→sink lifecycle
  * (`/root/reference/tests/test_delta_end_to_end.py:72-90`); this class is
@@ -154,8 +153,9 @@ abstract class IncrementalStateMachine(root: Path) {
   /** The append-only tables subject to [[compact]]. */
   protected def partTables: Seq[PartTable]
 
-  /** The versioned snapshot tables (name → DDL) subject to version GC. */
-  protected def snapTables: Seq[(String, String)]
+  /** The versioned snapshot tables (name → DDL) subject to version GC;
+    * none unless a subclass keeps snapshots. */
+  protected def snapTables: Seq[(String, String)] = Seq.empty
 
   /** Level-chain bound: a maintenance pass appends a DELTA level unless
     * the chain would exceed this, then bin-packs with a FULL merge.

@@ -4,10 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
- * The relabel-log label store shared by the incremental dedup indexes
- * (text [[IncrementalDedupIndex]], embeddings/media
- * [[IncrementalEmbedIndex]]) — round-13's structural fix for the last
- * per-batch term that grew with index size.
+ * The relabel-log label store of [[LabelledBandIndex]], the incremental
+ * near-dup index under text (n41) and embeddings/media (n52/n58) —
+ * round-13's structural fix for the last per-batch term that grew with
+ * index size.
  *
  * Through round 12 cluster labels lived in a versioned snapshot that every
  * edge-bearing batch read and REWROTE in full: O(label store) per batch,
@@ -53,10 +53,11 @@ private[ops] object LabelLog {
 
   private[ops] val RelabelDdl = "old BIGINT, new BIGINT"
 
-  /** Edge-count ceiling for the SMALL-MERGE driver fast path (round 14).
+  /** Edge-count ceiling for the two driver-side merge paths.
     *
-    * A trickle batch's label merge costs ~6 s at EVERY index scale — flat
-    * but high, and ~all of it is job count: `ProbeBatchJobs` attributed a
+    * The first (round 14) is [[LabelledBandIndex]]'s per-batch label
+    * merge. A trickle batch's label merge cost ~6 s at EVERY index scale
+    * — flat but high, and ~all of it is job count: `ProbeBatchJobs` attributed a
     * 4-row edge-bearing batch to 55 jobs (3.4 s inside, 2.2 s of driver
     * analysis between). Most of those jobs are the distributed contraction
     * (`Dedup.minLabelComponents`: checkpoint + count per round) and the
@@ -73,11 +74,11 @@ private[ops] object LabelLog {
     * band pruning) or an over-ceiling edge set keeps the distributed
     * path, as does a nonempty relabel log (the fast path would otherwise
     * have to resolve through it driver-side; post-fold batches — the
-    * steady state — have an empty log).
+    * steady state — have an empty log). Every edge-bearing batch logs its
+    * choice at INFO (`labelMerge path=driver|distributed batch=B edges=N`).
     *
-    * The same ceiling bounds the second driver path,
-    * [[Dedup.minLabelComponents]]: a pair graph of at most this many
-    * edges is clustered by [[deltasLocal]] on the driver instead of by
+    * The second is [[Dedup.minLabelComponents]]: a pair graph of at most
+    * this many edges is clustered by [[deltasLocal]] on the driver instead of by
     * distributed label rounds. That path serves every batch clustering
     * query (n27, n36, n37, n38, n53, n56, n57, n74) and the bulk batches
     * that [[deltas]] still sends through the distributed merge. */

@@ -11,12 +11,13 @@ import graft.ops.{Dedup, IncrementalEmbedDedup, IncrementalEmbedIndex}
 /**
  * Dev tool: Spark-job-level attribution of one EDGE-BEARING trickle
  * batch's fixed cost (round 14). The gated replays' phase attribution
- * says ~90% of their wall clock is the per-micro-batch floor; the
- * breakdown probe says an edge-bearing trickle batch costs ~6-7 s at
- * EVERY index scale — flat, but high. This probe names the jobs inside
- * that floor: it builds the ×1 index exactly as ProbeEmbedBatchBreakdown
- * does, registers a listener, runs ONE planted-dup trickle batch, and
- * prints every job's duration with its call site.
+ * says ~90% of their wall clock is the per-micro-batch floor, and an
+ * edge-bearing trickle batch costs ~6-7 s at EVERY index scale — flat,
+ * but high (BASELINE.md, round 14). This probe names the jobs inside
+ * that floor: it builds a ×1 embedding index (four hash-split batches,
+ * the planted copies, one compaction), registers a listener, runs ONE
+ * planted-dup trickle batch, and prints every job's duration with its
+ * call site.
  *
  * Usage: runMain graft.tools.ProbeBatchJobs [sfDir]
  */

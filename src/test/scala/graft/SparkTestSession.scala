@@ -2,26 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test JVM (suites use `lazy val`). */
+/** One shared local session for the whole test JVM (suites use `lazy val`),
+  * built by the same [[graft.tools.Sessions.local]] the benchmarks use, so
+  * test and bench sessions cannot drift apart. Its app name `graft-test`
+  * comes from `-Dspark.app.name` in build.sbt's `Test / javaOptions`. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse-").toString)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // the status store retains a physicalPlanDescription STRING per
-    // execution even with the UI off; the incremental-index replay suites
-    // run hundreds of micro-batch actions whose composed plans print large
-    // — cap both dimensions or the shared JVM's heap fills with dead plan
-    // strings (round-11: OOM in StringConcat.append during explainString)
-    .config("spark.sql.ui.retainedExecutions", "20")
-    .config("spark.sql.maxPlanStringLength", "4000000")
-    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.tools.Sessions.local(4)
 
   val sf0001 = "/root/testdata/sf0.001"
 

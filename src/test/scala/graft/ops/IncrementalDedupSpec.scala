@@ -3,6 +3,7 @@ package graft.ops
 import java.nio.file.Files
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkTestSession => T}
@@ -140,5 +141,50 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // replay commits the batch; the readers flip to the two-batch state
     index.processBatch(b1, 1L)
     assert(index.finalManifest(spark).collect().toSet == batchManifest)
+  }
+
+  test("text index: a pruned trickle batch converges to the batch manifest") {
+    // the text analogue of the embed parity test (round-11 advice: the
+    // text index's pruned paths were exercised only by dev tools): a
+    // trickle of two documents after compaction — band keys <= buckets/2,
+    // so the probe pruning AND the shingle-verification pruning both
+    // engage — must still produce the batch n38 manifest verbatim
+    val base = graft.SparkTestSession.tmpDir("n41-trickle")
+    val docs = graft.queries.Tables.documents(spark, T.sf0001).persist()
+    val n = docs.count()
+    val buckets = IncrementalEmbedDedup.bucketsFor(n, 16)
+    val index = new IncrementalDedupIndex(base.resolve("state"),
+      bandBuckets = buckets)
+    // two docs that are near-dup partners of indexed documents (the
+    // corpus plants _dupN suffixed near-copies at high doc_ids)
+    val trickle = docs.orderBy(col("doc_id").desc).limit(2)
+    val tIds = trickle.collect().map(_.getLong(0)).toSeq
+    assert(tIds.length == 2)
+    // 2 docs x 16 bands = 32 band keys -> at most 32 distinct buckets,
+    // within the <= buckets/2 engagement guard
+    assert(2 * 16 <= buckets / 2,
+      s"fixture no longer engages pruning at $buckets buckets")
+
+    val rest = docs.filter(!col("doc_id").isin(tIds: _*))
+    (0 to 1).foreach(j => index.processBatch(
+      rest.filter(pmod(xxhash64(col("doc_id")), lit(2)) === j), j.toLong))
+    assert(index.compact(spark).contains(1L))
+    index.processBatch(docs.filter(col("doc_id").isin(tIds: _*)), 2L)
+
+    // plan shape of the pruned shingle read (the verification scan)
+    val someBuckets = Seq(0L, 2L)
+    val p = index.debugReadShingles(spark, Long.MaxValue,
+      pruneTo = Some(someBuckets)).queryExecution.executedPlan.toString
+    val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(p)
+    assert(partFilters.isDefined && partFilters.get.group(1).contains("pb"),
+      s"shingle scan not pruned on pb:\n$p")
+
+    val got = index.finalManifest(spark).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
+    val expected = Dedup.dedupManifestQuery(spark, T.sf0001).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
+    assert(got == expected,
+      "pruned text trickle diverged from the batch n38 manifest")
+    docs.unpersist()
   }
 }

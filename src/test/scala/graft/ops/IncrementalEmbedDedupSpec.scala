@@ -86,4 +86,52 @@ class IncrementalEmbedDedupSpec extends AnyFunSuite {
     assert(index.finalClusters(spark).collect().toSet == afterB1)
     assert(afterB1 == batchClusters)
   }
+
+  test("embed trickle batch after compaction: both pruned paths engage and converge") {
+    // the continuous-ingest regime the pruning exists for: a tiny batch
+    // whose band keys cover a fraction of the buckets (band probe pruned)
+    // and whose candidate endpoints cover few id buckets (verification
+    // pruned) — and whose planted partners live in the COMPACTED index,
+    // so a lost candidate or a lost unit row would break cluster equality
+    val base = graft.SparkTestSession.tmpDir("n52-trickle")
+    val full = IncrementalEmbedDedup.corpus(spark, T.sf0001).persist()
+    val n = full.count()
+    val geom = IncrementalEmbedDedup.geometryFor(n)
+    // production-shaped bucket count (buckets >> bands, the regime a grown
+    // index reaches under bucketsFor's n-proportional sizing): a single
+    // vector's ~48 band keys must cover <= half the buckets to engage the
+    // trickle pruning, which the sf0.001 corpus's clamped-minimum 64 never
+    // allows
+    val buckets = 512
+    val index = new IncrementalEmbedIndex(base.resolve("state"),
+      geometry = geom, bandBuckets = buckets)
+    // the trickle: one planted copy whose original sits in the index
+    // (a single vector's band keys stay within the <= buckets/2 guard)
+    val trickleIds = Seq(1000001L)
+    val trickle = full.filter(col("vec_id").isin(trickleIds: _*))
+    assert(trickle.count() == 1, "fixture drift: planted copy missing")
+    // fixture guard: the trickle's band-key bucket set must be small
+    // enough to engage the probe pruning (<= buckets/2)
+    val trickleKeys = trickle
+      .select(Dedup.unitVector(col("embedding")).as("u"))
+      .select(posexplode(Dedup.signBandCol(col("u"), geom._1, geom._2))
+        .as(Seq("band", "bh")))
+      .select(index.debugBandBucket.as("pb")).distinct().count()
+    assert(trickleKeys <= buckets / 2,
+      s"fixture no longer engages pruning: $trickleKeys buckets of $buckets")
+
+    val rest = full.filter(!col("vec_id").isin(trickleIds: _*))
+    (0 to 1).foreach(j => index.processBatch(
+      rest.filter(pmod(xxhash64(col("vec_id")), lit(2)) === j), j.toLong))
+    assert(index.compact(spark).contains(1L))
+    index.processBatch(trickle, 2L)
+
+    val got = index.finalClusters(spark).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    val expected = Dedup.embeddingClustersQuery(spark, T.sf0001)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    assert(got == expected,
+      "pruned trickle probe/verification lost a cross-batch edge")
+    full.unpersist()
+  }
 }

@@ -143,99 +143,6 @@ class IncrementalPruningSpec extends AnyFunSuite with graft.SoakTagged {
     full.unpersist()
   }
 
-  test("embed trickle batch after compaction: both pruned paths engage and converge") {
-    // the continuous-ingest regime the pruning exists for: a tiny batch
-    // whose band keys cover a fraction of the buckets (band probe pruned)
-    // and whose candidate endpoints cover few id buckets (verification
-    // pruned) — and whose planted partners live in the COMPACTED index,
-    // so a lost candidate or a lost unit row would break cluster equality
-    val base = graft.SparkTestSession.tmpDir("n52-trickle")
-    val full = IncrementalEmbedDedup.corpus(spark, T.sf0001).persist()
-    val n = full.count()
-    val geom = IncrementalEmbedDedup.geometryFor(n)
-    // production-shaped bucket count (buckets >> bands, the regime a grown
-    // index reaches under bucketsFor's n-proportional sizing): a single
-    // vector's ~48 band keys must cover <= half the buckets to engage the
-    // trickle pruning, which the sf0.001 corpus's clamped-minimum 64 never
-    // allows
-    val buckets = 512
-    val index = new IncrementalEmbedIndex(base.resolve("state"),
-      geometry = geom, bandBuckets = buckets)
-    // the trickle: one planted copy whose original sits in the index
-    // (a single vector's band keys stay within the <= buckets/2 guard)
-    val trickleIds = Seq(1000001L)
-    val trickle = full.filter(col("vec_id").isin(trickleIds: _*))
-    assert(trickle.count() == 1, "fixture drift: planted copy missing")
-    // fixture guard: the trickle's band-key bucket set must be small
-    // enough to engage the probe pruning (<= buckets/2)
-    val trickleKeys = trickle
-      .select(Dedup.unitVector(col("embedding")).as("u"))
-      .select(posexplode(Dedup.signBandCol(col("u"), geom._1, geom._2))
-        .as(Seq("band", "bh")))
-      .select(index.debugBandBucket.as("pb")).distinct().count()
-    assert(trickleKeys <= buckets / 2,
-      s"fixture no longer engages pruning: $trickleKeys buckets of $buckets")
-
-    val rest = full.filter(!col("vec_id").isin(trickleIds: _*))
-    (0 to 1).foreach(j => index.processBatch(
-      rest.filter(pmod(xxhash64(col("vec_id")), lit(2)) === j), j.toLong))
-    assert(index.compact(spark).contains(1L))
-    index.processBatch(trickle, 2L)
-
-    val got = index.finalClusters(spark).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val expected = Dedup.embeddingClustersQuery(spark, T.sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(got == expected,
-      "pruned trickle probe/verification lost a cross-batch edge")
-    full.unpersist()
-  }
-
-  test("text index: a pruned trickle batch converges to the batch manifest") {
-    // the text analogue of the embed parity test (round-11 advice: the
-    // text index's pruned paths were exercised only by dev tools): a
-    // trickle of two documents after compaction — band keys <= buckets/2,
-    // so the probe pruning AND the shingle-verification pruning both
-    // engage — must still produce the batch n38 manifest verbatim
-    val base = graft.SparkTestSession.tmpDir("n41-trickle")
-    val docs = graft.queries.Tables.documents(spark, T.sf0001).persist()
-    val n = docs.count()
-    val buckets = IncrementalEmbedDedup.bucketsFor(n, 16)
-    val index = new IncrementalDedupIndex(base.resolve("state"),
-      bandBuckets = buckets)
-    // two docs that are near-dup partners of indexed documents (the
-    // corpus plants _dupN suffixed near-copies at high doc_ids)
-    val trickle = docs.orderBy(col("doc_id").desc).limit(2)
-    val tIds = trickle.collect().map(_.getLong(0)).toSeq
-    assert(tIds.length == 2)
-    // 2 docs x 16 bands = 32 band keys -> at most 32 distinct buckets,
-    // within the <= buckets/2 engagement guard
-    assert(2 * 16 <= buckets / 2,
-      s"fixture no longer engages pruning at $buckets buckets")
-
-    val rest = docs.filter(!col("doc_id").isin(tIds: _*))
-    (0 to 1).foreach(j => index.processBatch(
-      rest.filter(pmod(xxhash64(col("doc_id")), lit(2)) === j), j.toLong))
-    assert(index.compact(spark).contains(1L))
-    index.processBatch(docs.filter(col("doc_id").isin(tIds: _*)), 2L)
-
-    // plan shape of the pruned shingle read (the verification scan)
-    val someBuckets = Seq(0L, 2L)
-    val p = index.debugReadShingles(spark, Long.MaxValue,
-      pruneTo = Some(someBuckets)).queryExecution.executedPlan.toString
-    val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(p)
-    assert(partFilters.isDefined && partFilters.get.group(1).contains("pb"),
-      s"shingle scan not pruned on pb:\n$p")
-
-    val got = index.finalManifest(spark).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
-    val expected = Dedup.dedupManifestQuery(spark, T.sf0001).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
-    assert(got == expected,
-      "pruned text trickle diverged from the batch n38 manifest")
-    docs.unpersist()
-  }
-
   test("past the per-dir clamp the layout goes two-level and still prunes at listing time") {
     // round-12 verdict #4: bucket counts above the filesystem's per-dir
     // fan-out bound land as pb=<bucket/subN>/sub=<bucket%subN> — no dir
