@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /**
  * Benchmark main: runs every registered query on `SPARK_GRAFT_SF_DIR` and
  * prints one JSON line. Each query executes through the `noop` DataSource-v2
@@ -42,7 +45,12 @@ object Bench {
         s"(threshold ${hostCores / 4}) - another workload is active; " +
         "timings will be inflated. Re-run on a quiet machine.")
 
+    // Janino compiles and compile seconds per query, summed over its
+    // measured runs (JVM-global counters, read around each run)
+    val codegen = scala.collection.mutable.LinkedHashMap[String, (Long, Long)]()
     def exec(name: String): Double = {
+      val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+        CodeGenerator.compileTime)
       val t0 = System.nanoTime()
       val elapsed =
         try {
@@ -57,6 +65,9 @@ object Bench {
       // later queries aren't measured under someone else's memory pressure
       // (outside the timed window — teardown isn't the query's cost)
       spark.catalog.clearCache()
+      val (c, ns) = codegen.getOrElse(name, (0L, 0L))
+      codegen(name) = (c + CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+        ns + CodeGenerator.compileTime - ns0)
       elapsed
     }
 
@@ -73,6 +84,7 @@ object Bench {
     // not first-call JIT/codegen compilation
     Seq("d01_pricing_summary", "d02_revenue_nation", "d18_word_topk",
       "n05_dedup_embedding").foreach(exec)
+    codegen.clear()
 
     // min of two runs per query: single-run local timings carry multi-second
     // GC/compaction noise that would swamp real plan differences
@@ -171,6 +183,12 @@ object Bench {
     }.mkString("{", ",", "}")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // nested per query: a bare number after a query name would read as a
+    // timing to the tail regex of tools/check_bench.py; written BEFORE
+    // `queries` so a kept line tail still ends with the same fields
+    val codegenJson = codegen.map { case (n, (c, ns)) =>
+      "\"" + n + "\":{\"compiles\":" + c + ",\"compile_s\":" + ns / 1e9 + "}"
+    }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     // two buckets (round-7 verdict #4): streaming replays pay a fixed local
     // per-micro-batch floor that dwarfs plan cost and would otherwise hide
@@ -206,7 +224,7 @@ object Bench {
     // total repeated at the END of the line: the driver stores only the
     // tail of long stdout lines, and with 126 per-query entries the leading
     // "value" field falls outside the kept window
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stream_throughput":$tput,"retried":$retriedJson,"batch_sec":$batchTotal,"replay_sec":$replayTotal,"n_batch":${batchRs.size},"n_replay":${replayRs.size},"loadavg_start":$loadStart,"loadavg_end":${loadAvg()},"total_sec":$total,"n_queries":${results.size},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","codegen":$codegenJson,"queries":$qs,"stream_throughput":$tput,"retried":$retriedJson,"batch_sec":$batchTotal,"replay_sec":$replayTotal,"n_batch":${batchRs.size},"n_replay":${replayRs.size},"loadavg_start":$loadStart,"loadavg_end":${loadAvg()},"total_sec":$total,"n_queries":${results.size},"sf":"$sfDir"}"""
     println(line)
     // ... and the WHOLE line persisted to files: at 167+ queries the
     // stdout line outgrew the driver's tail capture (round-14 verdict #1 —

@@ -64,7 +64,11 @@ object App {
    * Curated local session defaults (reference `app/app.py:23-50`): UTC session
    * time zone, parquet mergeSchema off, filter pushdown on, no parquet summary
    * metadata. Scaled for this environment: `local[32]`, 32 shuffle partitions
-   * (match cores, not the 200 default), AQE on. The Delta/Kafka extension jars
+   * (match cores, not the 200 default), AQE on, and the generated-class
+   * cache at [[graft.tools.Sessions.CodegenCacheMaxEntries]] instead of
+   * Spark's 100 (a re-planning session otherwise recompiles its classes on
+   * every run; the cache is JVM-global and sized at the first codegen —
+   * see the `Sessions` config notes). The Delta/Kafka extension jars
    * are not present offline, so the corresponding `spark.sql.extensions` /
    * catalog config is intentionally not set; Delta and Kafka stay config-level
    * formats (see sources/sinks scaladoc).
@@ -88,6 +92,8 @@ object App {
       // Spark only reads as long when this legacy flag is on
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        graft.tools.Sessions.CodegenCacheMaxEntries.toString)
       .getOrCreate()
   }
 }

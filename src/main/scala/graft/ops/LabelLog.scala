@@ -61,21 +61,23 @@ private[ops] object LabelLog {
     * 4-row edge-bearing batch to 55 jobs (3.4 s inside, 2.2 s of driver
     * analysis between). Most of those jobs are the distributed contraction
     * (`Dedup.minLabelComponents`: checkpoint + count per round) and the
-    * delta probes, all over frames of a few ROWS. So, in the trickle
-    * regime (endpoint pruning engaged) with an empty relabel log, the
-    * merge instead collects the verified edges (bounded here), reads the
-    * endpoints' labels from the bucket-pruned assign table (≤ 2·edges
-    * rows — assignments are write-once), runs the same min-root
-    * union-find in Scala ([[deltasLocal]]), and writes the two delta
-    * parts. This is the broadcast-threshold pattern: Spark itself
-    * collects bounded frames when that beats distributing, and the repo's
-    * pruneSet collect (≤ buckets/2 longs) established the contract shape.
-    * 4096 edges = ≤ 64 KiB of id pairs on the driver; a bulk batch (no
-    * band pruning) or an over-ceiling edge set keeps the distributed
-    * path, as does a nonempty relabel log (the fast path would otherwise
-    * have to resolve through it driver-side; post-fold batches — the
-    * steady state — have an empty log). Every edge-bearing batch logs its
-    * choice at INFO (`labelMerge path=driver|distributed batch=B edges=N`).
+    * delta probes, all over frames of a few ROWS. So, with an empty
+    * relabel log, the merge instead collects the verified edges (bounded
+    * here), reads the endpoints' labels from the assign table (pruned to
+    * their id buckets when those are at most half; ≤ 2·edges rows kept —
+    * assignments are write-once), runs the same min-root union-find in
+    * Scala ([[deltasLocal]]), and writes the two delta parts. This is the
+    * broadcast-threshold pattern: Spark itself collects bounded frames
+    * when that beats distributing, and the repo's pruneSet collect
+    * (≤ buckets/2 longs) established the contract shape. 4096 edges =
+    * ≤ 64 KiB of id pairs on the driver. The path does not require band
+    * pruning (the trickle regime): the edge count bounds its work, and
+    * streams that compact only at their end (n41, n52, n58) never prune
+    * a band read. An over-ceiling edge set keeps the distributed path,
+    * as does a nonempty relabel log (the fast path would otherwise have
+    * to resolve through it driver-side; post-fold batches — the steady
+    * state — have an empty log). Every edge-bearing batch logs its choice
+    * at INFO (`labelMerge path=driver|distributed batch=B edges=N`).
     *
     * The second is [[Dedup.minLabelComponents]]: a pair graph of at most
     * this many edges is clustered by [[deltasLocal]] on the driver instead of by

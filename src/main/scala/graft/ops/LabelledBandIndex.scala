@@ -246,18 +246,23 @@ abstract class LabelledBandIndex(root: Path, idCol: String, bandBuckets: Int,
       .distinct()
   }
 
+  /** The driver-merge edge ceiling; specs lower it to 0 to force the
+    * distributed merge. */
+  private[ops] var smallMergeMaxEdges: Int = LabelLog.SmallMergeMaxEdges
+
   /** Fold a batch's nonempty edge set into the label store, writing only
     * the batch's own `assign` and `relabel` rows. SMALL-MERGE dispatch
-    * (see [[LabelLog.SmallMergeMaxEdges]]): in the trickle regime with an
-    * empty relabel log and at most the ceiling of edges, the merge runs
-    * on the driver over the collected edges (the collect reads the
-    * materialized checkpoint blocks); bulk batches, over-ceiling edge sets
-    * and nonempty logs take the distributed path. Both write the same
-    * parts (`LabelLogProps` pins the equivalence), so replay may take
-    * either. */
+    * (see [[LabelLog.SmallMergeMaxEdges]]): with an empty relabel log and
+    * at most the ceiling of edges, the merge runs on the driver over the
+    * collected edges (the collect reads the materialized checkpoint
+    * blocks), in the trickle and the bulk regime alike — the edge count,
+    * not band pruning, bounds its work; over-ceiling edge sets and
+    * nonempty logs take the distributed path. Both write the same parts
+    * (`LabelLogProps` and `LabelLogSpec` pin the equivalence), so replay
+    * may take either. */
   private def mergeLabels(spark: SparkSession, edges: DataFrame, nEdges: Long,
                           trickle: Boolean, batchId: Long): Unit = {
-    val driver = nEdges <= LabelLog.SmallMergeMaxEdges && trickle &&
+    val driver = nEdges <= smallMergeMaxEdges &&
       !trackedHasData("relabel", batchId)
     log.info(s"labelMerge path=${if (driver) "driver" else "distributed"} " +
       s"batch=$batchId edges=$nEdges")
@@ -297,9 +302,10 @@ abstract class LabelledBandIndex(root: Path, idCol: String, bandBuckets: Int,
     }
   }
 
-  /** The driver-side label merge: endpoint labels from the bucket-pruned
-    * WRITE-ONCE assign table (≤ 2·edges rows; the log is empty by the
-    * dispatch guard, so no resolve), min-root union-find via
+  /** The driver-side label merge: endpoint labels from the WRITE-ONCE
+    * assign table, read pruned to the endpoints' id buckets when they
+    * cover at most half of them (≤ 2·edges rows kept; the log is empty by
+    * the dispatch guard, so no resolve), min-root union-find via
     * [[LabelLog.deltasLocal]], the two delta parts written from literal
     * frames. */
   private def smallMerge(spark: SparkSession, rows: Seq[(Long, Long)],

@@ -19,9 +19,21 @@ import org.apache.spark.sql.SparkSession
   *    a long-lived session without the cap;
   *  - `parallelPartitionDiscovery.threshold`: the incremental indexes list
   *    thousands of explicit bucket leaf dirs — keep discovery on the
-  *    driver, a Spark job per pruned read costs more than the listing.
+  *    driver, a Spark job per pruned read costs more than the listing;
+  *  - `codegen.cache.maxEntries` = [[CodegenCacheMaxEntries]], not Spark's
+  *    100: one pass of n38, n56, n78 and d01 needs 149 generated classes
+  *    (48 + 45 + 43 + 13), so a session that re-runs them round-robin
+  *    evicted every class before its next use and re-ran Janino (and C2)
+  *    on all 149 each pass. The cache is JVM-global and Spark sizes it at
+  *    the first codegen, so the value must be on `SparkSession.builder` before
+  *    `getOrCreate` — a conf set on a live session, or a session built
+  *    after another one compiled code, does not resize it.
   */
 object Sessions {
+  /** Generated-class cache size of every graft session (see the config
+    * notes above); [[graft.core.App.generateSparkSession]] reads it too. */
+  val CodegenCacheMaxEntries = 1024
+
   /** Fail fast on a malformed env override (round-18 ADVICE: a raw string
     * forwarded to Spark conf only fails at the first shuffle with an opaque
     * error rather than at session construction, naming the variable).
@@ -71,6 +83,7 @@ object Sessions {
       .config("spark.sql.ui.retainedExecutions", "20")
       .config("spark.sql.maxPlanStringLength", "4000000")
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark

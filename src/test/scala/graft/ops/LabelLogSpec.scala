@@ -36,9 +36,12 @@ class LabelLogSpec extends AnyFunSuite {
     * trackNonempty contract: empty maps are never written, so part
     * existence means rows). */
   private def relabelPart(base: java.nio.file.Path, j: Long): Option[Set[(Long, Long)]] =
-    if (!Files.exists(base.resolve(s"state/relabel/b$j"))) None
-    else Some(spark.read.schema("old BIGINT, new BIGINT")
-      .parquet(base.resolve(s"state/relabel/b$j").toString)
+    part(base, "relabel", j)
+
+  private def part(base: java.nio.file.Path, table: String,
+                   j: Long): Option[Set[(Long, Long)]] =
+    if (!Files.exists(base.resolve(s"state/$table/b$j"))) None
+    else Some(spark.read.parquet(base.resolve(s"state/$table/b$j").toString)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
 
   test("bridging merges log relabels, chains resolve multi-hop, the fold compresses") {
@@ -105,5 +108,24 @@ class LabelLogSpec extends AnyFunSuite {
     assert(Files.exists(base.resolve("state/relabel/c4/_SUCCESS")))
     assert(index.debugRead(spark, "relabel", Long.MaxValue).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet == Set((10L, 5L), (5L, 3L)))
+  }
+
+  test("driver and distributed label merges write the same parts") {
+    // the first two batches of the bridging stream above through the
+    // default dispatch (both merge on the driver: the log is empty until
+    // batch 1 writes its relabel row) and through an index whose driver
+    // ceiling is 0 (every merge distributed)
+    val batches = Seq(Seq(20L -> u, 30L -> u, 40L -> far), Seq(10L -> u))
+    val bases = Seq(T.tmpDir("labellog-driver"), T.tmpDir("labellog-dist"))
+    val indexes = bases.map(b => new IncrementalEmbedIndex(b.resolve("state"),
+      geometry = (8, 4)))
+    indexes(1).smallMergeMaxEdges = 0
+    for ((rows, j) <- batches.zipWithIndex; index <- indexes)
+      index.processBatch(frame(rows: _*), j.toLong)
+    for (j <- batches.indices.map(_.toLong); table <- Seq("assign", "relabel"))
+      assert(part(bases(0), table, j) == part(bases(1), table, j),
+        s"$table part b$j differs between the merge paths")
+    assert(relabelPart(bases(0), 1).contains(Set((20L, 10L))))
+    assert(clusters(indexes(0)) == clusters(indexes(1)))
   }
 }
