@@ -191,7 +191,7 @@ object ProductQuantization {
    * training sample always yields the same codebook (the repo's
    * no-RNG-anywhere discipline applied to training). Driver-side by
    * design: at 100 TB codebooks train on a BOUNDED sample (here the
-   * caller's collected rows; see `Similarity.trainedPqCodebook` for the
+   * caller's collected rows; see `AnnLadder.trainedPqCodebook` for the
    * hash-sampled cap) while encode/rank stay distributed — the trained
    * flat array rides the plan exactly like the md5 codebook.
    *
@@ -298,7 +298,7 @@ object ProductQuantization {
  * advice): the earlier zero-pad silently disagreed with the DuckDB
  * oracle's join semantics (absent (m, si) rows contribute nothing there,
  * cb² here), so a malformed vector now surfaces as a null code row —
- * which the ranking paths drop ([[graft.ops.Similarity.ivfPqTopK]]
+ * which the ranking paths drop ([[graft.ops.AnnLadder.scan]]
  * filters null distances) — instead of a divergent hash.
  * Whole-stage-codegen'd: one fused quantize/encode loop nest.
  */

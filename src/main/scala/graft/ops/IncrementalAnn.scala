@@ -2,7 +2,7 @@ package graft.ops
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ProductQuantization
@@ -12,8 +12,8 @@ import graft.queries.Tables
  * A TRAINED quantizer for the incremental index (round-17: the quality
  * ladder's top rung through the streaming path): the Lloyd-trained
  * residual codebook plus the per-cell integer centroids it was trained
- * against ([[Similarity.trainedResidualCodebook]] /
- * [[Similarity.cellCentroids]] — deterministic, no RNG). Both are
+ * against ([[AnnLadder.trainedResidualCodebook]] /
+ * [[AnnLadder.cellCentroids]] — deterministic, no RNG). Both are
  * BOUNDED plan constants (nSub·nCode·subDim longs + nlist·64 longs);
  * at 100 TB training is a sample job that runs once before the index
  * opens, and the quantizer must then NEVER drift across restarts —
@@ -53,7 +53,7 @@ final case class TrainedQuant(codebook: Array[Long], nCode: Int,
  * are deterministic per row and batching-independent, so after
  * `processAllAvailable` the compacted codes table equals the batch n61
  * index EXACTLY for any batching — the query result hash-matches the
- * batch [[Similarity.ivfPqOracle]] verbatim (the n41/n48/n52 convergence
+ * batch n61 spec's oracle verbatim (the n41/n48/n52 convergence
  * pattern, here with equality per row rather than per fixpoint).
  * Replay idempotence, tiering, crash windows, and pruned-read parity are
  * the base machine's, exercised over this subclass in
@@ -64,8 +64,7 @@ final class IncrementalIvfPqIndex(root: Path,
                                   override protected val maxLevels: Int = 4)
   extends IncrementalStateMachine(root) {
 
-  private val (nList, nProbeDefault) = Similarity.debugIvfGeometry
-  private val (subDim, nSub, nCodeMd5) = Similarity.debugPqGeometry
+  private val geo = IvfGeometry.Default
   /** `probed` (round-18, the n71 treatment): each member's nProbe best
     * cells precomputed AT INGEST (an 8-element comparator sort per row,
     * map-side) — the batched kNN join over the index reads them back
@@ -107,12 +106,12 @@ final class IncrementalIvfPqIndex(root: Path,
             s"$quantPath line 1 is not an integer nCode: '${lines(0)}'")
         }
       val codebook = lines(1).split(",").map(_.toLong)
-      require(codebook.length == nSub * nCode * subDim,
+      require(codebook.length == Pq.NSub * nCode * Pq.SubDim,
         s"$quantPath codebook length ${codebook.length} != " +
-          s"nSub*nCode*subDim = ${nSub * nCode * subDim}")
+          s"nSub*nCode*subDim = ${Pq.NSub * nCode * Pq.SubDim}")
       val centroids = lines.drop(2).map(_.split(",").map(_.toLong))
-      require(centroids.length == nList,
-        s"$quantPath has ${centroids.length} centroid rows, index nlist is $nList")
+      require(centroids.length == geo.nlist,
+        s"$quantPath has ${centroids.length} centroid rows, index nlist is ${geo.nlist}")
       require(centroids.forall(_.length == 64),
         s"$quantPath centroid rows must have 64 components")
       Some(TrainedQuant(codebook, nCode, centroids))
@@ -157,28 +156,9 @@ final class IncrementalIvfPqIndex(root: Path,
     case (None, None) => None
   }
 
-  /** The integer-quantized vector column (the shared floor(x·2²⁰) rule). */
-  private def qIntCol(v: Column): Column =
-    transform(v, x =>
-      floor(x * lit(graft.functions.QuantizedDots.Scale)).cast("long"))
-
-  /** Residual-encode column for the trained quantizer: (q − centroid(cell))
-    * rides into the codegen encode kernel as an exact double (the n72
-    * arithmetic — integer below 2²¹ over a power-of-two divisor). */
-  private def residualCodesCol(tq: TrainedQuant, q: Column,
-                               cell: Column): Column = {
-    val ctrLit = array(tq.centroids.map(row =>
-      array(row.map(lit(_)): _*)): _*)
-    ProductQuantization.encode(
-      zip_with(q, element_at(ctrLit, (cell + 1).cast("int")),
-        (a, b) => (a - b).cast("double") /
-          lit(graft.functions.QuantizedDots.Scale)),
-      tq.codebook, subDim, nSub, tq.nCode)
-  }
-
   override protected def partTables: Seq[PartTable] =
     Seq(PartTable("codes", CodesDdl,
-      bucket = Some(Bucketing(col("cell"), nList))))
+      bucket = Some(Bucketing(col("cell"), geo.nlist))))
 
   /** The `foreachBatch` entry point (replay-idempotent, n41 contract):
     * one map-side encode pass, one batch-sized part write — per-batch
@@ -186,22 +166,23 @@ final class IncrementalIvfPqIndex(root: Path,
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     if (isCommitted(batchId)) return
     rejectBelowWatermark(batchId)
-    val v = transform(col("embedding"), x => x.cast("double"))
-    val probedCol = Similarity.probedCellsCol(v, nProbeDefault)
+    val v = AnnLadder.doubles(col("embedding"))
+    val probedCol = geo.probedCellsCol(v)
     val coded = quant match {
       case None =>
         batch.select(col("vec_id"), col("label"),
-          Similarity.ivfCellCol(v).cast("long").as("cell"),
+          geo.cellCol(v).cast("long").as("cell"),
           probedCol.as("probed"),
-          Similarity.pqEncodeCol(v).as("codes"))
+          Pq.encode(v, Pq.md5Codebook, Pq.NCode).as("codes"))
       case Some(tq) =>
         // trained mode: codes on the residual against the row's OWN cell
         // centroid (the n73/n76 encode) — still one map-side pass
         batch.select(col("vec_id"), col("label"),
-            Similarity.ivfCellCol(v).cast("long").as("cell"),
-            probedCol.as("probed"), qIntCol(v).as("q"))
+            geo.cellCol(v).cast("long").as("cell"),
+            probedCol.as("probed"), AnnLadder.qIntCol(v).as("q"))
           .select(col("vec_id"), col("label"), col("cell"), col("probed"),
-            residualCodesCol(tq, col("q"), col("cell")).as("codes"))
+            AnnLadder.residualCodesCol(col("q"), col("cell"), tq.centroids,
+              tq.codebook, tq.nCode).as("codes"))
     }
     coded.write.mode("overwrite").parquet(partDir("codes", batchId).toString)
     commitBatch(batchId)
@@ -213,7 +194,7 @@ final class IncrementalIvfPqIndex(root: Path,
 
   /**
    * ANN top-k against the committed index: probe set and LUT are integer
-   * driver arithmetic from the query vector ([[Similarity.probeCellsLocal]]
+   * driver arithmetic from the query vector ([[IvfGeometry.probeLocal]]
    * — no Spark job), the codes read is listing-pruned to the probed
    * cells' leaf dirs, and ranking is the codegen ADC lookup sum. The
    * `cell isin` filter re-applies the probe on pre-compaction parts
@@ -223,25 +204,13 @@ final class IncrementalIvfPqIndex(root: Path,
            nProbe: Int = 0, excludeVecId: Long = -1L): DataFrame = {
     val q = graft.functions.ProductQuantization.quantize(
       queryVec.map(_.toDouble))
-    val cells = Similarity.probeCellsLocal(q,
-      if (nProbe > 0) nProbe else nProbeDefault)
+    val cells = geo.probeLocal(q, if (nProbe > 0) nProbe else geo.nProbe)
     // md5 mode: one LUT for all cells; trained mode: the n72/n73 per-cell
-    // dispatch — one LUT per probed cell from the query's residual IN
-    // that cell, a codegen when-chain of ADC arms over plan literals
-    val adist: Column = quant match {
-      case None => Similarity.pqAdcCol(col("codes"), q)
+    // residual LUT dispatch
+    val adist = quant match {
+      case None => AnnLadder.adcCol(q, cells, Pq.md5Codebook, Pq.NCode, None)
       case Some(tq) =>
-        val luts: Map[Long, Array[Long]] = cells.map { c =>
-          c -> ProductQuantization.distanceTable(
-            Similarity.residualLocal(q, tq.centroids(c.toInt)),
-            tq.codebook, subDim, nSub, tq.nCode)
-        }.toMap
-        cells.tail.foldLeft(
-          when(col("cell") === cells.head, ProductQuantization
-            .adc(col("codes"), luts(cells.head), nSub, tq.nCode))) { (acc, c) =>
-          acc.when(col("cell") === c, ProductQuantization
-            .adc(col("codes"), luts(c), nSub, tq.nCode))
-        }
+        AnnLadder.adcCol(q, cells, tq.codebook, tq.nCode, Some(tq.centroids))
     }
     readParts(spark, "codes", Long.MaxValue, CodesDdl,
         requireMarker = true, pruneTo = Some(cells))
@@ -261,7 +230,7 @@ final class IncrementalIvfPqIndex(root: Path,
    * R — a listing-pruned read of the probed cells' CODES, never the
    * vectors — and only those R full vectors are fetched from the SOURCE
    * table by a broadcast of the shortlist ids, then re-scored with the
-   * exact integer quantized dot ([[Similarity.exactRerank]]). This is
+   * exact integer quantized dot ([[AnnLadder.exactRerank]]). This is
    * the 100 TB separation of concerns the index exists for: the state
    * machine persists 32-byte codes; the 512-byte vectors stay in the
    * (already-stored-anyway) source table and are touched R times per
@@ -273,7 +242,7 @@ final class IncrementalIvfPqIndex(root: Path,
                  r: Int = 100, nProbe: Int = 0): DataFrame = {
     val shortlist = topK(spark, queryVec, k = r, nProbe = nProbe,
       excludeVecId = queryVecId)
-    Similarity.exactRerank(vectors, shortlist, queryVecId, k)
+    AnnLadder.exactRerank(vectors, shortlist, queryVecId, k)
   }
 
   /**
@@ -286,7 +255,7 @@ final class IncrementalIvfPqIndex(root: Path,
    * conflict-refusal contract as every other read), the per-query R-cut
    * shortlist fetches full vectors from the SOURCE table by shuffle-hash
    * id joins, and the exact integer re-rank cuts to k
-   * ([[Similarity.rerankJoinTail]] — the shared n78/n80 tail). At 100 TB
+   * ([[AnnLadder.rerankJoinTail]] — the shared n78/n80 tail). At 100 TB
    * this is the nightly-dedup shape: the join-against-the-index touches
    * state CODES (32 B/row) corpus-wide and 512-byte vectors only n·R
    * times. Requires the quantizer (SDC needs one codebook for all rows);
@@ -299,8 +268,7 @@ final class IncrementalIvfPqIndex(root: Path,
     val tq = quant.getOrElse(throw new IllegalStateException(
       s"knnJoinRerank needs a trained quantizer stored at $root — " +
         "SDC ranks stored codes against stored codes, one codebook for all"))
-    val pt = ProductQuantization.pairDistanceTable(
-      tq.codebook, subDim, nSub, tq.nCode)
+    val pt = Pq.pairTable(tq.codebook, tq.nCode)
     val st = readParts(spark, "codes", Long.MaxValue, CodesDdl,
       requireMarker = true)
     val probes = st
@@ -309,16 +277,10 @@ final class IncrementalIvfPqIndex(root: Path,
       .select(col("vec_id"), col("u"), col("pc").cast("long").as("cell"))
     val index = st.select(col("vec_id").as("nbr"), col("codes").as("un"),
       col("cell"))
-    val cands = probes.join(index, "cell")
-      .filter(col("vec_id") =!= col("nbr"))
-      .withColumn("sdist", ProductQuantization.sdc(col("u"), col("un"),
-        pt, nSub, tq.nCode))
-    val shortlist = graft.plans.TopKPerKey(
-      cands.select(col("vec_id"), col("nbr"), col("sdist")),
-      Seq(col("vec_id")), Seq(col("sdist").asc_nulls_last, col("nbr")), r)
-      .filter(col("sdist").isNotNull)
-      .select("vec_id", "nbr")
-    Similarity.rerankJoinTail(vectors, shortlist, k)
+    val shortlist = Similarity.verifyCut(probes, index, r,
+      (a, b) => ProductQuantization.sdc(a, b, pt, Pq.NSub, tq.nCode),
+      "sdist", ascending = true)
+    AnnLadder.rerankJoinTail(vectors, shortlist.select("vec_id", "nbr"), k)
   }
 
   /** Dev/spec accessor: the full committed codes table. */
@@ -333,7 +295,7 @@ object IncrementalAnn {
     * cell-bucketed levels — inside the driver's oracle gate, as
     * n41/n48/n52 run compact()), then answer the n61 query (vec 0's
     * top-5 by ADC distance over its probed cells) from the index.
-    * Oracle: the batch [[Similarity.ivfPqOracle]] verbatim. */
+    * Oracle: the batch n61 spec's, verbatim. */
   def streamingIvfPqQuery(spark: SparkSession, dir: String,
                           chunks: Int = 4): DataFrame = {
     val base = Tables.scratchDir("n63")
@@ -351,7 +313,7 @@ object IncrementalAnn {
   /** n77: the n63 ingest (same chunked stream, same maintenance) answered
     * with the two-stage IVFADC-R query — codes shortlist from the pruned
     * index read, exact re-rank against the source vectors. Oracle: the
-    * batch n75 [[Similarity.ivfPqRerankOracle]] verbatim. */
+    * batch n75 spec's, verbatim. */
   def streamingIvfPqRerankQuery(spark: SparkSession, dir: String,
                                 chunks: Int = 4): DataFrame = {
     val base = Tables.scratchDir("n77")
@@ -371,9 +333,9 @@ object IncrementalAnn {
     * quality ladder's top rung (n76: trained residual codes + IVFADC-R
     * exact re-rank, recall@5 0.71 vs the 0.72 probe ceiling at sf0.1)
     * served from streaming state. The quantizer is trained on the batch
-    * table BEFORE the index opens ([[Similarity.cellCentroids]] +
-    * [[Similarity.trainedResidualCodebook]] — deterministic, bounded
-    * sample) and persisted beside the state, so a restart reopens with
+    * table BEFORE the index opens (the n76 spec's centroids and codebook —
+    * deterministic, bounded sample) and persisted beside the state, so a
+    * restart reopens with
     * the same codebook (`IncrementalAnnSpec` pins reopen equality and
     * the conflicting-quantizer rejection). Training is SQL-inexpressible
     * ⇒ rows-only like n66/n73/n76; encode determinism per row makes the
@@ -383,11 +345,11 @@ object IncrementalAnn {
                                        chunks: Int = 4): DataFrame = {
     val base = Tables.scratchDir("n79")
     val emb = Tables.embeddings(spark, dir)
-    val ctr = Similarity.cellCentroids(emb)
-    val cb = Similarity.trainedResidualCodebook(emb, ctr)
-    val (subDim, nSub, _) = Similarity.debugPqGeometry
+    val spec = OpsQueries.n76
+    val ctr = AnnLadder.cellCentroids(emb, spec.geometry)
+    val cb = AnnLadder.codebook(spec.codebook, emb, Some(ctr), spec.geometry)
     val index = new IncrementalIvfPqIndex(base.resolve("state"),
-      trained = Some(TrainedQuant(cb, cb.length / (nSub * subDim), ctr)))
+      trained = Some(TrainedQuant(cb, spec.codebook.nCode, ctr)))
     StreamHarness.stageChunks(emb,
       pmod(col("vec_id"), lit(chunks)), base.resolve("input"), chunks)
     StreamHarness.run(spark, base.resolve("input"), base.resolve("ckpt"),
@@ -413,12 +375,10 @@ object IncrementalAnn {
                                        chunks: Int = 4): DataFrame = {
     val base = Tables.scratchDir("n83")
     val emb = Tables.embeddings(spark, dir)
-    val (subDim, nSub, _) = Similarity.debugPqGeometry
-    val (nList, _) = Similarity.debugIvfGeometry
-    val cb = Similarity.trainedPqCodebook(emb, Similarity.debugPqNCodeHi)
-    val zeroCtr = Array.fill(nList)(Array.fill(64)(0L))
-    val index = new IncrementalIvfPqIndex(base.resolve("state"),
-      trained = Some(TrainedQuant(cb, cb.length / (nSub * subDim), zeroCtr)))
+    val cbk = OpsQueries.n80.codebook
+    val zeroCtr = Array.fill(IvfGeometry.Default.nlist)(Array.fill(64)(0L))
+    val index = new IncrementalIvfPqIndex(base.resolve("state"), trained =
+      Some(TrainedQuant(AnnLadder.codebook(cbk, emb), cbk.nCode, zeroCtr)))
     StreamHarness.stageChunks(emb,
       pmod(col("vec_id"), lit(chunks)), base.resolve("input"), chunks)
     StreamHarness.run(spark, base.resolve("input"), base.resolve("ckpt"),

@@ -28,7 +28,7 @@ import graft.queries.Tables
  * write-once by construction — codes, cells, AND the probe set are
  * per-row functions of the vector, so there is nothing to merge and all
  * maintenance is the base tiered compaction + GC. The probe set is the
- * new term: [[Similarity.probedCellsCol]] precomputes each member's
+ * new term: [[IvfGeometry.probedCellsCol]] precomputes each member's
  * nProbe best cells AT INGEST (an 8-element comparator sort per row,
  * map-side), so the full kNN join over the index skips the probe-side
  * TopKPerKey shuffle the batch n68 pays — the stream does the cut once
@@ -39,8 +39,8 @@ import graft.queries.Tables
  * `processAllAvailable` the committed codes table equals the batch n68
  * index EXACTLY for any batching, and [[knnJoin]] — the
  * [[Similarity.knnJoinVerify]] tail over the stored probe sets — equals
- * the batch n68 join: the query hash-matches
- * [[Similarity.sq8KnnJoinOracle]] verbatim (the n41/n52/n63/n67
+ * the batch n68 join: the query hash-matches the n68 spec's oracle
+ * verbatim (the n41/n52/n63/n67
  * pattern). Convergence, replay idempotence, probe-cut parity, and the
  * state-size ratio are pinned in `IncrementalSq8Spec`.
  */
@@ -48,13 +48,13 @@ final class IncrementalSq8Index(root: Path,
                                 override protected val maxLevels: Int = 4)
   extends IncrementalStateMachine(root) {
 
-  private val (nList, nProbeDefault) = Similarity.debugIvfGeometry
+  private val geo = IvfGeometry.Default
   private val CodesDdl =
     "vec_id BIGINT, cell INT, probed ARRAY<INT>, code BINARY"
 
   override protected def partTables: Seq[PartTable] =
     Seq(PartTable("codes", CodesDdl,
-      bucket = Some(Bucketing(col("cell"), nList))))
+      bucket = Some(Bucketing(col("cell"), geo.nlist))))
 
   /** The `foreachBatch` entry point (replay-idempotent, n41 contract):
     * one map-side pass — unit-normalize, SQ8-encode, assign + probe
@@ -63,8 +63,7 @@ final class IncrementalSq8Index(root: Path,
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     if (isCommitted(batchId)) return
     rejectBelowWatermark(batchId)
-    val probed = Similarity.probedCellsCol(
-      transform(col("embedding"), x => x.cast("double")), nProbeDefault)
+    val probed = geo.probedCellsCol(AnnLadder.doubles(col("embedding")))
     batch
       .select(col("vec_id"), probed.as("probed"),
         graft.functions.ScalarQuantization
@@ -108,7 +107,7 @@ object IncrementalSq8 {
   /** n71: ingest the embeddings table as a `chunks`-batch file stream
     * through the incremental SQ8 index, run the maintenance pass (parts
     * → cell-bucketed levels), then answer the full n68 kNN join from the
-    * index. Oracle: the batch [[Similarity.sq8KnnJoinOracle]] verbatim. */
+    * index. Oracle: the batch n68 spec's, verbatim. */
   def streamingSq8KnnQuery(spark: SparkSession, dir: String,
                            chunks: Int = 4): DataFrame = {
     val base = Tables.scratchDir("n71")

@@ -13,7 +13,39 @@ import graft.queries.BatchQueries.QueryFn
  */
 object OpsQueries {
 
-  val queries: Map[String, QueryFn] = Map(
+  /** The IVF/PQ ladder rungs the streaming indexes converge to or train
+    * from (the full ladder table is on [[AnnSpec]]). */
+  private val n61 = ScanSpec()
+  private val n68: JoinSpec = JoinSpec.Sq8
+  private val n75 = ScanSpec(rerank = true)
+  val n76 = ScanSpec(Codebook.Trained(Pq.NCodeHi), residual = true,
+    rerank = true)
+  val n80 = JoinSpec.PqCodes(Codebook.Trained(Pq.NCodeHi), Ranking.Sdc,
+    rerank = true)
+
+  /** Every rung as a spec literal: its query runs the shape's planner, its
+    * oracle (md5 codebooks only) is built from the same literal. */
+  private val ladder: Seq[(String, AnnSpec)] = Seq(
+    "n60_knn_join_det" -> JoinSpec.Exact,
+    "n61_ivf_pq" -> n61,
+    "n65_pq_knn_join" -> JoinSpec.PqCodes(Codebook.Md5, Ranking.Sdc, rerank = false),
+    "n66_ivf_pq_trained" -> ScanSpec(Codebook.Trained(Pq.NCode)),
+    "n68_sq8_knn_join" -> n68,
+    "n72_ivf_pq_residual" -> ScanSpec(residual = true),
+    "n73_ivf_pq_residual_trained" ->
+      ScanSpec(Codebook.Trained(Pq.NCodeHi), residual = true),
+    "n75_ivf_pq_rerank" -> n75,
+    "n76_ivf_pq_rerank_trained" -> n76,
+    "n78_pq_knn_rerank" -> JoinSpec.PqCodes(Codebook.Md5, Ranking.Sdc, rerank = true),
+    "n80_pq_knn_rerank_trained" -> n80,
+    "n81_pq_knn_rerank_adc" -> JoinSpec.PqCodes(Codebook.Md5, Ranking.Adc, rerank = true),
+    "n82_ivf_pq_geo64" -> ScanSpec(geometry = IvfGeometry.Fine),
+    "n84_pq_knn_rerank_adc_trained" ->
+      JoinSpec.PqCodes(Codebook.Trained(Pq.NCodeHi), Ranking.Adc, rerank = true),
+  )
+
+  val queries: Map[String, QueryFn] =
+    ladder.map { case (n, s) => n -> s.query }.toMap ++ Map(
     "n01_dedup_fingerprint" -> (Dedup.exactDedupQuery _),
     "n02_dedup_minhash_lsh" -> (Dedup.minHashDedupQuery _),
     "n03_ngram_jaccard" -> (Dedup.ngramJaccardQuery _),
@@ -76,29 +108,16 @@ object OpsQueries {
     "n58_streaming_media_clusters" ->
       ((s, d) => Multimodal.streamingMediaClustersQuery(s, d)),
     "n59_media_pipeline" -> (Multimodal.mediaPipelineQuery _),
-    // the deterministic-quantizer twin of n42: same knnJoinCore plan,
-    // md5-derived cells instead of trained KMeans ⇒ hash-checked
-    "n60_knn_join_det" -> (Similarity.knnJoinDetQuery _),
-    // IVF-PQ: the memory-bounded ANN scan (codes + integer ADC ranking)
-    "n61_ivf_pq" -> (Similarity.ivfPqQuery _),
     // per-domain quota on the TopKPerKey whole-operator
     "n62_domain_cap" -> ((s, d) => Pipeline.domainCapQuery(s, d)),
     // the incremental twin of n61: foreachBatch encode, cell-bucketed levels
     "n63_streaming_ivf_pq" -> ((s, d) => IncrementalAnn.streamingIvfPqQuery(s, d)),
     // split-aware decontamination: n02 near-dup pairs straddling the n14 split
     "n64_split_leakage" -> (Pipeline.splitLeakageQuery _),
-    // the batched many-query PQ ranking: n60's join scanning codes via SDC
-    "n65_pq_knn_join" -> (Similarity.pqKnnJoinQuery _),
-    // trained-codebook IVF-PQ (Lloyd's, SQL-inexpressible): rows-only,
-    // recall-gated in PqRecallSpec — the n42/n60 pairing beside n61
-    "n66_ivf_pq_trained" -> (Similarity.ivfPqTrainedQuery _),
     // the incremental twin of n62: batch-local TopKPerKey cuts appended,
     // host-bucketed levels, selection associativity ⇒ batch answer
     "n67_streaming_domain_cap" ->
       ((s, d) => IncrementalQuota.streamingDomainCapQuery(s, d)),
-    // int8 scalar-quantized kNN join: the n60 plan scanning 64-byte SQ8
-    // codes — ×8 smaller exchange at near-exact ranking fidelity
-    "n68_sq8_knn_join" -> (Similarity.sq8KnnJoinQuery _),
     // the ingest-gate twin of n44: per-batch Bloom screen + exact verify
     // against the static benchmark grams; verdicts are per-row functions
     "n69_streaming_decontam" ->
@@ -110,66 +129,28 @@ object OpsQueries {
     // ingested per batch, cell-bucketed levels — the ×8-narrower state
     "n71_streaming_sq8_knn" ->
       ((s, d) => IncrementalSq8.streamingSq8KnnQuery(s, d)),
-    // residual IVF-PQ (Jégou §IV-A): codes on q − centroid(cell), LUT
-    // rebuilt per probed cell — md5 codebook ⇒ hash-checked plumbing
-    "n72_ivf_pq_residual" -> (Similarity.ivfPqResidualQuery _),
-    // the residual plan on a Lloyd-trained codebook at the canonical
-    // k*=256 resolution: recall 0.31 vs n66's 0.12 / n61's 0.04
-    // (ProbePqRecall sf0.1; gated in PqRecallSpec) — rows-only like n66
-    "n73_ivf_pq_residual_trained" -> (Similarity.ivfPqResidualTrainedQuery _),
     // the n70 card + the near-dup rate from the n38 manifest verdicts,
     // reduced to S per-source counts before a broadcast join
     "n74_card_neardup" -> (Corpus.datasetCardNearDupQuery _),
-    // IVFADC-R (Jégou §V): ADC shortlist at R=100, exact integer re-rank
-    // of only those R vectors — integer end to end ⇒ hash-checked
-    "n75_ivf_pq_rerank" -> (Similarity.ivfPqRerankQuery _),
-    // the re-rank over the trained-residual-256 shortlist: recall@5 0.71
-    // vs the 0.72 IVF probe ceiling at sf0.1 (gated in PqRecallSpec)
-    "n76_ivf_pq_rerank_trained" -> (Similarity.ivfPqResidualTrainedRerankQuery _),
     // IVFADC-R on streaming state: codes shortlist from the pruned n63
     // index read, vectors fetched from the source table by id
     "n77_streaming_ivf_pq_rerank" ->
       ((s, d) => IncrementalAnn.streamingIvfPqRerankQuery(s, d)),
-    // batched IVFADC-R: the n65 SDC join cut at R per probe row, then
-    // only shortlist ids fetch vectors (shuffle-hash) for the exact
-    // integer re-rank — join-scale recall escapes the code ceiling
-    "n78_pq_knn_rerank" -> (Similarity.pqKnnJoinRerankQuery _),
     // the n77 ingest on the TRAINED residual-256 quantizer (persisted
     // beside the state for restart stability): the n76 quality rung
     // served from streaming state — rows-only, equality-to-n76 gated
     "n79_streaming_ivf_pq_trained" ->
       ((s, d) => IncrementalAnn.streamingIvfPqTrainedRerankQuery(s, d)),
-    // the n78 plan on a trained k*=256 codebook: join-scale recall@3
-    // 0.653 vs n78's 0.227 (90% of the probe ceiling) at identical plan
-    // shape and fetch bill — rows-only like n66 (Lloyd training)
-    "n80_pq_knn_rerank_trained" -> (Similarity.pqKnnJoinRerankTrainedQuery _),
-    // the ASYMMETRIC-shortlist two-stage join (round-18): stage 1 ranks
-    // candidates by the direct query-vector-vs-codes ADC kernel
-    // (PqAdcQExpr) instead of SDC — the query side stays exact, closing
-    // the shortlist-capture gap the round-17 verdict isolated; integer
-    // end to end ⇒ hash-checked like n78
-    "n81_pq_knn_rerank_adc" -> (Similarity.pqKnnJoinRerankAdcQuery _),
-    // the n61 scan at the FINER IVF geometry (nlist=64/nProbe=8): the
-    // rung the 100 TB design wants (nlist ~ sqrt(N); +10.6 recall points
-    // at equal scan in the round-17 sweep) pushed through the oracle
-    // gate — the md5 direction namespace extends, so the default
-    // geometry's hash-matched plans are untouched
-    "n82_ivf_pq_geo64" -> (Similarity.ivfPqGeo64Query _),
     // the n80 trained two-stage join served from streaming state: stored
     // probe sets + stored codes (raw trained codebook as a zero-centroid
     // quantizer), SDC shortlist, exact re-rank fetch from the source
     // table — rows-only (trained codebook), equality-to-n80 gated
     "n83_streaming_pq_knn_rerank_trained" ->
       ((s, d) => IncrementalAnn.streamingPqKnnRerankTrainedQuery(s, d)),
-    // the asymmetric join on the raw trained k*=256 codebook: join-scale
-    // recall 0.7177 = 98.9% of the probe ceiling (vs n80's 0.6533) at
-    // identical fetch bill — rows-only (trained codebook), driver-twin
-    // equality + planted-floor gated
-    "n84_pq_knn_rerank_adc_trained" ->
-      (Similarity.pqKnnJoinRerankAdcTrainedQuery _),
   )
 
-  val oracles: Map[String, String] = Map(
+  val oracles: Map[String, String] =
+    ladder.flatMap { case (n, s) => s.oracle.map(n -> _) }.toMap ++ Map(
     "n01_dedup_fingerprint" -> Dedup.exactDedupOracle,
     "n02_dedup_minhash_lsh" -> Dedup.jaccardPairsOracle,
     "n03_ngram_jaccard" -> Dedup.jaccardPairsOracle,
@@ -238,25 +219,14 @@ object OpsQueries {
     // incremental maintenance converges to the batch n56 closure: same SQL
     "n58_streaming_media_clusters" -> Multimodal.streamingMediaClustersOracle,
     "n59_media_pipeline" -> Multimodal.mediaPipelineOracle,
-    // the md5-quantizer twin closes the ANN family's oracle gap: only n42
-    // (trained KMeans) stays rows-only, and n60 hash-checks its plan shape
-    "n60_knn_join_det" -> Similarity.knnJoinDetOracle,
-    // integer codes + integer LUT: PQ ranking hash-matches cross-engine
-    "n61_ivf_pq" -> Similarity.ivfPqOracle,
     "n62_domain_cap" -> Pipeline.domainCapOracle,
     // encode/cell are per-row deterministic ⇒ the incremental index equals
     // the batch n61 index exactly for any batching: the batch oracle verbatim
-    "n63_streaming_ivf_pq" -> Similarity.ivfPqOracle,
+    "n63_streaming_ivf_pq" -> n61.oracle.get,
     "n64_split_leakage" -> Pipeline.splitLeakageOracle,
-    // codes, pair table, and SDC sums are all integer: hash-matched
-    "n65_pq_knn_join" -> Similarity.pqKnnJoinOracle,
-    // n66 omitted: Lloyd-trained codebook is SQL-inexpressible (rows-only;
-    // recall and planted-floor bounded by PqRecallSpec)
     // bounded selection is associative ⇒ the incremental quota equals the
     // batch n62 answer exactly for any batching: the batch oracle verbatim
     "n67_streaming_domain_cap" -> Pipeline.domainCapOracle,
-    // clamped int8 codes + integer dots: hash-matched like n60/n65
-    "n68_sq8_knn_join" -> Similarity.sq8KnnJoinOracle,
     // per-row verdicts ⇒ the gate equals the batch n44 answer for any
     // batching: the batch oracle verbatim
     "n69_streaming_decontam" -> Corpus.bloomDecontamOracle,
@@ -264,32 +234,13 @@ object OpsQueries {
     "n70_dataset_card" -> Corpus.datasetCardOracle,
     // codes/cells/probe sets are per-row functions ⇒ the incremental
     // index equals the batch n68 join for any batching: oracle verbatim
-    "n71_streaming_sq8_knn" -> Similarity.sq8KnnJoinOracle,
-    // centroids/residuals/codes/per-cell LUTs all integer ⇒ hash-matched
-    "n72_ivf_pq_residual" -> Similarity.ivfPqResidualOracle,
-    // n73 omitted: Lloyd-trained codebook is SQL-inexpressible (rows-only;
-    // recall floor + planted-duplicate theorem gated in PqRecallSpec)
+    "n71_streaming_sq8_knn" -> n68.oracle.get,
     // the n70 and n38 oracles composed as CTEs: hash-matched
     "n74_card_neardup" -> Corpus.datasetCardNearDupOracle,
-    // shortlist boundary and re-rank scores both integer: hash-matched
-    "n75_ivf_pq_rerank" -> Similarity.ivfPqRerankOracle,
     // index state == batch encode per row (the n63 theorem) ⇒ the
     // streaming two-stage query equals batch n75: oracle verbatim
-    "n77_streaming_ivf_pq_rerank" -> Similarity.ivfPqRerankOracle,
-    // n76 omitted: trained codebook (rows-only; recall ceiling gated in
-    // PqRecallSpec — the re-rank mechanics are n75's, hash-matched there)
-    // shortlist boundary, fetch membership, and re-rank order all integer
-    "n78_pq_knn_rerank" -> Similarity.pqKnnJoinRerankOracle,
-    // n79 omitted: trained quantizer (rows-only, the n66/n73/n76 class);
-    // bounded by IncrementalAnnSpec's equality-to-batch-n76 assertion
-    // n80 omitted: trained codebook (rows-only); bounded by
-    // PqJoinRerankSpec's driver-twin equality + planted-floor gates —
-    // the plan shape is the hash-matched n78's verbatim
-    // the asymmetric per-pair distance is the query's own d2 table looked
-    // up at the candidate's codes — integer end to end: hash-matched
-    "n81_pq_knn_rerank_adc" -> Similarity.pqKnnJoinRerankAdcOracle,
-    // the n61 oracle CTE chain with range(64)/LIMIT 8 — the geometry
-    // parameterizes straight through the md5 digit arithmetic
-    "n82_ivf_pq_geo64" -> Similarity.ivfPqGeo64Oracle,
+    "n77_streaming_ivf_pq_rerank" -> n75.oracle.get,
+    // n79/n83 omitted: trained quantizers (rows-only), bounded by
+    // IncrementalAnnSpec's equality to the batch n76/n80 plans
   )
 }

@@ -5,6 +5,8 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
+import graft.ops.{Codebook, JoinSpec, Ranking}
+
 /**
  * Dev probe: the n65 claim at scale — the batched PQ kNN join (SDC over
  * codes) vs the float-verify twin n60 on the SAME corpus, measured on
@@ -25,6 +27,8 @@ object ProbePqJoinScale {
     val ns = if (numArgs.nonEmpty) numArgs.map(_.toLong)
              else Seq(2000L, 6000L, 20000L)
     val spark = Sessions.local(32, logLevel = "ERROR")
+    val n65 = JoinSpec.PqCodes(Codebook.Md5, Ranking.Sdc, rerank = false)
+    val n78 = JoinSpec.PqCodes(Codebook.Md5, Ranking.Sdc, rerank = true)
     val base = graft.queries.Tables.scratchDir("pqjoinscale")
 
     val shuffleBytes = new AtomicLong(0L)
@@ -79,12 +83,12 @@ object ProbePqJoinScale {
       val emb = spark.read.parquet(s"$dir/emb.parquet")
 
       val (floatS, floatMiB) = measure {
-        graft.ops.Similarity.knnJoinDet(emb)
+        JoinSpec.Exact.plan(emb)
           .write.format("noop").mode("overwrite").save()
       }
       skewReport(s"n60 n=$n")
       val (sdcS, sdcMiB) = measure {
-        graft.ops.Similarity.pqKnnJoin(emb)
+        n65.plan(emb)
           .write.format("noop").mode("overwrite").save()
       }
       skewReport(s"n65 n=$n")
@@ -105,68 +109,22 @@ object ProbePqJoinScale {
           .repartition(32).write.mode("overwrite").parquet(s"$dir/embskew.parquet")
         val embSk = spark.read.parquet(s"$dir/embskew.parquet")
         val (skS, skMiB) = measure {
-          graft.ops.Similarity.pqKnnJoin(embSk)
+          n65.plan(embSk)
             .write.format("noop").mode("overwrite").save()
         }
         skewReport(s"n65-hotcell n=$n")
         println(f"HOTCELL n=$n%d n65_sdc=$skS%.2f s ($skMiB%.1f MiB shuffled)")
       }
       val (sq8S, sq8MiB) = measure {
-        graft.ops.Similarity.sq8KnnJoin(emb)
+        JoinSpec.Sq8.plan(emb)
           .write.format("noop").mode("overwrite").save()
       }
       // the two-stage n78: same candidate exchange as n65 plus the R-cut
       // and the two shuffle-hash id fetches — the probe prices what the
       // ×9.3 join-scale recall costs in wall AND shuffled bytes at scale
       val (rrS, rrMiB) = measure {
-        graft.ops.Similarity.pqKnnJoinRerank(emb)
+        n78.plan(emb)
           .write.format("noop").mode("overwrite").save()
-      }
-      // AQE-isolation experiment (round 17 inversion follow-up): same
-      // registered n65/n78 plans with adaptive execution toggled — if the
-      // inversion is AQE stage re-planning, it disappears with AQE off
-      if (args.contains("aqeexp")) {
-        Seq(true, false).foreach { aqe =>
-          spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
-          val (s65, m65) = measure {
-            graft.ops.Similarity.pqKnnJoin(emb)
-              .write.format("noop").mode("overwrite").save()
-          }
-          val (s78, m78) = measure {
-            graft.ops.Similarity.pqKnnJoinRerank(emb)
-              .write.format("noop").mode("overwrite").save()
-          }
-          println(f"AQEEXP n=$n%d aqe=$aqe n65=$s65%.2f s ($m65%.1f MiB) " +
-            f"n78=$s78%.2f s ($m78%.1f MiB)")
-        }
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        // targeted fix candidate: keep AQE, hint the cell join to a
-        // merge (shuffled) strategy via the dev path
-        val pt16 = graft.functions.ProductQuantization.pairDistanceTable(
-          graft.ops.Similarity.debugPqCodebook, 8, 8, 16)
-        val (sMj, mMj) = measure {
-          graft.ops.Similarity.pqKnnJoinDev(emb,
-            (a, b) => graft.functions.ProductQuantization.sdc(a, b, pt16, 8, 16),
-            mergeJoin = true)
-            .write.format("noop").mode("overwrite").save()
-        }
-        println(f"AQEEXP n=$n%d aqe=true mergeHint n65=$sMj%.2f s ($mMj%.1f MiB)")
-      }
-      // k-isolation experiment (round 17: the n=20000 inversion — n78,
-      // which CONTAINS n65's stage 1, measured 5x faster than n65): same
-      // dev plan, same verify, only the final heap k varies
-      if (args.contains("kexp")) {
-        Seq(3, 20, 100).foreach { kk =>
-          val (s, mib) = measure {
-            graft.ops.Similarity.pqKnnJoinDev(emb,
-              (a, b) => graft.functions.ProductQuantization.sdc(a, b,
-                graft.functions.ProductQuantization.pairDistanceTable(
-                  graft.ops.Similarity.debugPqCodebook, 8, 8, 16), 8, 16),
-              k = kk)
-              .write.format("noop").mode("overwrite").save()
-          }
-          println(f"KEXP n=$n%d k=$kk sdc_join=$s%.2f s ($mib%.1f MiB shuffled)")
-        }
       }
       println(f"PQJOINSCALE n=$n%d n60_float=$floatS%.2f s ($floatMiB%.1f MiB shuffled) " +
         f"n65_sdc=$sdcS%.2f s ($sdcMiB%.1f MiB shuffled) " +

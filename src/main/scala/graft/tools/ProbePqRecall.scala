@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.functions.ProductQuantization
-import graft.ops.Similarity
+import graft.ops.{AnnLadder, IvfGeometry, Pq}
 
 /**
  * Dev tool: retrieval quality of the n61 IVF-PQ path against exact cosine
@@ -18,7 +18,7 @@ import graft.ops.Similarity
  *   adc_md5_noivf — md5 ADC with no cell restriction (isolates PQ loss
  *               from coarse-quantizer loss);
  *   adc_trained — ADC with the SHIPPED n66 trained codebook
- *               (`Similarity.trainedPqCodebook`: hash-sampled, capped,
+ *               (`AnnLadder.trainedPqCodebook`: hash-sampled, capped,
  *               deterministic Lloyd's — the Jegou et al. construction),
  *               same geometry, pricing what md5's oracle-reproducibility
  *               costs in retrieval quality;
@@ -82,9 +82,10 @@ object ProbePqRecall {
     val k = args.lift(1).map(_.toInt).getOrElse(5)
     val clustered = args.contains("clustered")
     val spark = Sessions.local(8, logLevel = "ERROR")
-    val (subDim, nSub, nCode) = Similarity.debugPqGeometry
-    val (_, nProbe) = Similarity.debugIvfGeometry
-    val cbMd5 = Similarity.debugPqCodebook
+    val (subDim, nSub, nCode) = (Pq.SubDim, Pq.NSub, Pq.NCode)
+    val geo = IvfGeometry.Default
+    val nProbe = geo.nProbe
+    val cbMd5 = Pq.md5Codebook
 
     val embRaw = graft.queries.Tables.embeddings(spark, sfDir)
     val emb = if (clustered) clusteredCorpus(spark, embRaw) else embRaw
@@ -98,18 +99,18 @@ object ProbePqRecall {
     val vecs = rows.map(_._2)
     val n = vecs.length
     val qs = vecs.map(v => ProductQuantization.quantize(v.toSeq))
-    val cells = qs.map(q => Similarity.probeCellsLocal(q, 1).head)
+    val cells = qs.map(q => geo.probeLocal(q, 1).head)
     val units = vecs.map { v =>
       val nrm = math.sqrt(v.map(x => x * x).sum)
       if (nrm == 0) v else v.map(_ / nrm)
     }
     // the SHIPPED n66 construction: hash-sampled, capped, deterministic
-    val cbTrained = Similarity.trainedPqCodebook(emb)
+    val cbTrained = AnnLadder.trainedPqCodebook(emb, Pq.NCode)
 
     // residual machinery (round-15 verdict #2): integer per-cell member
     // means (truncating division — the shipped `cellCentroids` rule),
     // residuals against the OWN cell, and a codebook trained on residuals
-    val (nList, _) = Similarity.debugIvfGeometry
+    val nList = geo.nlist
     val dim = vecs.head.length
     val ctr = Array.ofDim[Long](nList, dim)
     val cnt = new Array[Long](nList)
@@ -161,7 +162,7 @@ object ProbePqRecall {
       val u = units(self)
       val cos = units.map(w => (0 until u.length).map(i => u(i) * w(i)).sum)
       val exact = topIdx(cos, self, asc = false).toSet
-      val probed = Similarity.probeCellsLocal(qs(self), nProbe).toSet
+      val probed = geo.probeLocal(qs(self), nProbe).toSet
       val inProbe: Int => Boolean = j => probed.contains(cells(j))
       val lutMd5 = ProductQuantization.distanceTable(qs(self), cbMd5, subDim, nSub, nCode)
       val lutTr = ProductQuantization.distanceTable(qs(self), cbTrained, subDim, nSub, nCode)
@@ -216,7 +217,7 @@ object ProbePqRecall {
     // setting: the ceiling, the shipped n76 ranking, and the fraction of
     // the corpus the probed cells contain (the 100 TB read fraction).
     if (args.contains("sweep")) {
-      (1 to Similarity.debugIvfGeometry._1).foreach { np =>
+      (1 to geo.nlist).foreach { np =>
         var rIvfS = 0.0; var rRrS = 0.0; var scanned = 0L
         (0 until n).foreach { self =>
           val u = units(self)
@@ -226,7 +227,7 @@ object ProbePqRecall {
             s
           }
           val exact = topIdx(cos, self, asc = false).toSet
-          val probedS = Similarity.probeCellsLocal(qs(self), np).toSet
+          val probedS = geo.probeLocal(qs(self), np).toSet
           val inP: Int => Boolean = j => probedS.contains(cells(j))
           scanned += (0 until n).count(j => j != self && inP(j))
           def recallS(got: Seq[Int]): Double =
@@ -253,7 +254,7 @@ object ProbePqRecall {
           f"scan_frac=${scanned.toDouble / (n.toLong * (n - 1))}%.4f")
       }
     }
-    println(f"PQRECALL sf=$sfDir${if (clustered) " (CLUSTERED)" else ""} n=$n k=$k nProbe=$nProbe/${Similarity.debugIvfGeometry._1} " +
+    println(f"PQRECALL sf=$sfDir${if (clustered) " (CLUSTERED)" else ""} n=$n k=$k nProbe=$nProbe/${geo.nlist} " +
       f"ivf_exact=${rIvfExact / n}%.4f adc_md5=${rMd5 / n}%.4f " +
       f"adc_md5_noivf=${rMd5NoIvf / n}%.4f adc_trained=${rTrained / n}%.4f " +
       f"adc_md5_res=${rMd5Res / n}%.4f adc_trained_res=${rTrainedRes / n}%.4f " +
@@ -276,7 +277,7 @@ object ProbePqRecall {
             s
           }
           val exact = topIdx(cos, self, asc = false).toSet
-          val probedS = Similarity.probeCellsLocal(qs(self), nProbe).toSet
+          val probedS = geo.probeLocal(qs(self), nProbe).toSet
           val inP: Int => Boolean = j => probedS.contains(cells(j))
           val aRes = adistResFor(probedS, codesTrRes256, cbTrRes256, nCode256,
             qs(self), ctr, cells, n)
@@ -321,7 +322,7 @@ object ProbePqRecall {
         }
         val exact = (0 until n).filter(_ != self)
           .sortBy(j => (-cos(j), ids(j))).take(kJoin).toSet
-        val probedS = Similarity.probeCellsLocal(qs(self), nProbe).toSet
+        val probedS = geo.probeLocal(qs(self), nProbe).toSet
         val inP: Int => Boolean = j => probedS.contains(cells(j))
         def sdistOf(codes: Array[Array[Int]], table: Array[Long],
                     nc: Int): Array[Double] =
@@ -386,7 +387,7 @@ object ProbePqRecall {
     // residuals measured NEUTRAL; finer cells should flip it.
     args.find(_.startsWith("nlist=")).map(_.drop(6).toInt).foreach { nlistG =>
       val cellsG = qs.map(q =>
-        Similarity.probeCellsLocalAt(q, nlistG, 1).head)
+        IvfGeometry(nlistG, 1).probeLocal(q).head)
       val dim = vecs.head.length
       val ctrG = Array.ofDim[Long](nlistG, dim)
       val cntG = new Array[Long](nlistG)
@@ -423,7 +424,7 @@ object ProbePqRecall {
             s
           }
           val exact = topIdx(cos, self, asc = false).toSet
-          val probedG = Similarity.probeCellsLocalAt(qs(self), nlistG, np).toSet
+          val probedG = IvfGeometry(nlistG, np).probeLocal(qs(self)).toSet
           val inP: Int => Boolean = j => probedG.contains(cellsG(j))
           scanned += (0 until n).count(j => j != self && inP(j))
           def recall(got: Seq[Int]): Double =
@@ -464,7 +465,7 @@ object ProbePqRecall {
                           cb: Array[Long], nc: Int, q: Array[Long],
                           ctr: Array[Array[Long]], cells: Array[Long],
                           n: Int): Array[Double] = {
-    val (subDim, nSub, _) = Similarity.debugPqGeometry
+    val (subDim, nSub) = (Pq.SubDim, Pq.NSub)
     val lutByCell = probed.toSeq.map { c =>
       val r = Array.tabulate(q.length)(i => q(i) - ctr(c.toInt)(i))
       c -> ProductQuantization.distanceTable(r, cb, subDim, nSub, nc)

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.ops.Pq
+
 /**
  * Dev probe: the n61 IVF-PQ claim at scale — an ANN index stored as PQ
  * CODES must be (a) much smaller than the raw vectors and (b) no slower
@@ -23,8 +25,8 @@ object ProbePqScale {
     val ns = if (args.nonEmpty) args.toSeq.map(_.toLong)
              else Seq(200000L, 2000000L)
     val spark = Sessions.local(32, logLevel = "ERROR")
-    val (subDim, nSub, nCode) = graft.ops.Similarity.debugPqGeometry
-    val cb = graft.ops.Similarity.debugPqCodebook
+    val (subDim, nSub, nCode) = (Pq.SubDim, Pq.NSub, Pq.NCode)
+    val cb = Pq.md5Codebook
     val base = graft.queries.Tables.scratchDir("pqscale")
 
     def du(p: String): Long = {

@@ -41,14 +41,14 @@ object ProbeSq8IndexJoin {
         mk().queryExecution.executedPlan.toString).length
 
     // warmup both shapes
-    time(() => graft.ops.Similarity.sq8KnnJoin(emb))
+    time(() => graft.ops.JoinSpec.Sq8.plan(emb))
     time(() => index.knnJoin(spark))
     val batch = (0 until reps).map(_ =>
-      time(() => graft.ops.Similarity.sq8KnnJoin(emb))).min
+      time(() => graft.ops.JoinSpec.Sq8.plan(emb))).min
     val idx = (0 until reps).map(_ =>
       time(() => index.knnJoin(spark))).min
     println(f"SQ8JOIN sf=$sfDir batch_n68=$batch%.3f s (exchanges=" +
-      s"${exchanges(() => graft.ops.Similarity.sq8KnnJoin(emb))}) " +
+      s"${exchanges(() => graft.ops.JoinSpec.Sq8.plan(emb))}) " +
       f"index_n71=$idx%.3f s (exchanges=" +
       s"${exchanges(() => index.knnJoin(spark))}) " +
       f"ratio=${idx / batch}%.2f")

@@ -36,8 +36,9 @@ class ProductQuantizationSpec extends AnyFunSuite {
 
   test("spec codebook matches the Similarity construction") {
     assert(java.util.Arrays.equals(codebook,
-      graft.ops.Similarity.debugPqCodebook))
-    assert(graft.ops.Similarity.debugPqGeometry === ((subDim, nSub, nCode)))
+      graft.ops.Pq.md5Codebook))
+    assert((graft.ops.Pq.SubDim, graft.ops.Pq.NSub, graft.ops.Pq.NCode) ===
+      ((subDim, nSub, nCode)))
   }
 
   private def vecs() = Tables.embeddings(spark, T.sf0001)
@@ -238,9 +239,9 @@ class ProductQuantizationSpec extends AnyFunSuite {
     val malformed = emb.limit(1)
       .select(lit(888888L).as("vec_id"),
         slice(col("embedding"), 1, dim / 2).as("embedding"), col("label"))
-    val base = graft.ops.Similarity.ivfPqTopK(emb, k = 5)
+    val base = graft.ops.ScanSpec().plan(emb)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
-    val withBad = graft.ops.Similarity.ivfPqTopK(emb.unionByName(malformed), k = 5)
+    val withBad = graft.ops.ScanSpec().plan(emb.unionByName(malformed))
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
     assert(!withBad.exists(_._1 == 888888L),
       s"malformed row reached the top-k: $withBad")
@@ -251,7 +252,7 @@ class ProductQuantizationSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, T.sf0001)
     val dup = emb.filter(col("vec_id") === 0L)
       .select(lit(999999L).as("vec_id"), col("embedding"), col("label"))
-    val top = graft.ops.Similarity.ivfPqTopK(emb.unionByName(dup), k = 5)
+    val top = graft.ops.ScanSpec().plan(emb.unionByName(dup))
       .collect()
     assert(top.nonEmpty)
     // the duplicate shares the query's IVF cell (identical integer dots)
@@ -265,20 +266,20 @@ class ProductQuantizationSpec extends AnyFunSuite {
   }
 
   test("ivfDotsLocal / probeCellsLocal match the QuantizedDots kernel and the n07 probe rule") {
-    val dirs = graft.ops.Similarity.debugIvfDirs
-    val (nList, nProbe) = graft.ops.Similarity.debugIvfGeometry
+    val geo = graft.ops.IvfGeometry.Default
+    val (dirs, nList, nProbe) = (geo.dirs, geo.nlist, geo.nProbe)
     val rows = vecs()
       .select(col("vec_id"), col("u"),
         QuantizedDots(col("u"), dirs, 64, nList).as("dots"))
       .collect()
     rows.foreach { r =>
       val q = ProductQuantization.quantize(r.getSeq[Double](1))
-      val local = graft.ops.Similarity.ivfDotsLocal(q)
+      val local = geo.dotsLocal(q)
       assert(r.getSeq[Long](2) === local.toSeq, s"vec ${r.getLong(0)}")
       // the probe rule: top nProbe by (dot DESC, cell ASC)
       val want = local.zipWithIndex.sortBy { case (d, c) => (-d, c) }
         .take(nProbe).map(_._2.toLong).toSeq
-      assert(graft.ops.Similarity.probeCellsLocal(q, nProbe) === want)
+      assert(geo.probeLocal(q, nProbe) === want)
     }
   }
 
@@ -293,8 +294,8 @@ class ProductQuantizationSpec extends AnyFunSuite {
     }
     val truth = all.filter(_.getLong(0) != 0L)
       .map(r => r.getLong(0) -> trueD2(r.getSeq[Double](1))).toMap
-    val top = graft.ops.Similarity
-      .ivfPqTopK(Tables.embeddings(spark, T.sf0001), k = 10)
+    val top = graft.ops.ScanSpec(k = 10)
+      .plan(Tables.embeddings(spark, T.sf0001))
       .collect().map(_.getLong(0))
     val topMean = top.map(truth).sum / top.length
     val allMean = truth.values.sum / truth.size

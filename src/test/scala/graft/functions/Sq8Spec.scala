@@ -108,11 +108,11 @@ class Sq8Spec extends AnyFunSuite {
   }
 
   test("SQ8 ranking agrees with the exact n60 ranking on nearly every top-3 edge") {
-    val exact = graft.ops.Similarity.knnJoinDet(
+    val exact = graft.ops.JoinSpec.Exact.plan(
         Tables.embeddings(spark, T.sf0001))
       .select("vec_id", "nbr").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sq8 = graft.ops.Similarity.sq8KnnJoin(
+    val sq8 = graft.ops.JoinSpec.Sq8.plan(
         Tables.embeddings(spark, T.sf0001))
       .select("vec_id", "nbr").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

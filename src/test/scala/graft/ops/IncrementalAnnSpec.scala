@@ -22,7 +22,7 @@ class IncrementalAnnSpec extends AnyFunSuite {
   test("streaming index answers the n61 query identically to the batch plan") {
     val got = IncrementalAnn.streamingIvfPqQuery(spark, T.sf0001)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val want = Similarity.ivfPqTopK(emb)
+    val want = ScanSpec().plan(emb)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     assert(got === want)
     assert(got.nonEmpty)
@@ -33,7 +33,7 @@ class IncrementalAnnSpec extends AnyFunSuite {
     // source vectors — must equal the batch two-stage result per row
     val got = IncrementalAnn.streamingIvfPqRerankQuery(spark, T.sf0001)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val want = Similarity.ivfPqRerankTopK(emb)
+    val want = ScanSpec(rerank = true).plan(emb)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     assert(got === want)
     assert(got.nonEmpty)
@@ -52,8 +52,8 @@ class IncrementalAnnSpec extends AnyFunSuite {
     index.processBatch(emb.limit(0), 1L) // committed ⇒ short-circuits
     val v = transform(col("embedding"), x => x.cast("double"))
     val want = emb.select(col("vec_id"),
-        Similarity.ivfCellCol(v).cast("long").as("cell"),
-        Similarity.pqEncodeCol(v).as("codes"))
+        IvfGeometry.Default.cellCol(v).cast("long").as("cell"),
+        Pq.encode(v, Pq.md5Codebook, Pq.NCode).as("codes"))
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2))).sortBy(_._1)
 
@@ -67,7 +67,7 @@ class IncrementalAnnSpec extends AnyFunSuite {
 
     // pruned probed-cell read == unpruned read filtered to the same cells
     val q = graft.functions.ProductQuantization.quantize(queryVec.map(_.toDouble))
-    val cells = Similarity.probeCellsLocal(q)
+    val cells = IvfGeometry.Default.probeLocal(q)
     val pruned = index.topK(spark, queryVec, k = 1000, excludeVecId = 0L)
       .collect().map(_.getLong(0)).sorted
     val unpruned = want.filter(t => cells.contains(t._2)).map(_._1)
@@ -102,7 +102,7 @@ class IncrementalAnnSpec extends AnyFunSuite {
     // the batch n76 plan does — the gate that bounds the rows-only n79
     val got = IncrementalAnn.streamingIvfPqTrainedRerankQuery(spark, T.sf0001)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val want = Similarity.ivfPqResidualTrainedRerankTopK(emb)
+    val want = OpsQueries.n76.plan(emb)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     assert(got === want)
     assert(got.nonEmpty)
@@ -110,10 +110,9 @@ class IncrementalAnnSpec extends AnyFunSuite {
 
   test("the trained quantizer survives an index reopen; a conflicting one is refused") {
     val base = T.tmpDir("ann-quant")
-    val ctr = Similarity.cellCentroids(emb)
-    val cb = Similarity.trainedResidualCodebook(emb, ctr)
-    val (subDim, nSub, _) = Similarity.debugPqGeometry
-    val tq = TrainedQuant(cb, cb.length / (nSub * subDim), ctr)
+    val ctr = AnnLadder.cellCentroids(emb)
+    val cb = AnnLadder.trainedResidualCodebook(emb, ctr)
+    val tq = TrainedQuant(cb, cb.length / (Pq.NSub * Pq.SubDim), ctr)
     val index = new IncrementalIvfPqIndex(base.resolve("state"), Some(tq))
     index.processBatch(emb, 0L)
     index.maintain(spark)
@@ -143,11 +142,10 @@ class IncrementalAnnSpec extends AnyFunSuite {
     // duplicate attains the per-cell LUT minimum and the exact re-rank
     // can only confirm it
     val base = T.tmpDir("ann-trained-late")
-    val ctr = Similarity.cellCentroids(emb)
-    val cb = Similarity.trainedResidualCodebook(emb, ctr)
-    val (subDim, nSub, _) = Similarity.debugPqGeometry
+    val ctr = AnnLadder.cellCentroids(emb)
+    val cb = AnnLadder.trainedResidualCodebook(emb, ctr)
     val index = new IncrementalIvfPqIndex(base.resolve("state"),
-      Some(TrainedQuant(cb, cb.length / (nSub * subDim), ctr)))
+      Some(TrainedQuant(cb, cb.length / (Pq.NSub * Pq.SubDim), ctr)))
     index.processBatch(emb, 0L)
     val dup = emb.filter(col("vec_id") === 0L)
       .select(lit(999999L).as("vec_id"), col("embedding"), col("label"))
@@ -168,7 +166,7 @@ class IncrementalAnnSpec extends AnyFunSuite {
     val got = IncrementalAnn.streamingPqKnnRerankTrainedQuery(spark, T.sf0001)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val want = Similarity.pqKnnJoinRerankTrained(emb)
+    val want = OpsQueries.n80.plan(emb)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(got === want)
@@ -180,11 +178,10 @@ class IncrementalAnnSpec extends AnyFunSuite {
     // R-cut; the exact re-rank's integer self-dot is the per-query
     // maximum ⇒ rank 1 for the query row — across the ingest boundary
     val base = T.tmpDir("ann-join-late")
-    val (subDim, nSub, _) = Similarity.debugPqGeometry
-    val cb = Similarity.trainedPqCodebook(emb, Similarity.debugPqNCodeHi)
-    val zeroCtr = Array.fill(Similarity.debugIvfGeometry._1)(Array.fill(64)(0L))
+    val cb = AnnLadder.trainedPqCodebook(emb, Pq.NCodeHi)
+    val zeroCtr = Array.fill(IvfGeometry.Default.nlist)(Array.fill(64)(0L))
     val index = new IncrementalIvfPqIndex(base.resolve("state"),
-      Some(TrainedQuant(cb, cb.length / (nSub * subDim), zeroCtr)))
+      Some(TrainedQuant(cb, cb.length / (Pq.NSub * Pq.SubDim), zeroCtr)))
     index.processBatch(emb, 0L)
     val dup = emb.filter(col("vec_id") === 0L)
       .select(lit(999999L).as("vec_id"), col("embedding"), col("label"))

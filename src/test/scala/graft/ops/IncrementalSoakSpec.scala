@@ -179,8 +179,8 @@ class IncrementalSoakSpec extends AnyFunSuite with graft.SoakTagged {
     // answers the batch n61 result
     val v = transform(col("embedding"), x => x.cast("double"))
     val want = emb.select(col("vec_id"),
-        Similarity.ivfCellCol(v).cast("long").as("cell"),
-        Similarity.pqEncodeCol(v).as("codes"))
+        IvfGeometry.Default.cellCol(v).cast("long").as("cell"),
+        Pq.encode(v, Pq.md5Codebook, Pq.NCode).as("codes"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2)))
       .sortBy(_._1).toSeq
     val got = index.debugCodes(spark).select("vec_id", "cell", "codes")
@@ -191,7 +191,7 @@ class IncrementalSoakSpec extends AnyFunSuite with graft.SoakTagged {
       .select("embedding").head().getSeq[Float](0)
     val topGot = index.topK(spark, qv, excludeVecId = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
-    val topWant = Similarity.ivfPqTopK(emb)
+    val topWant = ScanSpec().plan(emb)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
     assert(topGot === topWant, "soaked index query diverged from batch n61")
     emb.unpersist()

@@ -22,7 +22,7 @@ class IncrementalSq8Spec extends AnyFunSuite {
   test("streaming index answers the n68 join identically to the batch plan") {
     val got = IncrementalSq8.streamingSq8KnnQuery(spark, T.sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val want = Similarity.sq8KnnJoin(emb)
+    val want = JoinSpec.Sq8.plan(emb)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(got === want)
     assert(got.nonEmpty)
@@ -39,10 +39,10 @@ class IncrementalSq8Spec extends AnyFunSuite {
 
     // the batch n68 probe structures, computed the batch way: full dots,
     // top-nProbe by (dot DESC, cell ASC), plus cell and SQ8 code
-    val (_, nProbe) = Similarity.debugIvfGeometry
+    val nProbe = IvfGeometry.Default.nProbe
     val v = transform(col("embedding"), x => x.cast("double"))
     val want = emb.select(col("vec_id"),
-        Similarity.ivfCellCol(v).cast("int").as("cell"),
+        IvfGeometry.Default.cellCol(v).cast("int").as("cell"),
         graft.functions.ScalarQuantization
           .encode(Dedup.unitVector(col("embedding")), 64).as("code"))
       .collect()
@@ -52,7 +52,7 @@ class IncrementalSq8Spec extends AnyFunSuite {
       .map { r =>
         val q = graft.functions.ProductQuantization.quantize(
           r.getSeq[Float](1).map(_.toDouble))
-        r.getLong(0) -> Similarity.probeCellsLocal(q, nProbe).map(_.toInt)
+        r.getLong(0) -> IvfGeometry.Default.probeLocal(q, nProbe).map(_.toInt)
       }.sortBy(_._1)
 
     def stateNow() = index.debugCodes(spark)
@@ -87,7 +87,7 @@ class IncrementalSq8Spec extends AnyFunSuite {
       ("TopKPerKey".r.findAllIn(p).length, "Exchange".r.findAllIn(p).length)
     val (idxTop, idxEx) = counts(index.knnJoin(spark)
       .queryExecution.executedPlan.toString)
-    val (batTop, batEx) = counts(Similarity.sq8KnnJoin(emb)
+    val (batTop, batEx) = counts(JoinSpec.Sq8.plan(emb)
       .queryExecution.executedPlan.toString)
     info(s"index: TopKPerKey=$idxTop Exchange=$idxEx; batch: TopKPerKey=$batTop Exchange=$batEx")
     // each logical cut plans a partial/final operator PAIR (the d52
@@ -108,7 +108,7 @@ class IncrementalSq8Spec extends AnyFunSuite {
     index.maintain(spark)
     val floatDir = base.resolve("float-twin")
     emb.select(col("vec_id"),
-        Similarity.ivfCellCol(transform(col("embedding"), x => x.cast("double")))
+        IvfGeometry.Default.cellCol(transform(col("embedding"), x => x.cast("double")))
           .cast("int").as("cell"),
         Dedup.unitVector(col("embedding")).as("u"))
       .write.mode("overwrite").parquet(floatDir.toString)

@@ -23,6 +23,12 @@ import graft.queries.Tables
 class PqJoinRerankSpec extends AnyFunSuite {
   lazy val spark = T.spark
 
+  private val n65 = JoinSpec.PqCodes(Codebook.Md5, Ranking.Sdc, rerank = false)
+  private val n78 = JoinSpec.PqCodes(Codebook.Md5, Ranking.Sdc, rerank = true)
+  private val n80 = JoinSpec.PqCodes(Codebook.Trained(256), Ranking.Sdc, rerank = true)
+  private val n81 = JoinSpec.PqCodes(Codebook.Md5, Ranking.Adc, rerank = true)
+  private val n84 = JoinSpec.PqCodes(Codebook.Trained(256), Ranking.Adc, rerank = true)
+
   /** Driver twin of the n78/n80 pipeline over a collected corpus: codes,
     * probe sets, SDC shortlist at R, exact quantized-dot re-rank — all
     * from the same local helpers the oracle arithmetic is pinned to.
@@ -31,16 +37,16 @@ class PqJoinRerankSpec extends AnyFunSuite {
                           codebook: Array[Long] = null, nCodeIn: Int = 0,
                           asymmetric: Boolean = false)
       : Seq[(Long, Long, Long, Long)] = {
-    val (subDim, nSub, nCodeMd5) = Similarity.debugPqGeometry
-    val (_, nProbe) = Similarity.debugIvfGeometry
-    val cb = Option(codebook).getOrElse(Similarity.debugPqCodebook)
+    val (subDim, nSub, nCodeMd5) = (Pq.SubDim, Pq.NSub, Pq.NCode)
+    val nProbe = IvfGeometry.Default.nProbe
+    val cb = Option(codebook).getOrElse(Pq.md5Codebook)
     val nCode = if (nCodeIn > 0) nCodeIn else nCodeMd5
     val pt = ProductQuantization.pairDistanceTable(cb, subDim, nSub, nCode)
     val ids = rows.map(_._1)
     val n = ids.length
     val qs = rows.map(rw => ProductQuantization.quantize(rw._2.toSeq))
-    val cells = qs.map(q => Similarity.probeCellsLocal(q, 1).head)
-    val probed = qs.map(q => Similarity.probeCellsLocal(q, nProbe).toSet)
+    val cells = qs.map(q => IvfGeometry.Default.probeLocal(q, 1).head)
+    val probed = qs.map(q => IvfGeometry.Default.probeLocal(q, nProbe).toSet)
     val codes = qs.map(q =>
       ProductQuantization.encodeLocal(q, cb, subDim, nSub, nCode))
     // the n60/exactRerank quantized unit: sequential sum of squares, one
@@ -79,7 +85,7 @@ class PqJoinRerankSpec extends AnyFunSuite {
 
   test("n78 distributed join equals the driver-twin computation at sf0.001") {
     val emb = Tables.embeddings(spark, T.sf0001)
-    val got = Similarity.pqKnnJoinRerank(emb).collect()
+    val got = n78.plan(emb).collect()
       .map(rw => (rw.getLong(0), rw.getLong(1), rw.getLong(2), rw.getLong(3)))
       .toSeq
     val rows = emb.select(col("vec_id"), col("embedding")).collect()
@@ -99,7 +105,7 @@ class PqJoinRerankSpec extends AnyFunSuite {
       .unionByName(Dedup.plantedCopies(sample)
         .select(col("vec_id"),
           transform(col("v"), x => x.cast("float")).as("embedding")))
-    val hits = Similarity.pqKnnJoinRerank(corpus)
+    val hits = n78.plan(corpus)
       .filter(col("nbr") === col("vec_id") + lit(Dedup.PlantOffset))
       .filter(col("rank") === 1)
       .count()
@@ -115,8 +121,8 @@ class PqJoinRerankSpec extends AnyFunSuite {
     // distributed result must equal the local recomputation exactly —
     // the bound for the rows-only n80 (training is SQL-inexpressible)
     val emb = Tables.embeddings(spark, T.sf0001)
-    val cb = Similarity.trainedPqCodebook(emb, 256)
-    val got = Similarity.pqKnnJoinRerankTrained(emb).collect()
+    val cb = AnnLadder.trainedPqCodebook(emb, 256)
+    val got = n80.plan(emb).collect()
       .map(rw => (rw.getLong(0), rw.getLong(1), rw.getLong(2), rw.getLong(3)))
       .toSeq
     val rows = emb.select(col("vec_id"), col("embedding")).collect()
@@ -134,7 +140,7 @@ class PqJoinRerankSpec extends AnyFunSuite {
       .unionByName(Dedup.plantedCopies(sample)
         .select(col("vec_id"),
           transform(col("v"), x => x.cast("float")).as("embedding")))
-    val hits = Similarity.pqKnnJoinRerankTrained(corpus)
+    val hits = n80.plan(corpus)
       .filter(col("nbr") === col("vec_id") + lit(Dedup.PlantOffset))
       .filter(col("rank") === 1)
       .count()
@@ -158,8 +164,8 @@ class PqJoinRerankSpec extends AnyFunSuite {
       got.intersect(exact).size.toDouble / exact.size
     }
     val emb = Tables.embeddings(spark, T.sf0001)
-    val rSdc = recallOf(Similarity.pqKnnJoin(emb))
-    val rRer = recallOf(Similarity.pqKnnJoinRerank(emb))
+    val rSdc = recallOf(n65.plan(emb))
+    val rRer = recallOf(n78.plan(emb))
     info(f"recall@3 vs exact n39 at sf0.001: n65 sdc=$rSdc%.3f n78 rerank=$rRer%.3f")
     assert(rRer >= 0.4, f"n78 recall $rRer%.3f below the 0.4 floor")
     assert(rRer >= 2.0 * rSdc,
@@ -170,7 +176,7 @@ class PqJoinRerankSpec extends AnyFunSuite {
     // same probe structure and R (at sf0.001 R covers the candidate set
     // and both sit at the probe ceiling; the bulk gap is priced at sf0.1
     // in BASELINE round-18's JOINADC row)
-    val rAdc = recallOf(Similarity.pqKnnJoinRerankAdc(emb))
+    val rAdc = recallOf(n81.plan(emb))
     info(f"recall@3 vs exact n39 at sf0.001: n81 adc-rerank=$rAdc%.3f")
     assert(rAdc >= rRer,
       f"the asymmetric shortlist lost to SDC: n81=$rAdc%.3f vs n78=$rRer%.3f")
@@ -181,8 +187,8 @@ class PqJoinRerankSpec extends AnyFunSuite {
     // training ⇒ the distributed result must equal the local
     // recomputation exactly — the gate for the rows-only n84
     val emb = Tables.embeddings(spark, T.sf0001)
-    val cb = Similarity.trainedPqCodebook(emb, 256)
-    val got = Similarity.pqKnnJoinRerankAdcTrained(emb).collect()
+    val cb = AnnLadder.trainedPqCodebook(emb, 256)
+    val got = n84.plan(emb).collect()
       .map(rw => (rw.getLong(0), rw.getLong(1), rw.getLong(2), rw.getLong(3)))
       .toSeq
     val rows = emb.select(col("vec_id"), col("embedding")).collect()
@@ -201,7 +207,7 @@ class PqJoinRerankSpec extends AnyFunSuite {
       .unionByName(Dedup.plantedCopies(sample)
         .select(col("vec_id"),
           transform(col("v"), x => x.cast("float")).as("embedding")))
-    val hits = Similarity.pqKnnJoinRerankAdcTrained(corpus)
+    val hits = n84.plan(corpus)
       .filter(col("nbr") === col("vec_id") + lit(Dedup.PlantOffset))
       .filter(col("rank") === 1)
       .count()
@@ -218,7 +224,7 @@ class PqJoinRerankSpec extends AnyFunSuite {
       .unionByName(Dedup.plantedCopies(sample)
         .select(col("vec_id"),
           transform(col("v"), x => x.cast("float")).as("embedding")))
-    val hits = Similarity.pqKnnJoinRerankAdc(corpus)
+    val hits = n81.plan(corpus)
       .filter(col("nbr") === col("vec_id") + lit(Dedup.PlantOffset))
       .filter(col("rank") === 1)
       .count()

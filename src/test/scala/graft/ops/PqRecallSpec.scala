@@ -25,16 +25,16 @@ class PqRecallSpec extends AnyFunSuite {
 
   test("bulk recall@5 at sf0.1: trained codebook clears its floor and beats md5 by >=2.5x; IVF ceiling holds") {
     val emb = Tables.embeddings(spark, sf01)
-    val (subDim, nSub, nCode) = Similarity.debugPqGeometry
-    val (_, nProbe) = Similarity.debugIvfGeometry
-    val cbMd5 = Similarity.debugPqCodebook
-    val cbTr = Similarity.trainedPqCodebook(emb)
+    val (subDim, nSub, nCode) = (Pq.SubDim, Pq.NSub, Pq.NCode)
+    val nProbe = IvfGeometry.Default.nProbe
+    val cbMd5 = Pq.md5Codebook
+    val cbTr = AnnLadder.trainedPqCodebook(emb, Pq.NCode)
     val v = transform(col("embedding"), x => x.cast("double"))
     // codes and cells from the SHIPPED distributed kernels (one pass);
     // ranking arithmetic below is the driver twins, pinned bit-equal in
     // ProductQuantizationSpec — the numbers are the n61/n66 rankings'
     val rows = emb.select(col("vec_id"), v.as("u"),
-        Similarity.ivfCellCol(v).cast("long").as("cell"),
+        IvfGeometry.Default.cellCol(v).cast("long").as("cell"),
         ProductQuantization.encode(v, cbMd5, subDim, nSub, nCode).as("cm"),
         ProductQuantization.encode(v, cbTr, subDim, nSub, nCode).as("ct"))
       .collect().sortBy(_.getLong(0))
@@ -59,11 +59,11 @@ class PqRecallSpec extends AnyFunSuite {
 
     // residual machinery (round-15 verdict #2 / round-16): shipped
     // centroids + the n73 trained-residual codebook at k* = 256
-    val ctr = Similarity.cellCentroids(emb)
-    val cbRes = Similarity.trainedResidualCodebook(emb, ctr)
+    val ctr = AnnLadder.cellCentroids(emb)
+    val cbRes = AnnLadder.trainedResidualCodebook(emb, ctr)
     val nCodeHi = cbRes.length / (nSub * subDim)
     val resids = (0 until n).map(j =>
-      Similarity.residualLocal(qs(j), ctr(cells(j).toInt))).toArray
+      AnnLadder.residualLocal(qs(j), ctr(cells(j).toInt))).toArray
     val cr = resids.map(r =>
       ProductQuantization.encodeLocal(r, cbRes, subDim, nSub, nCodeHi))
 
@@ -80,7 +80,7 @@ class PqRecallSpec extends AnyFunSuite {
         s
       }
       val exact = topIdx(cos, self, asc = false, _ => true)
-      val probed = Similarity.probeCellsLocal(qs(self), nProbe).toSet
+      val probed = IvfGeometry.Default.probeLocal(qs(self), nProbe).toSet
       val inP: Int => Boolean = j => probed.contains(cells(j))
       val lutM = ProductQuantization.distanceTable(qs(self), cbMd5, subDim, nSub, nCode)
       val lutT = ProductQuantization.distanceTable(qs(self), cbTr, subDim, nSub, nCode)
@@ -98,7 +98,7 @@ class PqRecallSpec extends AnyFunSuite {
       // the n73 ranking: per-probed-cell LUTs from the query's residual
       val lutByCell = probed.toSeq.map { c =>
         c -> ProductQuantization.distanceTable(
-          Similarity.residualLocal(qs(self), ctr(c.toInt)),
+          AnnLadder.residualLocal(qs(self), ctr(c.toInt)),
           cbRes, subDim, nSub, nCodeHi)
       }.toMap
       val aRes = Array.tabulate(n) { j =>
@@ -149,18 +149,18 @@ class PqRecallSpec extends AnyFunSuite {
 
   test("shipped cellCentroids equals the driver-twin computation (residual parity)") {
     // the recall numbers above rank with driver twins; this pins the
-    // shipped Spark centroid job (ivfCellCol + posexplode + `div`) to
+    // shipped Spark centroid job (IvfGeometry.cellCol + posexplode + `div`) to
     // the local truncating-mean they assume, at sf0.001
     val emb = Tables.embeddings(spark, T.sf0001)
-    val got = Similarity.cellCentroids(emb)
+    val got = AnnLadder.cellCentroids(emb)
     val rows = emb.select(col("vec_id"), col("embedding")).collect()
       .map(r => r.getSeq[Float](1).map(_.toDouble))
-    val (nList, _) = Similarity.debugIvfGeometry
+    val nList = IvfGeometry.Default.nlist
     val want = Array.ofDim[Long](nList, 64)
     val cnt = new Array[Long](nList)
     rows.foreach { v =>
       val q = ProductQuantization.quantize(v)
-      val c = Similarity.probeCellsLocal(q, 1).head.toInt
+      val c = IvfGeometry.Default.probeLocal(q, 1).head.toInt
       cnt(c) += 1
       (0 until 64).foreach(i => want(c)(i) += q(i))
     }
@@ -176,15 +176,15 @@ class PqRecallSpec extends AnyFunSuite {
     // (a) the md5 direction namespace extends: the nlist=8 directions every
     // oracle-gated query ships are the exact PREFIX of any finer geometry,
     // so parameterizing could not have drifted a frozen plan
-    assert(Similarity.ivfDirsFor(8).toSeq ===
-      Similarity.ivfDirsFor(64).take(8 * 64).toSeq)
+    assert(IvfGeometry.dirsFor(8).toSeq ===
+      IvfGeometry.dirsFor(64).take(8 * 64).toSeq)
     // (b) probe rule at the finer geometry still picks by (dot DESC, cell)
     val emb = Tables.embeddings(spark, T.sf0001)
     val q = ProductQuantization.quantize(
       emb.filter(col("vec_id") === 0L).select("embedding").head()
         .getSeq[Float](0).map(_.toDouble))
-    val dots = Similarity.ivfDotsLocalAt(q, 64)
-    val probed = Similarity.probeCellsLocalAt(q, 64, 8)
+    val dots = IvfGeometry.Fine.dotsLocal(q)
+    val probed = IvfGeometry.Fine.probeLocal(q)
     assert(probed.size === 8)
     assert(probed.toSet.subsetOf((0 until 64).map(_.toLong).toSet))
     val best = (0 until 64).minBy(c => (-dots(c), c)).toLong
@@ -193,8 +193,8 @@ class PqRecallSpec extends AnyFunSuite {
     // shuffle-free ranking scan with the per-cell LUT when-chain, and the
     // broadcast re-rank fetch — the geometry dial changes constants, not
     // the plan family
-    val df = Similarity.ivfPqResidualTrainedRerankTopK(emb,
-      nProbe = 8, nlist = 64)
+    val df = ScanSpec(Codebook.Trained(Pq.NCodeHi), residual = true,
+      rerank = true, IvfGeometry.Fine).plan(emb)
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("pq_adc") && p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
@@ -236,7 +236,7 @@ class PqRecallSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, T.sf0001)
     val dup = emb.filter(col("vec_id") === 0L)
       .select(lit(999999L).as("vec_id"), col("embedding"), col("label"))
-    val top = Similarity.ivfPqTrainedTopK(emb.unionByName(dup), k = 5).collect()
+    val top = ScanSpec(Codebook.Trained(Pq.NCode)).plan(emb.unionByName(dup)).collect()
     assert(top.nonEmpty)
     assert(top.head.getLong(0) === 999999L,
       s"expected the planted duplicate first, got ${top.toSeq}")

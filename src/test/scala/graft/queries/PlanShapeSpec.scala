@@ -359,10 +359,17 @@ class PlanShapeSpec extends AnyFunSuite {
     // be pinned to shuffled-hash so AQE cannot demote the verify stage's
     // parallelism to a broadcast over a coalesced stream side (the
     // measured ~4x inversion at n=20000, BASELINE round-17)
-    val p = graft.ops.Similarity.pqKnnJoin(big)
+    import graft.ops.{Codebook, JoinSpec, Ranking}
+    val p = JoinSpec.PqCodes(Codebook.Md5, Ranking.Sdc, rerank = false).plan(big)
       .queryExecution.executedPlan.toString
     assert(p.contains("ShuffledHashJoin"),
       s"above-threshold n65 cell join is not shuffled-hash:\n$p")
+    // n78 takes the same crossover: its cell join is the third
+    // shuffled-hash join beside the two shortlist id fetches
+    val p78 = JoinSpec.PqCodes(Codebook.Md5, Ranking.Sdc, rerank = true).plan(big)
+      .queryExecution.executedPlan.toString
+    assert("ShuffledHashJoin".r.findAllMatchIn(p78).size === 3,
+      s"above-threshold n78 cell join is not shuffled-hash:\n$p78")
     // the oracle-gated bench point stays below the threshold: its
     // measured-optimal AQE plan (and its hash) are untouched
     assert(!graft.ops.Similarity.cellJoinLargeProbe(
