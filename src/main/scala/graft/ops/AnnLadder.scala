@@ -117,13 +117,6 @@ object Pq {
     }
   }
 
-  /** SDC codeword-pair table of the md5 codebook (nSub·nCode² longs, one
-    * plan constant for every pair), once per JVM. */
-  lazy val md5PairTable: Array[Long] = pairTable(md5Codebook, NCode)
-
-  def pairTable(codebook: Array[Long], nCode: Int): Array[Long] =
-    ProductQuantization.pairDistanceTable(codebook, SubDim, NSub, nCode)
-
   /** PQ code column of a double-vector column (codegen argmin encode). */
   def encode(v: Column, codebook: Array[Long], nCode: Int): Column =
     ProductQuantization.encode(v, codebook, SubDim, NSub, nCode)
@@ -137,6 +130,11 @@ object Codebook {
   case object Md5 extends Codebook { val nCode: Int = Pq.NCode }
   final case class Trained(nCode: Int) extends Codebook
 }
+
+/** The codewords a planner encodes and ranks with; residual codes also
+  * carry the per-cell centroids they are relative to. */
+final case class Quantizer(codebook: Array[Long], nCode: Int,
+                           centroids: Option[Array[Array[Long]]])
 
 /** How the batched join's PQ shortlist ranks: SYMMETRIC (code vs code, one
   * codeword-pair table for all pairs) or ASYMMETRIC (the probe row's raw
@@ -176,9 +174,25 @@ object Ranking {
  *
  * Rows-only rungs are bounded by driver-twin equality and planted-floor
  * gates (`PqRecallSpec`, `PqJoinRerankSpec`, `IncrementalAnnSpec`).
+ *
+ * The streaming rungs are the same literals answered from a [[CodesIndex]]
+ * fed as a 4-batch stream ([[CodesIndex.streamed]]); encode, cell and
+ * probe set are per-row functions, so each equals its batch rung and
+ * shares its oracle:
+ *
+ * | query | = | index layout | quantizer stored beside the state |
+ * |-------|---|--------------|-----------------------------------|
+ * | n63 | n61 over the index | PQ | none (md5) |
+ * | n71 | n68 over the index | SQ8 | none |
+ * | n77 | n75 over the index | PQ | none (md5) |
+ * | n79 | n76 over the index | PQ | trained residual k*=256 + cell centroids |
+ * | n83 | n80 over the index | PQ | trained k*=256 + zero centroids |
  */
 sealed trait AnnSpec {
   def plan(emb: DataFrame): DataFrame
+  /** The same query answered from a committed codes index; `emb` is the
+    * source table the re-rank fetches from. */
+  def plan(index: CodesIndex, emb: DataFrame): DataFrame
   /** The DuckDB twin; None for a trained codebook. */
   def oracle: Option[String]
   def query: QueryFn = (spark, dir) => plan(embeddings(spark, dir))
@@ -202,6 +216,8 @@ final case class ScanSpec(codebook: Codebook = Codebook.Md5,
                           k: Int = AnnLadder.ScanK)
   extends AnnSpec {
   def plan(emb: DataFrame): DataFrame = AnnLadder.scan(this, emb)
+  def plan(index: CodesIndex, emb: DataFrame): DataFrame = AnnLadder.scan(this,
+    index, emb, AnnLadder.vector(emb, AnnLadder.QueryVecId), AnnLadder.QueryVecId)
   def oracle: Option[String] = AnnOracle.scan(this)
 }
 
@@ -217,6 +233,8 @@ final case class ScanSpec(codebook: Codebook = Codebook.Md5,
  */
 sealed trait JoinSpec extends AnnSpec {
   def plan(emb: DataFrame): DataFrame = AnnLadder.join(this, emb)
+  def plan(index: CodesIndex, emb: DataFrame): DataFrame =
+    AnnLadder.join(this, index, emb)
   def oracle: Option[String] = AnnOracle.join(this)
 }
 object JoinSpec {
@@ -226,7 +244,8 @@ object JoinSpec {
                            rerank: Boolean) extends JoinSpec
 }
 
-/** The two planners and the column builders the streaming indexes share. */
+/** The two planners, each over a fresh encode or a committed
+  * [[CodesIndex]], and the column builders the index's ingest shares. */
 object AnnLadder {
   import IvfGeometry.{Default => Ivf}
 
@@ -257,26 +276,37 @@ object AnnLadder {
     transform(Dedup.unitVector(c), x =>
       floor(x * lit(1048576.0)).cast("double"))
 
-  /** Residual encode: (q − centroid(cell)) enters the double encode kernel
-    * as (q − c)/2²⁰ — exact (an integer below 2²¹ over a power of two) —
-    * so the kernel's floor(x·2²⁰) recovers q − c bit-for-bit. */
-  def residualCodesCol(q: Column, cell: Column, ctr: Array[Array[Long]],
-                       codebook: Array[Long], nCode: Int): Column = {
-    val ctrLit = array(ctr.map(row => array(row.map(lit(_)): _*)): _*)
-    Pq.encode(zip_with(q, element_at(ctrLit, (cell + 1).cast("int")),
-      (a, b) => (a - b).cast("double") / lit(QuantizedDots.Scale)),
-      codebook, nCode)
-  }
+  /** The SQ8 int8 code of the unit vector (n68's verify side). */
+  def sq8Codes: Column = graft.functions.ScalarQuantization
+    .encode(Dedup.unitVector(col("embedding")), 64)
+
+  /** PQ codes of a double-vector column as (a column selected beside the
+    * cell, an encode added after it): raw codes encode in one pass; a
+    * residual (q − centroid(cell)) needs its row's cell, so `q` is
+    * selected first and enters the double encode kernel as (q − c)/2²⁰ —
+    * exact (an integer below 2²¹ over a power of two), so the kernel's
+    * floor(x·2²⁰) recovers q − c bit-for-bit. Shared by the batch scan
+    * and the codes index's ingest. */
+  def pqCodes(v: Column, quant: Quantizer): (Column, Option[Column]) =
+    quant.centroids match {
+      case None => (Pq.encode(v, quant.codebook, quant.nCode).as("codes"), None)
+      case Some(ctr) =>
+        val ctrLit = array(ctr.map(row => array(row.map(lit(_)): _*)): _*)
+        (qIntCol(v).as("q"), Some(Pq.encode(zip_with(col("q"),
+          element_at(ctrLit, (col("cell") + 1).cast("int")),
+          (a, b) => (a - b).cast("double") / lit(QuantizedDots.Scale)),
+          quant.codebook, quant.nCode)))
+    }
 
   /** ADC distance of `codes` to the quantized query `q`: one LUT for raw
     * codes; with centroids, one LUT per probed cell from the query's
     * residual IN that cell, dispatched by a when-chain on `cell`. */
-  def adcCol(q: Array[Long], cells: Seq[Long], codebook: Array[Long],
-             nCode: Int, ctr: Option[Array[Array[Long]]]): Column = {
+  private def adcCol(q: Array[Long], cells: Seq[Long],
+                     quant: Quantizer): Column = {
     def arm(r: Array[Long]): Column = ProductQuantization.adc(col("codes"),
-      ProductQuantization.distanceTable(r, codebook, Pq.SubDim, Pq.NSub, nCode),
-      Pq.NSub, nCode)
-    ctr match {
+      ProductQuantization.distanceTable(r, quant.codebook, Pq.SubDim,
+        Pq.NSub, quant.nCode), Pq.NSub, quant.nCode)
+    quant.centroids match {
       case None => arm(q)
       case Some(c) =>
         def cellArm(cell: Long) = arm(residualLocal(q, c(cell.toInt)))
@@ -346,85 +376,144 @@ object AnnLadder {
     out
   }
 
-  /** The codewords a spec names: the md5 construction, or Lloyd's on
-    * `emb` — over residuals against `ctr` (at `geo`) when given. */
-  def codebook(cbk: Codebook, emb: DataFrame,
-               ctr: Option[Array[Array[Long]]] = None,
-               geo: IvfGeometry = Ivf): Array[Long] = cbk match {
-    case Codebook.Md5 => Pq.md5Codebook
-    case Codebook.Trained(n) => ctr.fold(trainedPqCodebook(emb, n))(
-      trainedResidualCodebook(emb, _, geo, n))
+  /** The quantizer a spec's batch planner builds from `emb`: the md5
+    * codewords or Lloyd's on `emb` — over residuals against the cell
+    * centroids (at the spec's geometry) for residual codes. SQ8 and the
+    * exact join use none. */
+  def quantizer(spec: AnnSpec, emb: DataFrame): Quantizer = {
+    val (cbk, ctr, geo) = spec match {
+      case s: ScanSpec => (s.codebook,
+        if (s.residual) Some(cellCentroids(emb, s.geometry)) else None,
+        s.geometry)
+      case JoinSpec.PqCodes(c, _, _) => (c, None, Ivf)
+      case _ => (Codebook.Md5, None, Ivf)
+    }
+    Quantizer(cbk match {
+      case Codebook.Md5 => Pq.md5Codebook
+      case Codebook.Trained(n) => ctr.fold(trainedPqCodebook(emb, n))(
+        trainedResidualCodebook(emb, _, geo, n))
+    }, cbk.nCode, ctr)
   }
 
-  /** The scan planner (see [[ScanSpec]]). A null ADC distance is the
-    * kernels' defensive contract for a malformed row, and nulls sort FIRST
-    * ascending — so they are dropped before the cut. */
+  /** The embedding of row `id`. */
+  def vector(emb: DataFrame, id: Long): Seq[Float] =
+    emb.filter(col("vec_id") === id).select(col("embedding")).head()
+      .getSeq[Float](0)
+
+  /** The scan planner over a fresh encode of `emb` (see [[ScanSpec]]). */
   def scan(spec: ScanSpec, emb: DataFrame): DataFrame = {
-    val geo = spec.geometry
-    val nCode = spec.codebook.nCode
-    val ctr = if (spec.residual) Some(cellCentroids(emb, geo)) else None
-    val codebook = AnnLadder.codebook(spec.codebook, emb, ctr, geo)
+    val quant = quantizer(spec, emb)
     val v = doubles(col("embedding"))
-    val q = ProductQuantization.quantize(emb
-      .filter(col("vec_id") === QueryVecId).select(col("embedding")).head()
-      .getSeq[Float](0).map(_.toDouble))
-    val cells = geo.probeLocal(q)
-    // raw codes encode in the scan; residual codes after the cell filter
-    val (stored, residualCodes) = ctr match {
-      case None => (Pq.encode(v, codebook, nCode).as("codes"), None)
-      case Some(c) => (qIntCol(v).as("q"),
-        Some(residualCodesCol(col("q"), col("cell"), c, codebook, nCode)))
-    }
-    val cands = emb.select(col("vec_id"), col("label"), stored,
-        geo.cellCol(v).as("cell"))
-      .filter(col("cell").isInCollection(cells))
-      .filter(col("vec_id") =!= QueryVecId)
-    val shortlist = residualCodes.fold(cands)(cands.withColumn("codes", _))
-      .select(col("vec_id"), col("label"),
-        adcCol(q, cells, codebook, nCode, ctr).as("adist"))
+    val (codes, residual) = pqCodes(v, quant)
+    val cands = emb.select(col("vec_id"), col("label"), codes,
+      spec.geometry.cellCol(v).as("cell"))
+    scanTail(spec, emb, quant, _ => cands, residual,
+      vector(emb, QueryVecId), QueryVecId)
+  }
+
+  /** The scan planner over a committed PQ codes index: the read is
+    * listing-pruned to the probed cells' leaf dirs and ranks under the
+    * quantizer stored with the codes. The tail's `cell isin` filter
+    * re-applies the probe on pre-compaction parts (batch-sized,
+    * unbucketed by design) and is a no-op on pruned levels. */
+  def scan(spec: ScanSpec, index: CodesIndex, emb: DataFrame,
+           queryVec: Seq[Float], exclude: Long): DataFrame = {
+    require(index.layout == CodesLayout.Pq && spec.geometry == Ivf,
+      s"$spec cannot scan a ${index.layout} index at $Ivf")
+    scanTail(spec, emb, index.quantizer,
+      cells => index.codes(emb.sparkSession, Some(cells)), None, queryVec,
+      exclude)
+  }
+
+  /** The scan's one tail: the query's probe set and LUTs are integer
+    * driver arithmetic (no Spark job); the probed cells' members but
+    * `exclude` rank by ADC lookup sum, and the top-k is
+    * TakeOrderedAndProject — no shuffle. A null ADC distance is the
+    * kernels' defensive contract for a malformed row, and nulls sort
+    * FIRST ascending — so they are dropped before the cut. */
+  private def scanTail(spec: ScanSpec, emb: DataFrame, quant: Quantizer,
+                       codes: Seq[Long] => DataFrame,
+                       residual: Option[Column], queryVec: Seq[Float],
+                       exclude: Long): DataFrame = {
+    val q = ProductQuantization.quantize(queryVec.map(_.toDouble))
+    val cells = spec.geometry.probeLocal(q)
+    val cands = codes(cells).filter(col("cell").isInCollection(cells))
+      .filter(col("vec_id") =!= exclude)
+    // residual codes encode after the cell filter
+    val shortlist = residual.fold(cands)(cands.withColumn("codes", _))
+      .select(col("vec_id"), col("label"), adcCol(q, cells, quant).as("adist"))
       .filter(col("adist").isNotNull)
       .orderBy(col("adist"), col("vec_id"))
       .limit(if (spec.rerank) R else spec.k)
-    if (spec.rerank) exactRerank(emb, shortlist, QueryVecId, spec.k)
+    if (spec.rerank) exactRerank(emb, shortlist, exclude, spec.k)
     else shortlist
   }
 
-  /** The join planner (see [[JoinSpec]]). */
+  /** The join planner over a fresh encode of `emb` (see [[JoinSpec]]). */
   def join(spec: JoinSpec, emb: DataFrame): DataFrame = {
+    val quant = quantizer(spec, emb)
     val v = doubles(col("embedding"))
-    // probe-side column, index-side column, verify kernel, score, ascending
-    val (probe, indexed, verify, score, asc)
-        : (Column, Column, (Column, Column) => Column, String, Boolean) =
-      spec match {
-        case JoinSpec.Exact =>
-          (quantUnit(col("embedding")), quantUnit(col("embedding")),
-            (a, b) => graft.functions.DotProduct(a, b).cast("long"),
-            "score_q", false)
-        case JoinSpec.Sq8 =>
-          val codes = graft.functions.ScalarQuantization
-            .encode(Dedup.unitVector(col("embedding")), 64)
-          (codes, codes, graft.functions.ScalarQuantization.dot _, "sq8dot",
-            false)
-        case JoinSpec.PqCodes(cbk, ranking, _) =>
-          val cb = codebook(cbk, emb)
-          val codes = Pq.encode(v, cb, cbk.nCode)
-          ranking match {
-            case Ranking.Sdc =>
-              val table = if (cbk == Codebook.Md5) Pq.md5PairTable
-                          else Pq.pairTable(cb, cbk.nCode)
-              (codes, codes, (a, b) => ProductQuantization
-                .sdc(a, b, table, Pq.NSub, cbk.nCode), "sdist", true)
-            case Ranking.Adc =>
-              (qIntCol(v), codes, (a, b) => ProductQuantization
-                .adcq(a, b, cb, Pq.SubDim, Pq.NSub, cbk.nCode), "adist", true)
-          }
-      }
+    // probe-side column, index-side column
+    val (probe, indexed) = spec match {
+      case JoinSpec.Exact =>
+        (quantUnit(col("embedding")), quantUnit(col("embedding")))
+      case JoinSpec.Sq8 => (sq8Codes, sq8Codes)
+      case JoinSpec.PqCodes(_, ranking, _) =>
+        val codes = Pq.encode(v, quant.codebook, quant.nCode)
+        (if (ranking == Ranking.Adc) qIntCol(v) else codes, codes)
+    }
     val index = emb.select(col("vec_id").as("nbr"), indexed.as("un"),
       Ivf.cellCol(v).cast("int").as("cell"))
     val scored = emb.select(col("vec_id"), probe.as("u"),
       posexplode(Ivf.dotsCol(v)).as(Seq("cell", "score")))
-    val probed = Similarity.probeCut(scored, Ivf.nProbe)
-    val largeProbe = Similarity.cellJoinLargeProbe(emb)
+    joinTail(spec, emb, quant, Similarity.probeCut(scored, Ivf.nProbe), index,
+      Similarity.cellJoinLargeProbe(emb))
+  }
+
+  /** The join planner over a committed codes index: the probe side
+    * explodes the STORED probe sets (the cut happened at ingest — no
+    * TopKPerKey over a score stream) and both sides rank on stored codes
+    * under the index's quantizer. */
+  def join(spec: JoinSpec, index: CodesIndex, emb: DataFrame): DataFrame = {
+    val st = index.codes(emb.sparkSession, None)
+    val codes = col(index.layout.codes)
+    val probed = (spec, index.layout) match {
+      case (JoinSpec.Sq8, CodesLayout.Sq8) =>
+        st.select(col("vec_id"), codes.as("u"), explode(col("probed")).as("cell"))
+      // the probe arrays are INT, the PQ layout's cells BIGINT
+      case (JoinSpec.PqCodes(_, Ranking.Sdc, _), CodesLayout.Pq) =>
+        st.select(col("vec_id"), codes.as("u"), explode(col("probed")).as("pc"))
+          .select(col("vec_id"), col("u"), col("pc").cast("long").as("cell"))
+      case _ => throw new IllegalArgumentException(
+        s"$spec cannot rank the stored codes of a ${index.layout} index")
+    }
+    joinTail(spec, emb, index.quantizer, probed,
+      st.select(col("vec_id").as("nbr"), codes.as("un"), col("cell")),
+      largeProbe = false)
+  }
+
+  /** The join's one tail: the size-aware cell join, verify on the spec's
+    * kernel, and the per-query cut to k — or to R, re-ranked exactly on
+    * the shortlisted ids' vectors. */
+  private def joinTail(spec: JoinSpec, emb: DataFrame, quant: Quantizer,
+                       probed: DataFrame, index: DataFrame,
+                       largeProbe: Boolean): DataFrame = {
+    // verify kernel, score, ascending
+    val (verify, score, asc): ((Column, Column) => Column, String, Boolean) =
+      spec match {
+        case JoinSpec.Exact => ((a, b) =>
+          graft.functions.DotProduct(a, b).cast("long"), "score_q", false)
+        case JoinSpec.Sq8 =>
+          (graft.functions.ScalarQuantization.dot _, "sq8dot", false)
+        case JoinSpec.PqCodes(_, Ranking.Sdc, _) =>
+          val table = ProductQuantization.pairDistanceTable(quant.codebook,
+            Pq.SubDim, Pq.NSub, quant.nCode)
+          ((a, b) => ProductQuantization.sdc(a, b, table, Pq.NSub,
+            quant.nCode), "sdist", true)
+        case JoinSpec.PqCodes(_, Ranking.Adc, _) =>
+          ((a, b) => ProductQuantization.adcq(a, b, quant.codebook, Pq.SubDim,
+            Pq.NSub, quant.nCode), "adist", true)
+      }
     spec match {
       case JoinSpec.PqCodes(_, _, true) =>
         rerankJoinTail(emb, Similarity.verifyCut(probed, index, R, verify,
@@ -441,8 +530,7 @@ object AnnLadder {
     * integer quantized dot against the query's driver-side twin. */
   def exactRerank(emb: DataFrame, shortlist: DataFrame, queryVecId: Long,
                   k: Int): DataFrame = {
-    val qv = emb.filter(col("vec_id") === queryVecId)
-      .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+    val qv = vector(emb, queryVecId).map(_.toDouble).toArray
     // driver twin of quantUnit (same fold order: sequential sum of
     // squares, one division, floor(u·2^20))
     val nrm = math.sqrt(qv.map(x => x * x).sum)

@@ -13,10 +13,9 @@ import graft.queries.BatchQueries.QueryFn
  */
 object OpsQueries {
 
-  /** The IVF/PQ ladder rungs the streaming indexes converge to or train
-    * from (the full ladder table is on [[AnnSpec]]). */
+  /** The IVF/PQ ladder rungs the streaming rungs answer from an index
+    * (the full ladder table is on [[AnnSpec]]). */
   private val n61 = ScanSpec()
-  private val n68: JoinSpec = JoinSpec.Sq8
   private val n75 = ScanSpec(rerank = true)
   val n76 = ScanSpec(Codebook.Trained(Pq.NCodeHi), residual = true,
     rerank = true)
@@ -30,7 +29,7 @@ object OpsQueries {
     "n61_ivf_pq" -> n61,
     "n65_pq_knn_join" -> JoinSpec.PqCodes(Codebook.Md5, Ranking.Sdc, rerank = false),
     "n66_ivf_pq_trained" -> ScanSpec(Codebook.Trained(Pq.NCode)),
-    "n68_sq8_knn_join" -> n68,
+    "n68_sq8_knn_join" -> JoinSpec.Sq8,
     "n72_ivf_pq_residual" -> ScanSpec(residual = true),
     "n73_ivf_pq_residual_trained" ->
       ScanSpec(Codebook.Trained(Pq.NCodeHi), residual = true),
@@ -44,8 +43,24 @@ object OpsQueries {
       JoinSpec.PqCodes(Codebook.Trained(Pq.NCodeHi), Ranking.Adc, rerank = true),
   )
 
+  /** The streaming rungs as (spec, chunks): the spec answered from a codes
+    * index fed as a `chunks`-batch stream ([[CodesIndex.streamed]]). Index
+    * state == the batch encode per row, so each equals its batch rung and
+    * has the rung's oracle: verbatim for md5/SQ8, none for a trained
+    * quantizer (n79/n83 are gated by equality to the batch n76/n80 plans
+    * in `IncrementalAnnSpec`). */
+  private val streamed: Seq[(String, (AnnSpec, Int))] = Seq(
+    "n63_streaming_ivf_pq" -> (n61, 4),
+    "n71_streaming_sq8_knn" -> (JoinSpec.Sq8, 4),
+    "n77_streaming_ivf_pq_rerank" -> (n75, 4),
+    "n79_streaming_ivf_pq_trained" -> (n76, 4),
+    "n83_streaming_pq_knn_rerank_trained" -> (n80, 4),
+  )
+
   val queries: Map[String, QueryFn] =
-    ladder.map { case (n, s) => n -> s.query }.toMap ++ Map(
+    ladder.map { case (n, s) => n -> s.query }.toMap ++
+    streamed.map { case (n, (s, chunks)) =>
+      n -> CodesIndex.streamed(n, s, chunks) }.toMap ++ Map(
     "n01_dedup_fingerprint" -> (Dedup.exactDedupQuery _),
     "n02_dedup_minhash_lsh" -> (Dedup.minHashDedupQuery _),
     "n03_ngram_jaccard" -> (Dedup.ngramJaccardQuery _),
@@ -110,8 +125,6 @@ object OpsQueries {
     "n59_media_pipeline" -> (Multimodal.mediaPipelineQuery _),
     // per-domain quota on the TopKPerKey whole-operator
     "n62_domain_cap" -> ((s, d) => Pipeline.domainCapQuery(s, d)),
-    // the incremental twin of n61: foreachBatch encode, cell-bucketed levels
-    "n63_streaming_ivf_pq" -> ((s, d) => IncrementalAnn.streamingIvfPqQuery(s, d)),
     // split-aware decontamination: n02 near-dup pairs straddling the n14 split
     "n64_split_leakage" -> (Pipeline.splitLeakageQuery _),
     // the incremental twin of n62: batch-local TopKPerKey cuts appended,
@@ -125,32 +138,14 @@ object OpsQueries {
     // the per-source dataset card: n10/n09/n01's shared expressions
     // rolled up into the corpus report a training run publishes
     "n70_dataset_card" -> (Corpus.datasetCardQuery _),
-    // the incremental twin of n68: SQ8 codes + precomputed probe sets
-    // ingested per batch, cell-bucketed levels — the ×8-narrower state
-    "n71_streaming_sq8_knn" ->
-      ((s, d) => IncrementalSq8.streamingSq8KnnQuery(s, d)),
     // the n70 card + the near-dup rate from the n38 manifest verdicts,
     // reduced to S per-source counts before a broadcast join
     "n74_card_neardup" -> (Corpus.datasetCardNearDupQuery _),
-    // IVFADC-R on streaming state: codes shortlist from the pruned n63
-    // index read, vectors fetched from the source table by id
-    "n77_streaming_ivf_pq_rerank" ->
-      ((s, d) => IncrementalAnn.streamingIvfPqRerankQuery(s, d)),
-    // the n77 ingest on the TRAINED residual-256 quantizer (persisted
-    // beside the state for restart stability): the n76 quality rung
-    // served from streaming state — rows-only, equality-to-n76 gated
-    "n79_streaming_ivf_pq_trained" ->
-      ((s, d) => IncrementalAnn.streamingIvfPqTrainedRerankQuery(s, d)),
-    // the n80 trained two-stage join served from streaming state: stored
-    // probe sets + stored codes (raw trained codebook as a zero-centroid
-    // quantizer), SDC shortlist, exact re-rank fetch from the source
-    // table — rows-only (trained codebook), equality-to-n80 gated
-    "n83_streaming_pq_knn_rerank_trained" ->
-      ((s, d) => IncrementalAnn.streamingPqKnnRerankTrainedQuery(s, d)),
   )
 
   val oracles: Map[String, String] =
-    ladder.flatMap { case (n, s) => s.oracle.map(n -> _) }.toMap ++ Map(
+    (ladder ++ streamed.map { case (n, (s, _)) => n -> s })
+      .flatMap { case (n, s) => s.oracle.map(n -> _) }.toMap ++ Map(
     "n01_dedup_fingerprint" -> Dedup.exactDedupOracle,
     "n02_dedup_minhash_lsh" -> Dedup.jaccardPairsOracle,
     "n03_ngram_jaccard" -> Dedup.jaccardPairsOracle,
@@ -220,9 +215,6 @@ object OpsQueries {
     "n58_streaming_media_clusters" -> Multimodal.streamingMediaClustersOracle,
     "n59_media_pipeline" -> Multimodal.mediaPipelineOracle,
     "n62_domain_cap" -> Pipeline.domainCapOracle,
-    // encode/cell are per-row deterministic ⇒ the incremental index equals
-    // the batch n61 index exactly for any batching: the batch oracle verbatim
-    "n63_streaming_ivf_pq" -> n61.oracle.get,
     "n64_split_leakage" -> Pipeline.splitLeakageOracle,
     // bounded selection is associative ⇒ the incremental quota equals the
     // batch n62 answer exactly for any batching: the batch oracle verbatim
@@ -232,15 +224,7 @@ object OpsQueries {
     "n69_streaming_decontam" -> Corpus.bloomDecontamOracle,
     // integer counts/sums + two exact final divisions: hash-matched
     "n70_dataset_card" -> Corpus.datasetCardOracle,
-    // codes/cells/probe sets are per-row functions ⇒ the incremental
-    // index equals the batch n68 join for any batching: oracle verbatim
-    "n71_streaming_sq8_knn" -> n68.oracle.get,
     // the n70 and n38 oracles composed as CTEs: hash-matched
     "n74_card_neardup" -> Corpus.datasetCardNearDupOracle,
-    // index state == batch encode per row (the n63 theorem) ⇒ the
-    // streaming two-stage query equals batch n75: oracle verbatim
-    "n77_streaming_ivf_pq_rerank" -> n75.oracle.get,
-    // n79/n83 omitted: trained quantizers (rows-only), bounded by
-    // IncrementalAnnSpec's equality to the batch n76/n80 plans
   )
 }

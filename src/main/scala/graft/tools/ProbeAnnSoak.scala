@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.IncrementalIvfPqIndex
+import graft.ops.{AnnLadder, CodesIndex, CodesLayout, ScanSpec}
 
 /**
  * Dev tool: long-horizon cost curve of the n63 incremental IVF-PQ index
@@ -11,7 +11,7 @@ import graft.ops.IncrementalIvfPqIndex
  * counts and a 50-batch timing ratio; this probe runs the index to a
  * 500-batch horizon — 50 maintenance passes, the cell-bucketed level
  * chain bin-packed over 12 full tiering cycles — and prints the mean
- * per-batch cost and the probed `topK` read cost per 50-batch window.
+ * per-batch cost and the probed n61 scan's read cost per 50-batch window.
  * The flat-cost claim is structural here (per-batch work never reads
  * existing state — codes are write-once per-row functions), so the
  * horizon specifically guards the LISTING/COMPACTION path at depth:
@@ -27,7 +27,7 @@ object ProbeAnnSoak {
     val cadence = args.lift(2).map(_.toInt).getOrElse(10)
     val spark = Sessions.local(32, logLevel = "ERROR")
     val base = graft.queries.Tables.scratchDir("annsoak")
-    val index = new IncrementalIvfPqIndex(base.resolve("state"))
+    val index = new CodesIndex(base.resolve("state"), CodesLayout.Pq)
     val emb = graft.queries.Tables.embeddings(spark, sfDir).persist()
     emb.count()
     val qv = emb.filter(col("vec_id") === 0L)
@@ -43,7 +43,7 @@ object ProbeAnnSoak {
       batchSum += (System.nanoTime() - t0) / 1e9
       if ((j + 1) % window == 0) {
         val tQ0 = System.nanoTime()
-        val topRows = index.topK(spark, qv, excludeVecId = 0L).count()
+        val topRows = AnnLadder.scan(ScanSpec(), index, emb, qv, 0L).count()
         val tQ = (System.nanoTime() - tQ0) / 1e9
         println(f"ANNSOAK batch=${j + 1}%4d mean_batch=${batchSum / window}%.3f s " +
           f"topk_read=$tQ%.3f s topk_rows=$topRows")

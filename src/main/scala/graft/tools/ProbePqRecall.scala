@@ -107,29 +107,12 @@ object ProbePqRecall {
     // the SHIPPED n66 construction: hash-sampled, capped, deterministic
     val cbTrained = AnnLadder.trainedPqCodebook(emb, Pq.NCode)
 
-    // residual machinery (round-15 verdict #2): integer per-cell member
-    // means (truncating division — the shipped `cellCentroids` rule),
-    // residuals against the OWN cell, and a codebook trained on residuals
-    val nList = geo.nlist
-    val dim = vecs.head.length
-    val ctr = Array.ofDim[Long](nList, dim)
-    val cnt = new Array[Long](nList)
-    (0 until n).foreach { j =>
-      val c = cells(j).toInt
-      cnt(c) += 1
-      var i = 0
-      while (i < dim) { ctr(c)(i) += qs(j)(i); i += 1 }
-    }
-    (0 until nList).foreach { c =>
-      if (cnt(c) > 0) {
-        var i = 0
-        while (i < dim) { ctr(c)(i) /= cnt(c); i += 1 }
-      }
-    }
-    val resids = (0 until n).map { j =>
-      val c = cells(j).toInt
-      Array.tabulate(dim)(i => qs(j)(i) - ctr(c)(i))
-    }.toArray
+    // residual machinery (round-15 verdict #2): the shipped integer
+    // per-cell member means, residuals against the OWN cell, and a
+    // codebook trained on residuals
+    val ctr = AnnLadder.cellCentroids(emb, geo)
+    val resids = (0 until n).map(j =>
+      AnnLadder.residualLocal(qs(j), ctr(cells(j).toInt))).toArray
     val cbTrainedRes = ProductQuantization
       .trainCodebook(resids, subDim, nSub, nCode)
     // the canonical IVFADC code resolution (Jégou et al. use k* = 256
@@ -178,19 +161,8 @@ object ProbePqRecall {
       // residual ranking: the query's LUT is rebuilt per probed cell from
       // its residual IN that cell; a candidate ranks under its own cell's
       // LUT (Jégou et al. §IV-A — asymmetric distance on residuals)
-      def adistRes(codes: Array[Array[Int]], cb: Array[Long], nc: Int): Array[Double] = {
-        val lutByCell = probed.toSeq.map { c =>
-          val r = Array.tabulate(qs(self).length)(i => qs(self)(i) - ctr(c.toInt)(i))
-          c -> ProductQuantization.distanceTable(r, cb, subDim, nSub, nc)
-        }.toMap
-        Array.tabulate(n) { j =>
-          lutByCell.get(cells(j)) match {
-            case Some(lut) =>
-              codes(j).zipWithIndex.map { case (c, m) => lut(m * nc + c) }.sum.toDouble
-            case None => Double.NaN // unprobed cell: excluded by inProbe anyway
-          }
-        }
-      }
+      def adistRes(codes: Array[Array[Int]], cb: Array[Long], nc: Int) =
+        adistResFor(probed, codes, cb, nc, qs(self), ctr, cells, n)
       rMd5Res += recall(topIdx(adistRes(codesMd5Res, cbMd5, nCode), self, asc = true, inProbe))
       rTrainedRes += recall(topIdx(adistRes(codesTrRes, cbTrainedRes, nCode), self, asc = true, inProbe))
       val lut256 = ProductQuantization.distanceTable(qs(self), cbTr256, subDim, nSub, nCode256)
@@ -233,17 +205,8 @@ object ProbePqRecall {
           def recallS(got: Seq[Int]): Double =
             got.toSet.intersect(exact).size.toDouble / exact.size
           rIvfS += recallS(topIdx(cos, self, asc = false, inP))
-          val lutByCell = probedS.toSeq.map { c =>
-            c -> ProductQuantization.distanceTable(
-              Array.tabulate(qs(self).length)(i => qs(self)(i) - ctr(c.toInt)(i)),
-              cbTrRes256, subDim, nSub, nCode256)
-          }.toMap
-          val aRes = Array.tabulate(n) { j =>
-            lutByCell.get(cells(j)).fold(Double.NaN) { lut =>
-              codesTrRes256(j).zipWithIndex
-                .map { case (c, m) => lut(m * nCode256 + c) }.sum.toDouble
-            }
-          }
+          val aRes = adistResFor(probedS, codesTrRes256, cbTrRes256, nCode256,
+            qs(self), ctr, cells, n)
           val shortlist = (0 until n)
             .filter(j => j != self && inP(j) && !aRes(j).isNaN)
             .sortBy(j => (aRes(j), ids(j))).take(rerankR)
@@ -388,25 +351,9 @@ object ProbePqRecall {
     args.find(_.startsWith("nlist=")).map(_.drop(6).toInt).foreach { nlistG =>
       val cellsG = qs.map(q =>
         IvfGeometry(nlistG, 1).probeLocal(q).head)
-      val dim = vecs.head.length
-      val ctrG = Array.ofDim[Long](nlistG, dim)
-      val cntG = new Array[Long](nlistG)
-      (0 until n).foreach { j =>
-        val c = cellsG(j).toInt
-        cntG(c) += 1
-        var i = 0
-        while (i < dim) { ctrG(c)(i) += qs(j)(i); i += 1 }
-      }
-      (0 until nlistG).foreach { c =>
-        if (cntG(c) > 0) {
-          var i = 0
-          while (i < dim) { ctrG(c)(i) /= cntG(c); i += 1 }
-        }
-      }
-      val residsG = (0 until n).map { j =>
-        val c = cellsG(j).toInt
-        Array.tabulate(dim)(i => qs(j)(i) - ctrG(c)(i))
-      }.toArray
+      val ctrG = AnnLadder.cellCentroids(emb, IvfGeometry(nlistG, 1))
+      val residsG = (0 until n).map(j =>
+        AnnLadder.residualLocal(qs(j), ctrG(cellsG(j).toInt))).toArray
       val cbRawG = ProductQuantization.trainCodebook(qs, subDim, nSub, nCode256)
       val cbResG = ProductQuantization.trainCodebook(residsG, subDim, nSub, nCode256)
       val codesRawG = qs.map(q =>
@@ -467,8 +414,8 @@ object ProbePqRecall {
                           n: Int): Array[Double] = {
     val (subDim, nSub) = (Pq.SubDim, Pq.NSub)
     val lutByCell = probed.toSeq.map { c =>
-      val r = Array.tabulate(q.length)(i => q(i) - ctr(c.toInt)(i))
-      c -> ProductQuantization.distanceTable(r, cb, subDim, nSub, nc)
+      c -> ProductQuantization.distanceTable(
+        AnnLadder.residualLocal(q, ctr(c.toInt)), cb, subDim, nSub, nc)
     }.toMap
     Array.tabulate(n) { j =>
       lutByCell.get(cells(j)) match {

@@ -141,7 +141,7 @@ class IncrementalSoakSpec extends AnyFunSuite with graft.SoakTagged {
     // row-identical to the batch n61 encode
     val base = graft.SparkTestSession.tmpDir("n63-soak")
     val root = base.resolve("state")
-    val index = new IncrementalIvfPqIndex(root)
+    val index = new CodesIndex(root, CodesLayout.Pq)
     val emb = graft.queries.Tables.embeddings(spark, T.sf0001).persist()
 
     val batchSecs = new scala.collection.mutable.ArrayBuffer[Double]
@@ -183,13 +183,13 @@ class IncrementalSoakSpec extends AnyFunSuite with graft.SoakTagged {
         Pq.encode(v, Pq.md5Codebook, Pq.NCode).as("codes"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2)))
       .sortBy(_._1).toSeq
-    val got = index.debugCodes(spark).select("vec_id", "cell", "codes")
+    val got = index.codes(spark, None).select("vec_id", "cell", "codes")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2)))
       .sortBy(_._1).toSeq
     assert(got === want, "soaked codes diverged from the batch encode")
     val qv = emb.filter(col("vec_id") === 0L)
       .select("embedding").head().getSeq[Float](0)
-    val topGot = index.topK(spark, qv, excludeVecId = 0L)
+    val topGot = AnnLadder.scan(ScanSpec(), index, emb, qv, 0L)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
     val topWant = ScanSpec().plan(emb)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq

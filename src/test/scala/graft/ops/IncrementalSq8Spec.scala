@@ -20,7 +20,7 @@ class IncrementalSq8Spec extends AnyFunSuite {
   private def emb = Tables.embeddings(spark, T.sf0001)
 
   test("streaming index answers the n68 join identically to the batch plan") {
-    val got = IncrementalSq8.streamingSq8KnnQuery(spark, T.sf0001)
+    val got = OpsQueries.queries("n71_streaming_sq8_knn")(spark, T.sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     val want = JoinSpec.Sq8.plan(emb)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
@@ -30,7 +30,7 @@ class IncrementalSq8Spec extends AnyFunSuite {
 
   test("ingest-time probe sets equal the batch TopKPerKey probe cut; state is row-identical; replay no-op") {
     val base = T.tmpDir("sq8")
-    val index = new IncrementalSq8Index(base.resolve("state"))
+    val index = new CodesIndex(base.resolve("state"), CodesLayout.Sq8)
     (0 until 3).foreach { b =>
       index.processBatch(emb.filter(pmod(col("vec_id"), lit(3)) === b), b.toLong)
     }
@@ -55,7 +55,7 @@ class IncrementalSq8Spec extends AnyFunSuite {
         r.getLong(0) -> IvfGeometry.Default.probeLocal(q, nProbe).map(_.toInt)
       }.sortBy(_._1)
 
-    def stateNow() = index.debugCodes(spark)
+    def stateNow() = index.codes(spark, None)
       .select("vec_id", "cell", "probed", "code").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2),
         r.getAs[Array[Byte]](3).toSeq))
@@ -74,18 +74,18 @@ class IncrementalSq8Spec extends AnyFunSuite {
   }
 
   test("the index join plans ONE TopKPerKey and one fewer Exchange than the batch join") {
-    // the structural form of the measured 0.53x (ProbeSq8IndexJoin,
-    // BASELINE r16): the batch n68 pays a TopKPerKey probe cut (hash-
+    // the structural form of the measured 0.53x (BASELINE r16, "n71
+    // index join vs the batch n68 join"): the batch n68 pays a TopKPerKey probe cut (hash-
     // partition the n x nlist score stream) BEFORE the cell join; the
     // index did that cut at ingest, so its join plans exactly one
     // TopKPerKey (the k-cut) and one fewer Exchange
     val base = T.tmpDir("sq8-plan")
-    val index = new IncrementalSq8Index(base.resolve("state"))
+    val index = new CodesIndex(base.resolve("state"), CodesLayout.Sq8)
     index.processBatch(emb, 0L)
     index.maintain(spark)
     def counts(p: String): (Int, Int) =
       ("TopKPerKey".r.findAllIn(p).length, "Exchange".r.findAllIn(p).length)
-    val (idxTop, idxEx) = counts(index.knnJoin(spark)
+    val (idxTop, idxEx) = counts(JoinSpec.Sq8.plan(index, emb)
       .queryExecution.executedPlan.toString)
     val (batTop, batEx) = counts(JoinSpec.Sq8.plan(emb)
       .queryExecution.executedPlan.toString)
@@ -103,7 +103,7 @@ class IncrementalSq8Spec extends AnyFunSuite {
     // framing/encoding narrows the raw 512/64 ratio; the gate is the
     // honest measured floor, the measured value lands in BASELINE.md.
     val base = T.tmpDir("sq8-size")
-    val index = new IncrementalSq8Index(base.resolve("state"))
+    val index = new CodesIndex(base.resolve("state"), CodesLayout.Sq8)
     index.processBatch(emb, 0L)
     index.maintain(spark)
     val floatDir = base.resolve("float-twin")
@@ -128,7 +128,7 @@ class IncrementalSq8Spec extends AnyFunSuite {
 
   test("a planted near-duplicate arriving in a LATER batch surfaces in the index join") {
     val base = T.tmpDir("sq8-late")
-    val index = new IncrementalSq8Index(base.resolve("state"))
+    val index = new CodesIndex(base.resolve("state"), CodesLayout.Sq8)
     val sample = emb.filter(pmod(xxhash64(col("vec_id")), lit(10)) === 0)
     val copies = Dedup.plantedCopies(sample)
       .select(col("vec_id"),
@@ -137,7 +137,7 @@ class IncrementalSq8Spec extends AnyFunSuite {
     index.processBatch(emb, 0L)
     index.processBatch(copies, 1L)
     index.maintain(spark)
-    val top = index.knnJoin(spark, k = 3).collect()
+    val top = JoinSpec.Sq8.plan(index, emb).collect()
       .groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getLong(2)).toSet }
     val origs = sample.select("vec_id").collect().map(_.getLong(0))
     val hits = origs.count(id => top.get(id).exists(_.contains(id + Dedup.PlantOffset)))

@@ -214,14 +214,14 @@ class PqRecallSpec extends AnyFunSuite {
         transform(col("v"), x => x.cast("float")).as("embedding"),
         lit(0).as("label"))
     val base = T.tmpDir("pq-recall")
-    val index = new IncrementalIvfPqIndex(base.resolve("state"))
+    val index = new CodesIndex(base.resolve("state"), CodesLayout.Pq)
     index.processBatch(emb, 0L)
     index.processBatch(copies, 1L)   // partners arrive after the corpus
     index.maintain(spark)
     val origs = sample.select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1))
     val hits = origs.count { case (id, vec) =>
-      index.topK(spark, vec, k = 3, excludeVecId = id)
+      AnnLadder.scan(ScanSpec(k = 3), index, emb, vec, id)
         .collect().exists(_.getLong(0) == id + Dedup.PlantOffset)
     }
     val recall = hits.toDouble / origs.length
