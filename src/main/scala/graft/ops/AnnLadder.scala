@@ -445,7 +445,7 @@ object AnnLadder {
       .filter(col("adist").isNotNull)
       .orderBy(col("adist"), col("vec_id"))
       .limit(if (spec.rerank) R else spec.k)
-    if (spec.rerank) exactRerank(emb, shortlist, exclude, spec.k)
+    if (spec.rerank) exactRerank(emb, shortlist, queryVec, spec.k)
     else shortlist
   }
 
@@ -528,9 +528,9 @@ object AnnLadder {
     * the R shortlisted vectors (a broadcast-semi of R ids — R point lookups
     * at scale, never a second corpus scan) and re-score with the exact
     * integer quantized dot against the query's driver-side twin. */
-  def exactRerank(emb: DataFrame, shortlist: DataFrame, queryVecId: Long,
+  def exactRerank(emb: DataFrame, shortlist: DataFrame, queryVec: Seq[Float],
                   k: Int): DataFrame = {
-    val qv = vector(emb, queryVecId).map(_.toDouble).toArray
+    val qv = queryVec.map(_.toDouble).toArray
     // driver twin of quantUnit (same fold order: sequential sum of
     // squares, one division, floor(u·2^20))
     val nrm = math.sqrt(qv.map(x => x * x).sum)
