@@ -579,20 +579,7 @@ object AnnLadder {
  */
 object AnnOracle {
   import AnnLadder.{JoinK, QueryVecId, R}
-
-  private type Cte = (String, String)
-
-  private def sql(ctes: Seq[Cte], tail: String): String =
-    ctes.map { case (n, body) => s"$n AS (\n$body\n)" }
-      .mkString("WITH ", ", ", "\n") + tail
-
-  private def dirs(nlist: Int): Cte = "dirs" ->
-    s"""|  SELECT c, i,
-        |    CAST(list_sum([(strpos('0123456789abcdef',
-        |        substr(md5('c_' || c || '_' || i), d + 1, 1)) - 1)
-        |        * (1 << (4 * (7 - d))) for d in range(8)]) AS BIGINT)
-        |      - 2147483648 AS comp
-        |  FROM range($nlist) t(c), range(64) s(i)""".stripMargin
+  import OracleSql._
 
   private val cb: Cte = "cb" ->
     s"""|  SELECT m, c, i,
@@ -602,43 +589,19 @@ object AnnOracle {
         |      - 524288 AS comp
         |  FROM range(${Pq.NSub}) t(m), range(${Pq.NCode}) u(c), range(${Pq.SubDim}) s(i)""".stripMargin
 
-  private val ex: Cte = "ex" ->
-    """|  SELECT vec_id, CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS i,
-       |    unnest(CAST(embedding AS DOUBLE[])) AS x
-       |  FROM embeddings""".stripMargin
-
   private val exq: Cte = "exq" ->
     s"""|  SELECT vec_id, i, i // ${Pq.SubDim} AS m, i % ${Pq.SubDim} AS si,
         |    CAST(floor(x * 1048576.0) AS BIGINT) AS q
         |  FROM ex""".stripMargin
-
-  /** Cell dots straight off `ex` (the float joins) or off `exq` (PQ). */
-  private val dots: Cte = "dots" ->
-    """|  SELECT vec_id, c,
-       |    SUM(CAST(floor(x * 1048576.0) AS BIGINT) * comp) AS dot
-       |  FROM ex JOIN dirs USING (i)
-       |  GROUP BY 1, 2""".stripMargin
 
   private val dotsQ: Cte = "dots" ->
     """|  SELECT exq.vec_id, dirs.c, SUM(exq.q * dirs.comp) AS dot
        |  FROM exq JOIN dirs ON dirs.i = exq.i
        |  GROUP BY 1, 2""".stripMargin
 
-  private def firstBy(order: String, cut: String,
-                      by: String = "vec_id"): String =
-    s"""|  QUALIFY ROW_NUMBER() OVER (PARTITION BY $by
-        |                             ORDER BY $order) $cut""".stripMargin
-
-  private val assigned: Cte = "assigned" ->
-    s"  SELECT vec_id, c AS cell FROM dots\n${firstBy("dot DESC, c", "= 1")}"
-
-  /** The join's per-row probe cut and the scan's probe of vec 0. */
+  /** The join's per-row probe cut. */
   private def probedAll(nProbe: Int): Cte = "probed" ->
     s"  SELECT vec_id, c AS cell FROM dots\n${firstBy("dot DESC, c", s"<= $nProbe")}"
-
-  private def probedQuery(nProbe: Int): Cte = "probed" ->
-    s"""|  SELECT c AS cell FROM dots WHERE vec_id = $QueryVecId
-        |  ORDER BY dot DESC, c LIMIT $nProbe""".stripMargin
 
   /** Every (row, subspace, codeword) integer squared distance of `t.x`. */
   private def d2(t: String, key: String, x: String): String =
@@ -656,16 +619,10 @@ object AnnOracle {
        |  FROM cb a JOIN cb b ON a.m = b.m AND a.i = b.i
        |  GROUP BY 1, 2, 3""".stripMargin
 
-  private val exd: Cte = "exd" ->
-    """|  SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS v,
-       |    generate_subscripts(embedding, 1) AS i
-       |  FROM embeddings""".stripMargin
-
-  private val nr: Cte = "nr" ->
-    "  SELECT vec_id, SQRT(SUM(v * v)) AS nrm FROM exd GROUP BY vec_id"
-
-  private val uv: Cte = "uv" ->
-    "  SELECT exd.vec_id, v / nrm AS u, i FROM exd JOIN nr USING (vec_id)"
+  /** The float components (`exd`), norms (`nr`) and unit components (`uv`)
+    * of the re-rank and exact joins. */
+  private val units: Seq[Cte] =
+    ("exd" -> embeddingValues) +: unitVectors("exd", "nr", "uv")
 
   private val uvSq8: Cte = "uv" ->
     """|  SELECT exd.vec_id,
@@ -696,8 +653,8 @@ object AnnOracle {
     case Codebook.Trained(_) => None
     case Codebook.Md5 =>
       val g = spec.geometry
-      val head = Seq(dirs(g.nlist), cb, ex, exq, dotsQ, assigned,
-        probedQuery(g.nProbe))
+      val head = Seq(planes("dirs", "c", g.nlist), cb, components, exq, dotsQ,
+        assigned, probedQuery(QueryVecId, g.nProbe))
       val coded = if (!spec.residual) Seq("d2" -> d2("exq", "vec_id", "q"),
         codes, "lut" -> s"  SELECT m, c, d2 FROM d2 WHERE vec_id = $QueryVecId",
         "adist" ->
@@ -742,8 +699,7 @@ object AnnOracle {
         "JOIN embeddings e ON e.vec_id = a.vec_id"), spec.k).mkString("\n")))
       else Some(sql(head ++ coded ++ Seq(
         "short" -> ranked(Seq("SELECT a.vec_id", "FROM adist a"), R)
-          .map("  " + _).mkString("\n"),
-        exd, nr, uv,
+          .map("  " + _).mkString("\n")) ++ units :+ (
         "qdot" ->
           s"""|  SELECT s.vec_id,
               |${qdot("qdot")}
@@ -773,9 +729,10 @@ object AnnOracle {
           |FROM r
           |WHERE rank <= $JoinK
           |ORDER BY vec_id, rank""".stripMargin))
-    val floatHead = Seq(dirs(g.nlist), ex, dots, assigned, probedAll(g.nProbe))
+    val floatHead = Seq(planes("dirs", "c", g.nlist), components, dots(),
+      assigned, probedAll(g.nProbe))
     spec match {
-      case JoinSpec.Exact => query(floatHead ++ Seq(exd, nr, uv, pairs,
+      case JoinSpec.Exact => query(floatHead ++ units ++ Seq(pairs,
         "s" ->
           s"""|  SELECT p.vec_id, p.nbr,
               |    -- outer BIGINT cast: DuckDB SUM(BIGINT) yields HUGEINT, which
@@ -783,7 +740,7 @@ object AnnOracle {
               |${qdot("score_q")}
               |${uvPairs("pairs", "p")}""".stripMargin,
         rank("score_q", "score_q DESC", "s")), "score_q")
-      case JoinSpec.Sq8 => query(floatHead ++ Seq(exd, nr, uvSq8, pairs,
+      case JoinSpec.Sq8 => query(floatHead ++ units.init ++ Seq(uvSq8, pairs,
         "s" ->
           s"""|  SELECT p.vec_id, p.nbr,
               |    CAST(SUM(a.q * b.q) AS BIGINT) AS sq8dot
@@ -810,12 +767,13 @@ object AnnOracle {
                |  JOIN d2 ON d2.vec_id = p.vec_id AND d2.m = cn.m AND d2.c = cn.code
                |  GROUP BY 1, 2""".stripMargin))
         }
-        val coded = Seq(dirs(g.nlist), cb, ex, exq, dotsQ, assigned,
-          probedAll(g.nProbe), "d2" -> d2("exq", "vec_id", "q"), codes) ++ scored
+        val coded = Seq(planes("dirs", "c", g.nlist), cb, components, exq, dotsQ,
+          assigned, probedAll(g.nProbe), "d2" -> d2("exq", "vec_id", "q"),
+          codes) ++ scored
         if (!rerank) query(coded :+ rank(score, score, "s"), score)
         else query(coded ++ Seq(
-          "short" -> s"  SELECT vec_id, nbr FROM s\n${firstBy(s"$score, nbr", s"<= $R")}",
-          exd, nr, uv,
+          "short" -> s"  SELECT vec_id, nbr FROM s\n${firstBy(s"$score, nbr", s"<= $R")}")
+          ++ units ++ Seq(
           "qd" -> s"  SELECT sh.vec_id, sh.nbr,\n${qdot("qdot")}\n${uvPairs("short", "sh")}",
           rank("qdot", "qdot DESC", "qd")), "qdot")
     }

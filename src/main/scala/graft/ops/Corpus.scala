@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.Tables._
+import OracleSql._
 
 /**
  * Corpus-preparation operators for LLM training pipelines (north-star
@@ -20,6 +21,12 @@ import graft.queries.Tables._
  * single per-source count aggregation.
  */
 object Corpus {
+
+  /** The word n-gram size of the benchmark-contamination screens (n20,
+    * n44, n69). */
+  final val BenchGram = 3
+  /** The per-source (n31) and per-stratum (n49) sample budget. */
+  final val MixBudget = 100
 
   // ---------------------------------------------------------- n19 chunking
   /**
@@ -46,20 +53,19 @@ object Corpus {
       .orderBy("doc_id", "chunk_id")
   }
 
-  def chunkingOracle(window: Int = 32, stride: Int = 16): String =
-    s"""WITH w AS (
-       |  SELECT doc_id, string_split(text, ' ') AS words
-       |  FROM documents WHERE doc_id < 100
-       |), s AS (
-       |  SELECT doc_id, words, unnest(range(0, len(words), $stride)) AS start
-       |  FROM w
-       |)
-       |SELECT doc_id,
-       |  start // $stride AS chunk_id,
-       |  CAST(least($window, len(words) - start) AS BIGINT) AS n_tokens,
-       |  md5(array_to_string(list_slice(words, start + 1, start + $window), ' ')) AS chunk_digest
-       |FROM s
-       |ORDER BY doc_id, chunk_id""".stripMargin
+  def chunkingOracle(window: Int = 32, stride: Int = 16): String = sql(Seq(
+    "w" ->
+      """|  SELECT doc_id, string_split(text, ' ') AS words
+         |  FROM documents WHERE doc_id < 100""".stripMargin,
+    "s" ->
+      s"""|  SELECT doc_id, words, unnest(range(0, len(words), $stride)) AS start
+          |  FROM w""".stripMargin),
+    s"""|SELECT doc_id,
+        |  start // $stride AS chunk_id,
+        |  CAST(least($window, len(words) - start) AS BIGINT) AS n_tokens,
+        |  md5(array_to_string(list_slice(words, start + 1, start + $window), ' ')) AS chunk_digest
+        |FROM s
+        |ORDER BY doc_id, chunk_id""".stripMargin)
 
   // ----------------------------------------------- n20 contamination check
   /**
@@ -74,7 +80,7 @@ object Corpus {
    */
   def contaminationQuery(spark: SparkSession, dir: String): DataFrame = {
     val grams = documents(spark, dir)
-      .select(col("doc_id"), explode(Dedup.wordShingles(col("text"), 3)).as("gram"))
+      .select(col("doc_id"), explode(Dedup.wordShingles(col("text"), BenchGram)).as("gram"))
     val bench = grams.filter(col("doc_id") % 101 === 0)
       .select(col("doc_id").as("bench_id"), col("gram"))
     grams.filter(col("doc_id") % 101 =!= 0)
@@ -87,21 +93,22 @@ object Corpus {
 
   /** 3-gram sets per document, distinct, tokens lowercased split on
     * whitespace — mirrors [[Dedup.wordShingles]]. */
-  val contaminationOracle: String =
-    """WITH g AS (
-      |  SELECT DISTINCT doc_id, array_to_string(list_slice(words, i, i + 2), ' ') AS gram
-      |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS words FROM documents),
-      |       LATERAL (SELECT unnest(range(1, len(words) - 3 + 2)) AS i)
-      |)
-      |SELECT c.doc_id,
-      |  COUNT(DISTINCT c.gram) AS n_shared_grams,
-      |  COUNT(DISTINCT b.bench_id) AS n_bench_docs
-      |FROM g c
-      |JOIN (SELECT doc_id AS bench_id, gram FROM g WHERE doc_id % 101 = 0) b
-      |  ON c.gram = b.gram
-      |WHERE c.doc_id % 101 <> 0
-      |GROUP BY c.doc_id
-      |ORDER BY c.doc_id""".stripMargin
+  val contaminationOracle: String = sql(Seq(benchGrams),
+    """|SELECT c.doc_id,
+       |  COUNT(DISTINCT c.gram) AS n_shared_grams,
+       |  COUNT(DISTINCT b.bench_id) AS n_bench_docs
+       |FROM g c
+       |JOIN (SELECT doc_id AS bench_id, gram FROM g WHERE doc_id % 101 = 0) b
+       |  ON c.gram = b.gram
+       |WHERE c.doc_id % 101 <> 0
+       |GROUP BY c.doc_id
+       |ORDER BY c.doc_id""".stripMargin)
+
+  /** Each document's distinct [[BenchGram]]-word grams, as text. */
+  private def benchGrams: Cte = "g" ->
+    s"""|  SELECT DISTINCT doc_id, array_to_string(list_slice(words, i, i + ${BenchGram - 1}), ' ') AS gram
+        |  FROM (SELECT doc_id, $splitWords AS words FROM documents),
+        |       LATERAL (SELECT unnest(range(1, len(words) - $BenchGram + 2)) AS i)""".stripMargin
 
   // ------------------------------------------------ n21 vocabulary coverage
   /**
@@ -128,20 +135,19 @@ object Corpus {
       .limit(50)
   }
 
-  val vocabCoverageOracle: String =
-    """WITH c AS (
-      |  SELECT word, COUNT(*) AS cnt
-      |  FROM (SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS word FROM documents)
-      |  WHERE word <> ''
-      |  GROUP BY word
-      |)
-      |SELECT word, cnt,
-      |  CAST(SUM(cnt) OVER (ORDER BY cnt DESC, word ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_cnt,
-      |  CAST(CAST(SUM(cnt) OVER (ORDER BY cnt DESC, word ROWS UNBOUNDED PRECEDING) AS BIGINT) AS DOUBLE)
-      |    / CAST(CAST(SUM(cnt) OVER () AS BIGINT) AS DOUBLE) AS cum_frac
-      |FROM c
-      |ORDER BY cnt DESC, word
-      |LIMIT 50""".stripMargin
+  val vocabCoverageOracle: String = sql(Seq(
+    "c" ->
+      """|  SELECT word, COUNT(*) AS cnt
+         |  FROM (SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS word FROM documents)
+         |  WHERE word <> ''
+         |  GROUP BY word""".stripMargin),
+    """|SELECT word, cnt,
+       |  CAST(SUM(cnt) OVER (ORDER BY cnt DESC, word ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_cnt,
+       |  CAST(CAST(SUM(cnt) OVER (ORDER BY cnt DESC, word ROWS UNBOUNDED PRECEDING) AS BIGINT) AS DOUBLE)
+       |    / CAST(CAST(SUM(cnt) OVER () AS BIGINT) AS DOUBLE) AS cum_frac
+       |FROM c
+       |ORDER BY cnt DESC, word
+       |LIMIT 50""".stripMargin)
 
   // --------------------------------------------------- n22 mixing weights
   /**
@@ -201,21 +207,20 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  val piiRedactOracle: String =
-    """WITH f AS (
-      |  SELECT doc_id,
-      |    text || ' contact user' || doc_id || '@example.com'
-      |      || CASE WHEN doc_id % 2 = 0 THEN ' cc admin' || doc_id || '@example.org' ELSE '' END
-      |      || ' or +1-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS full_text
-      |  FROM documents
-      |)
-      |SELECT doc_id,
-      |  CAST(len(regexp_extract_all(full_text, '[a-z0-9]+@[a-z]+\.[a-z]+')) AS BIGINT) AS n_emails,
-      |  CAST(len(regexp_extract_all(full_text, '\+1-555-[0-9]{4}')) AS BIGINT) AS n_phones,
-      |  md5(regexp_replace(regexp_replace(full_text, '[a-z0-9]+@[a-z]+\.[a-z]+', '<EMAIL>', 'g'),
-      |                     '\+1-555-[0-9]{4}', '<PHONE>', 'g')) AS digest
-      |FROM f
-      |ORDER BY doc_id""".stripMargin
+  val piiRedactOracle: String = sql(Seq(
+    "f" ->
+      """|  SELECT doc_id,
+         |    text || ' contact user' || doc_id || '@example.com'
+         |      || CASE WHEN doc_id % 2 = 0 THEN ' cc admin' || doc_id || '@example.org' ELSE '' END
+         |      || ' or +1-555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS full_text
+         |  FROM documents""".stripMargin),
+    """|SELECT doc_id,
+       |  CAST(len(regexp_extract_all(full_text, '[a-z0-9]+@[a-z]+\.[a-z]+')) AS BIGINT) AS n_emails,
+       |  CAST(len(regexp_extract_all(full_text, '\+1-555-[0-9]{4}')) AS BIGINT) AS n_phones,
+       |  md5(regexp_replace(regexp_replace(full_text, '[a-z0-9]+@[a-z]+\.[a-z]+', '<EMAIL>', 'g'),
+       |                     '\+1-555-[0-9]{4}', '<PHONE>', 'g')) AS digest
+       |FROM f
+       |ORDER BY doc_id""".stripMargin)
 
   // ------------------------------------------------ n24 domain extraction
   /**
@@ -310,27 +315,18 @@ object Corpus {
       .orderBy("doc_id")
   }
 
-  val boilerplateStatsOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, source, string_split_regex(lower(text), '\s+') AS ws
-      |  FROM documents
-      |), g AS (
-      |  SELECT doc_id, source, md5(ws[i] || ' ' || ws[i+1]) AS h
-      |  FROM w, LATERAL (SELECT unnest(range(1, len(ws))) AS i) r
-      |  WHERE len(ws) >= 2
-      |), df AS (
-      |  SELECT source, h, COUNT(DISTINCT doc_id) AS df FROM g GROUP BY 1, 2
-      |), nd AS (
-      |  SELECT source, COUNT(*) AS nd FROM documents GROUP BY 1
-      |), f AS (
-      |  SELECT source, h, (df * 5 >= nd) AS is_bp FROM df JOIN nd USING (source)
-      |)
-      |SELECT g.doc_id, COUNT(*) AS n_windows,
-      |  CAST(SUM(CASE WHEN is_bp THEN 1 ELSE 0 END) AS BIGINT) AS n_bp_windows,
-      |  CAST(SUM(CASE WHEN is_bp THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS bp_frac
-      |FROM g JOIN f USING (source, h)
-      |GROUP BY g.doc_id
-      |ORDER BY doc_id""".stripMargin
+  val boilerplateStatsOracle: String = sql(Seq(
+    "w" ->
+      s"""|  SELECT doc_id, source, $splitWords AS ws
+          |  FROM documents""".stripMargin,
+    "g" ->
+      """|  SELECT doc_id, source, md5(ws[i] || ' ' || ws[i+1]) AS h
+         |  FROM w, LATERAL (SELECT unnest(range(1, len(ws))) AS i) r
+         |  WHERE len(ws) >= 2""".stripMargin,
+    "df" -> "  SELECT source, h, COUNT(DISTINCT doc_id) AS df FROM g GROUP BY 1, 2",
+    "nd" -> "  SELECT source, COUNT(*) AS nd FROM documents GROUP BY 1",
+    "f" -> "  SELECT source, h, (df * 5 >= nd) AS is_bp FROM df JOIN nd USING (source)"),
+    flaggedShare("is_bp", "n_bp_windows", "bp_frac", "source, h"))
 
   // -------------------------------------------- n31 temperature mixing
 
@@ -386,7 +382,7 @@ object Corpus {
    * principled rate.
    */
   def temperatureMixingQuery(spark: SparkSession, dir: String,
-                             budget: Int = 100): DataFrame = {
+                             budget: Int = MixBudget): DataFrame = {
     val docs = documents(spark, dir)
     val perSource = docs.groupBy("source").agg(count(lit(1)).as("n_total"))
       .select(col("source"), col("n_total"),
@@ -429,33 +425,43 @@ object Corpus {
       .orderBy("source")
   }
 
-  val temperatureMixingOracle: String =
-    """WITH n AS (
-      |  SELECT source, COUNT(*) AS n_total FROM documents GROUP BY 1
-      |), w AS (
-      |  SELECT source, n_total,
-      |    CAST(floor(sqrt(CAST(n_total AS DOUBLE)) * 65536.0) AS BIGINT) AS w_u
-      |  FROM n
-      |), t AS (
-      |  SELECT source, n_total, w_u,
-      |    CAST(SUM(w_u) OVER () AS BIGINT) AS w_total
-      |  FROM w
-      |), b AS (
-      |  SELECT doc_id, source,
-      |    CAST(CAST(('0x' || substring(md5('temp:' || CAST(doc_id AS VARCHAR)), 1, 8))
-      |         AS UBIGINT) AS BIGINT) AS b
-      |  FROM documents
-      |)
-      |SELECT t.source, t.n_total, t.w_u, t.w_total,
-      |  CAST(SUM(CASE WHEN CAST(b.b AS HUGEINT) * t.w_total * t.n_total
-      |                    < CAST(100 AS HUGEINT) * t.w_u * 4294967296
-      |           THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-      |  CAST(SUM(CASE WHEN CAST(b.b AS HUGEINT) * t.w_total * t.n_total
-      |                    < CAST(100 AS HUGEINT) * t.w_u * 4294967296
-      |           THEN 1 ELSE 0 END) AS DOUBLE) / t.n_total AS kept_frac
-      |FROM b JOIN t USING (source)
-      |GROUP BY t.source, t.n_total, t.w_u, t.w_total
-      |ORDER BY t.source""".stripMargin
+  val temperatureMixingOracle: String = sql(Seq(
+    "n" -> "  SELECT source, COUNT(*) AS n_total FROM documents GROUP BY 1",
+    "w" ->
+      s"""|  SELECT source, n_total,
+          |    $sqrtWeight AS w_u
+          |  FROM n""".stripMargin,
+    weightTotal("source"), mixBuckets("temp")),
+    s"""|SELECT t.source, t.n_total, t.w_u, t.w_total,
+        |$accepted
+        |FROM b JOIN t USING (source)
+        |GROUP BY t.source, t.n_total, t.w_u, t.w_total
+        |ORDER BY t.source""".stripMargin)
+
+  /** The stratum weight `floor(sqrt(n)·2^16)` ([[MixWeightScale]]). */
+  private def sqrtWeight: String =
+    s"CAST(floor(sqrt(CAST(n_total AS DOUBLE)) * ${MixWeightScale.toDouble}) AS BIGINT)"
+
+  /** The weights `w_u` of `w` with their total over every stratum. */
+  private def weightTotal(keys: String): Cte = "t" ->
+    s"""|  SELECT $keys, n_total, w_u,
+        |    CAST(SUM(w_u) OVER () AS BIGINT) AS w_total
+        |  FROM w""".stripMargin
+
+  /** Each document's 32-bit acceptance bucket, md5 under the `salt`. */
+  private def mixBuckets(salt: String): Cte = "b" ->
+    s"""|  SELECT doc_id, source,
+        |    CAST(CAST(('0x' || substring(md5('$salt:' || CAST(doc_id AS VARCHAR)), 1, 8))
+        |         AS UBIGINT) AS BIGINT) AS b
+        |  FROM documents""".stripMargin
+
+  /** The accepted count and share of each stratum: the Spark side's
+    * DECIMAL(38,0) acceptance predicate in exact HUGEINT. */
+  private def accepted: String =
+    Seq("BIGINT) AS n_kept", "DOUBLE) / t.n_total AS kept_frac").map(end =>
+      s"""|  CAST(SUM(CASE WHEN CAST(b.b AS HUGEINT) * t.w_total * t.n_total
+          |                    < CAST($MixBudget AS HUGEINT) * t.w_u * $MixBucketScale
+          |           THEN 1 ELSE 0 END) AS $end""".stripMargin).mkString(",\n")
 
   // ---------------------------------------- n49 quality-tiered mixing
 
@@ -488,7 +494,7 @@ object Corpus {
    * map-side bucket predicate.
    */
   def qualityMixingQuery(spark: SparkSession, dir: String,
-                         budget: Int = 100): DataFrame = {
+                         budget: Int = MixBudget): DataFrame = {
     val docs = documents(spark, dir)
     val scored = TextAnalysis.bigramLm(docs).select(col("doc_id"), col("lm_score"))
     val bySource = Window.partitionBy("source")
@@ -534,59 +540,32 @@ object Corpus {
       .orderBy("source", "tier")
   }
 
-  val qualityMixingOracle: String =
-    """WITH w0 AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), bg AS (
-      |  SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
-      |  FROM w0, LATERAL (SELECT unnest(range(1, len(ws))) AS i) r
-      |), c2 AS (
-      |  SELECT w1, w2, COUNT(*) AS c2 FROM bg GROUP BY 1, 2
-      |), c1 AS (
-      |  SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1
-      |), model AS (
-      |  SELECT w1, w2, CAST((c2 * 1073741824) // c1 AS BIGINT) AS q
-      |  FROM c2 JOIN c1 USING (w1)
-      |), score AS (
-      |  SELECT doc_id, CAST(SUM(q) AS DOUBLE)
-      |    / (CAST(COUNT(*) AS DOUBLE) * 1073741824.0) AS lm_score
-      |  FROM bg JOIN model USING (w1, w2) GROUP BY doc_id
-      |), tiered AS (
-      |  SELECT d.doc_id, d.source,
-      |    CASE WHEN 2 * row_number() OVER (PARTITION BY d.source
-      |        ORDER BY s.lm_score ASC NULLS FIRST, d.doc_id)
-      |      > COUNT(*) OVER (PARTITION BY d.source)
-      |    THEN 'high' ELSE 'low' END AS tier
-      |  FROM documents d LEFT JOIN score s USING (doc_id)
-      |), n AS (
-      |  SELECT source, tier, COUNT(*) AS n_total FROM tiered GROUP BY 1, 2
-      |), w AS (
-      |  SELECT source, tier, n_total,
-      |    CAST(floor(sqrt(CAST(n_total AS DOUBLE)) * 65536.0) AS BIGINT)
-      |      * (CASE WHEN tier = 'high' THEN 2 ELSE 1 END) AS w_u
-      |  FROM n
-      |), t AS (
-      |  SELECT source, tier, n_total, w_u,
-      |    CAST(SUM(w_u) OVER () AS BIGINT) AS w_total
-      |  FROM w
-      |), b AS (
-      |  SELECT doc_id, source,
-      |    CAST(CAST(('0x' || substring(md5('qtemp:' || CAST(doc_id AS VARCHAR)), 1, 8))
-      |         AS UBIGINT) AS BIGINT) AS b
-      |  FROM documents
-      |)
-      |SELECT t.source, t.tier, t.n_total, t.w_u, t.w_total,
-      |  CAST(SUM(CASE WHEN CAST(b.b AS HUGEINT) * t.w_total * t.n_total
-      |                    < CAST(100 AS HUGEINT) * t.w_u * 4294967296
-      |           THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-      |  CAST(SUM(CASE WHEN CAST(b.b AS HUGEINT) * t.w_total * t.n_total
-      |                    < CAST(100 AS HUGEINT) * t.w_u * 4294967296
-      |           THEN 1 ELSE 0 END) AS DOUBLE) / t.n_total AS kept_frac
-      |FROM b
-      |JOIN tiered USING (doc_id, source)
-      |JOIN t ON t.source = tiered.source AND t.tier = tiered.tier
-      |GROUP BY t.source, t.tier, t.n_total, t.w_u, t.w_total
-      |ORDER BY t.source, t.tier""".stripMargin
+  val qualityMixingOracle: String = sql(TextAnalysis.bigramModel("w0") ++ Seq(
+    "score" ->
+      """|  SELECT doc_id, CAST(SUM(q) AS DOUBLE)
+         |    / (CAST(COUNT(*) AS DOUBLE) * 1073741824.0) AS lm_score
+         |  FROM bg JOIN model USING (w1, w2) GROUP BY doc_id""".stripMargin,
+    "tiered" ->
+      """|  SELECT d.doc_id, d.source,
+         |    CASE WHEN 2 * row_number() OVER (PARTITION BY d.source
+         |        ORDER BY s.lm_score ASC NULLS FIRST, d.doc_id)
+         |      > COUNT(*) OVER (PARTITION BY d.source)
+         |    THEN 'high' ELSE 'low' END AS tier
+         |  FROM documents d LEFT JOIN score s USING (doc_id)""".stripMargin,
+    "n" -> "  SELECT source, tier, COUNT(*) AS n_total FROM tiered GROUP BY 1, 2",
+    "w" ->
+      s"""|  SELECT source, tier, n_total,
+          |    $sqrtWeight
+          |      * (CASE WHEN tier = 'high' THEN 2 ELSE 1 END) AS w_u
+          |  FROM n""".stripMargin,
+    weightTotal("source, tier"), mixBuckets("qtemp")),
+    s"""|SELECT t.source, t.tier, t.n_total, t.w_u, t.w_total,
+        |$accepted
+        |FROM b
+        |JOIN tiered USING (doc_id, source)
+        |JOIN t ON t.source = tiered.source AND t.tier = tiered.tier
+        |GROUP BY t.source, t.tier, t.n_total, t.w_u, t.w_total
+        |ORDER BY t.source, t.tier""".stripMargin)
 
   // ------------------------------------------ n40 cross-source overlap
 
@@ -652,30 +631,26 @@ object Corpus {
 
   /** Same trigram construction as the n27 closure oracle, distinct per
     * source, self-joined on the md5. */
-  val sourceOverlapOracle: String =
-    """WITH w AS (
-      |  SELECT source, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), g AS (
-      |  SELECT DISTINCT source,
-      |    md5(ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS h
-      |  FROM w, LATERAL (SELECT unnest(range(1, len(ws) - 1)) AS i) r
-      |  WHERE len(ws) >= 3
-      |), c AS (
-      |  SELECT source, COUNT(*) AS n_grams FROM g GROUP BY source
-      |), x AS (
-      |  SELECT a.source AS source_a, b.source AS source_b, COUNT(*) AS n_shared
-      |  FROM g a JOIN g b USING (h)
-      |  WHERE a.source < b.source
-      |  GROUP BY 1, 2
-      |)
-      |SELECT source_a, source_b, n_shared,
-      |  ca.n_grams AS n_a, cb.n_grams AS n_b,
-      |  CAST(n_shared AS DOUBLE) /
-      |    CAST(ca.n_grams + cb.n_grams - n_shared AS DOUBLE) AS jaccard
-      |FROM x
-      |JOIN c ca ON ca.source = x.source_a
-      |JOIN c cb ON cb.source = x.source_b
-      |ORDER BY source_a, source_b""".stripMargin
+  val sourceOverlapOracle: String = sql(Seq(words("source"),
+    "g" ->
+      s"""|  SELECT DISTINCT source,
+          |    md5(${gram(Dedup.ShingleSize, "")}) AS h
+          |  FROM w, LATERAL (SELECT unnest(range(1, len(ws) - ${Dedup.ShingleSize - 2})) AS i) r
+          |  WHERE len(ws) >= ${Dedup.ShingleSize}""".stripMargin,
+    "c" -> "  SELECT source, COUNT(*) AS n_grams FROM g GROUP BY source",
+    "x" ->
+      """|  SELECT a.source AS source_a, b.source AS source_b, COUNT(*) AS n_shared
+         |  FROM g a JOIN g b USING (h)
+         |  WHERE a.source < b.source
+         |  GROUP BY 1, 2""".stripMargin),
+    """|SELECT source_a, source_b, n_shared,
+       |  ca.n_grams AS n_a, cb.n_grams AS n_b,
+       |  CAST(n_shared AS DOUBLE) /
+       |    CAST(ca.n_grams + cb.n_grams - n_shared AS DOUBLE) AS jaccard
+       |FROM x
+       |JOIN c ca ON ca.source = x.source_a
+       |JOIN c cb ON cb.source = x.source_b
+       |ORDER BY source_a, source_b""".stripMargin)
 
   // ------------------------------------- n44 Bloom-prefilter decontamination
 
@@ -720,7 +695,7 @@ object Corpus {
     // bench side, and the corpus side) — without the barrier the explode
     // re-runs per consumer. Released by the session clearCache policy.
     val grams = docs
-      .select(col("doc_id"), explode(Dedup.wordShingles(col("text"), 3)).as("gram"))
+      .select(col("doc_id"), explode(Dedup.wordShingles(col("text"), BenchGram)).as("gram"))
       .persist()
     val bench = grams.filter(col("doc_id") % 101 === 0)
     val corpus = grams.filter(col("doc_id") % 101 =!= 0)
@@ -740,21 +715,16 @@ object Corpus {
 
   /** Exact decontamination semantics — the Bloom stage is invisible to the
     * result, so the oracle is a plain anti-join on shared 3-grams. */
-  val bloomDecontamOracle: String =
-    """WITH g AS (
-      |  SELECT DISTINCT doc_id, array_to_string(list_slice(words, i, i + 2), ' ') AS gram
-      |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS words FROM documents),
-      |       LATERAL (SELECT unnest(range(1, len(words) - 3 + 2)) AS i)
-      |), contaminated AS (
-      |  SELECT DISTINCT c.doc_id
-      |  FROM g c JOIN g b ON c.gram = b.gram AND b.doc_id % 101 = 0
-      |  WHERE c.doc_id % 101 <> 0
-      |)
-      |SELECT d.doc_id, d.source, d.lang
-      |FROM documents d
-      |WHERE d.doc_id % 101 <> 0
-      |  AND d.doc_id NOT IN (SELECT doc_id FROM contaminated)
-      |ORDER BY d.doc_id""".stripMargin
+  val bloomDecontamOracle: String = sql(Seq(benchGrams,
+    "contaminated" ->
+      """|  SELECT DISTINCT c.doc_id
+         |  FROM g c JOIN g b ON c.gram = b.gram AND b.doc_id % 101 = 0
+         |  WHERE c.doc_id % 101 <> 0""".stripMargin),
+    """|SELECT d.doc_id, d.source, d.lang
+       |FROM documents d
+       |WHERE d.doc_id % 101 <> 0
+       |  AND d.doc_id NOT IN (SELECT doc_id FROM contaminated)
+       |ORDER BY d.doc_id""".stripMargin)
 
   // ----------------------------------------------- n46 snapshot drift (TV)
 
@@ -842,33 +812,32 @@ object Corpus {
 
   /** Same common-denominator rewrite; DuckDB's HUGEINT keeps the
     * cross-products exact, and the one double division matches bit-for-bit. */
-  val snapshotDriftOracle: String =
-    """WITH t AS (
-      |  SELECT source,
-      |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
-      |      IN ('0','2','4','6','8','a','c','e') AS snap_a,
-      |    unnest(string_split_regex(lower(text), '\s+')) AS w
-      |  FROM documents
-      |), c AS (
-      |  SELECT source, w,
-      |    CAST(SUM(CASE WHEN snap_a THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-      |    CAST(SUM(CASE WHEN NOT snap_a THEN 1 ELSE 0 END) AS BIGINT) AS cb
-      |  FROM t GROUP BY 1, 2
-      |), tot AS (
-      |  SELECT source, CAST(SUM(ca) AS BIGINT) AS na,
-      |    CAST(SUM(cb) AS BIGINT) AS nb
-      |  FROM c GROUP BY 1
-      |)
-      |SELECT c.source, MAX(tot.na) AS n_words_a, MAX(tot.nb) AS n_words_b,
-      |  COUNT(*) AS vocab,
-      |  CASE WHEN MAX(tot.na) > 0 AND MAX(tot.nb) > 0 THEN
-      |    CAST(SUM(ABS(CAST(c.ca AS HUGEINT) * tot.nb
-      |                  - CAST(c.cb AS HUGEINT) * tot.na)) AS DOUBLE)
-      |      / (2.0 * MAX(tot.na) * MAX(tot.nb))
-      |  END AS tv_distance
-      |FROM c JOIN tot ON c.source = tot.source
-      |GROUP BY c.source
-      |ORDER BY c.source""".stripMargin
+  val snapshotDriftOracle: String = sql(Seq(
+    "t" ->
+      s"""|  SELECT source,
+          |    substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
+          |      IN ('0','2','4','6','8','a','c','e') AS snap_a,
+          |    unnest($splitWords) AS w
+          |  FROM documents""".stripMargin,
+    "c" ->
+      """|  SELECT source, w,
+         |    CAST(SUM(CASE WHEN snap_a THEN 1 ELSE 0 END) AS BIGINT) AS ca,
+         |    CAST(SUM(CASE WHEN NOT snap_a THEN 1 ELSE 0 END) AS BIGINT) AS cb
+         |  FROM t GROUP BY 1, 2""".stripMargin,
+    "tot" ->
+      """|  SELECT source, CAST(SUM(ca) AS BIGINT) AS na,
+         |    CAST(SUM(cb) AS BIGINT) AS nb
+         |  FROM c GROUP BY 1""".stripMargin),
+    """|SELECT c.source, MAX(tot.na) AS n_words_a, MAX(tot.nb) AS n_words_b,
+       |  COUNT(*) AS vocab,
+       |  CASE WHEN MAX(tot.na) > 0 AND MAX(tot.nb) > 0 THEN
+       |    CAST(SUM(ABS(CAST(c.ca AS HUGEINT) * tot.nb
+       |                  - CAST(c.cb AS HUGEINT) * tot.na)) AS DOUBLE)
+       |      / (2.0 * MAX(tot.na) * MAX(tot.nb))
+       |  END AS tv_distance
+       |FROM c JOIN tot ON c.source = tot.source
+       |GROUP BY c.source
+       |ORDER BY c.source""".stripMargin)
 
   // -------------------------------------- n47 content-defined chunk dedup
 
@@ -932,38 +901,31 @@ object Corpus {
 
   /** Identical boundary rule (md5 of the trailing 3-word window, first hex
     * digit ∈ {0,8}) and keep-first attribution, via window functions. */
-  val cdcChunkOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), p AS (
-      |  SELECT doc_id, i - 1 AS pos, ws[i] AS w
-      |  FROM w, LATERAL (SELECT unnest(range(1, len(ws) + 1)) AS i) r
-      |), b AS (
-      |  SELECT doc_id, pos, w,
-      |    CASE WHEN pos >= 2 AND substr(md5(
-      |        lag(w, 2) OVER win || ' ' || lag(w, 1) OVER win || ' ' || w
-      |      ), 1, 1) IN ('0', '8') THEN 1 ELSE 0 END AS bmark
-      |  FROM p WINDOW win AS (PARTITION BY doc_id ORDER BY pos)
-      |), c AS (
-      |  SELECT doc_id, pos, w, COALESCE(SUM(bmark) OVER (
-      |      PARTITION BY doc_id ORDER BY pos
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk_id
-      |  FROM b
-      |), ch AS (
-      |  SELECT doc_id, chunk_id,
-      |    md5(string_agg(w, ' ' ORDER BY pos)) AS h
-      |  FROM c GROUP BY 1, 2
-      |), f AS (
-      |  SELECT h, MIN(doc_id) AS first_doc FROM ch GROUP BY 1
-      |)
-      |SELECT doc_id, COUNT(*) AS n_chunks,
-      |  CAST(SUM(CASE WHEN doc_id = first_doc THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS n_kept,
-      |  CAST(SUM(CASE WHEN doc_id = first_doc THEN 1 ELSE 0 END) AS DOUBLE)
-      |    / COUNT(*) AS kept_frac
-      |FROM ch JOIN f USING (h)
-      |GROUP BY doc_id
-      |ORDER BY doc_id""".stripMargin
+  val cdcChunkOracle: String = sql(Seq(words(),
+    "p" ->
+      """|  SELECT doc_id, i - 1 AS pos, ws[i] AS w
+         |  FROM w, LATERAL (SELECT unnest(range(1, len(ws) + 1)) AS i) r""".stripMargin,
+    "b" ->
+      """|  SELECT doc_id, pos, w,
+         |    CASE WHEN pos >= 2 AND substr(md5(
+         |        lag(w, 2) OVER win || ' ' || lag(w, 1) OVER win || ' ' || w
+         |      ), 1, 1) IN ('0', '8') THEN 1 ELSE 0 END AS bmark
+         |  FROM p WINDOW win AS (PARTITION BY doc_id ORDER BY pos)""".stripMargin,
+    "c" ->
+      """|  SELECT doc_id, pos, w, COALESCE(SUM(bmark) OVER (
+         |      PARTITION BY doc_id ORDER BY pos
+         |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk_id
+         |  FROM b""".stripMargin,
+    "ch" ->
+      """|  SELECT doc_id, chunk_id,
+         |    md5(string_agg(w, ' ' ORDER BY pos)) AS h
+         |  FROM c GROUP BY 1, 2""".stripMargin,
+    "f" -> "  SELECT h, MIN(doc_id) AS first_doc FROM ch GROUP BY 1"),
+    s"""|SELECT doc_id, COUNT(*) AS n_chunks,
+        |${keptShare("doc_id = first_doc")}
+        |FROM ch JOIN f USING (h)
+        |GROUP BY doc_id
+        |ORDER BY doc_id""".stripMargin)
 
   // ----------------------------------------------- n70 dataset card
 
@@ -1013,29 +975,18 @@ object Corpus {
 
   /** The card's per-doc expressions are n10/n09/n01's SQL verbatim; the
     * outer BIGINT casts follow the d98 HUGEINT rule. */
-  val datasetCardOracle: String =
-    s"""WITH c AS (
-       |  SELECT doc_id, source, lang,
-       |    CAST(length(text) AS BIGINT) AS n_chars,
-       |    CAST(len(string_split_regex(lower(text), '\\s+')) AS BIGINT) AS n_words,
-       |    CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-       |          w -> w IN (${TextAnalysis.qualityStopwords.map(w => s"'$w'").mkString(", ")}))) AS BIGINT) AS n_stopwords,
-       |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT) AS alpha_cnt,
-       |    CAST(len(string_split_regex(text, '\\s+')) AS BIGINT) AS nw,
-       |    md5(text) AS fp
-       |  FROM documents
-       |), b AS (
-       |  SELECT doc_id, source, lang, nw, fp,
-       |    CAST(floor((least(CAST(n_chars AS DOUBLE) / 500.0, 1.0) * 0.25
-       |      + (CAST(n_stopwords AS DOUBLE) / n_words) * 0.25
-       |      + (CAST(alpha_cnt AS DOUBLE) / n_chars) * 0.25
-       |      + least((CAST(alpha_cnt AS DOUBLE) / n_words) / 8.0, 1.0) * 0.25)
-       |      * 1048576.0) AS BIGINT) AS qq
-       |  FROM c
-       |), f AS (
-       |  SELECT b.*, COUNT(*) OVER (PARTITION BY fp) AS nfp FROM b
-       |)
-       |SELECT source,
+  val datasetCardOracle: String = sql(Seq(
+    "c" -> qualityCounts("doc_id, source, lang", TextAnalysis.qualityStopwords,
+      """|,
+         |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS nw,
+         |    md5(text) AS fp""".stripMargin),
+    "b" ->
+      s"""|  SELECT doc_id, source, lang, nw, fp,
+          |    CAST(floor((${qualityTerms("      ")})
+          |      * 1048576.0) AS BIGINT) AS qq
+          |  FROM c""".stripMargin,
+    "f" -> "  SELECT b.*, COUNT(*) OVER (PARTITION BY fp) AS nfp FROM b"),
+    """|SELECT source,
        |  COUNT(*) AS n_docs,
        |  CAST(SUM(nw) AS BIGINT) AS n_tokens,
        |  CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
@@ -1047,7 +998,7 @@ object Corpus {
        |    / CAST(COUNT(*) AS DOUBLE) AS dup_frac
        |FROM f
        |GROUP BY source
-       |ORDER BY source""".stripMargin
+       |ORDER BY source""".stripMargin)
 
   // ------------------------------------- n74 dataset card + near-dup rate
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.Tables._
+import OracleSql._
 
 /**
  * Deduplication operators for large-scale text pipelines (north-star surface,
@@ -21,6 +22,25 @@ import graft.queries.Tables._
  */
 object Dedup {
 
+  // Parameters each Spark query and its DuckDB twin read. `final val`s are
+  // compile-time constants, so a twin built while another object is still
+  // initializing can never read them as 0.
+
+  /** The word n-gram shingle size of the text near-dup family. */
+  final val ShingleSize = 3
+  /** The Jaccard threshold of the text near-dup pairs (n02/n03/n27/n36/n38). */
+  final val JaccardThreshold = 0.8
+  /** The in-bulk exact cosine threshold of n05 (see [[embeddingNearDupPairs]]). */
+  final val BulkCosine = 0.45
+  /** The separating cosine threshold of the planted near-dup pairs (n26,
+    * n37, n52, n53 and the media n56–n58). */
+  final val NearDupCosine = 0.9
+  /** The id offset of the planted copies ([[plantedCopies]]). */
+  private[graft] final val PlantOffset = 1000000L
+  /** The planted copies' per-component jitter unit, 2⁻⁷: an exact binary
+    * fraction, so both engines build bit-identical doubles. */
+  private[graft] final val PlantJitter = 0.0078125
+
   // ------------------------------------------------------------ shingling
 
   /** Distinct word n-gram shingles of `lower(textCol)`. Documents shorter
@@ -32,7 +52,7 @@ object Dedup {
     * and the naive form — `element_at(split(...), i+k)` inside the gram
     * lambda — re-split the full text 3× per shingle (~150× per document,
     * the dominant cost of the n02/n03 pipelines before this fix). */
-  def wordShingles(textCol: Column, n: Int = 3): Column = {
+  def wordShingles(textCol: Column, n: Int = ShingleSize): Column = {
     val shinglesOf: Column => Column = ws => {
       val grams = transform(sequence(lit(0), size(ws) - n),
         i => concat_ws(" ", (0 until n).map(k => element_at(ws, i + k + 1)): _*))
@@ -119,7 +139,7 @@ object Dedup {
    * semantics); `DedupSkewSpec` plants a pathological bucket and asserts
    * the capped result equals the unplanted baseline.
    */
-  def minHashNearDupPairs(docs: DataFrame, threshold: Double = 0.8,
+  def minHashNearDupPairs(docs: DataFrame, threshold: Double = JaccardThreshold,
                           maxBandBucket: Int = Int.MaxValue): DataFrame = {
     // shingle + hash once, behind a persist barrier: the expression tree is
     // expensive and referenced from both sides of the candidate self-join,
@@ -197,7 +217,8 @@ object Dedup {
    * per-document shingle counts. Never materializes the n² pair space; pair
    * cost is bounded by shingle co-occurrence.
    */
-  def ngramJaccardPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
+  def ngramJaccardPairs(docs: DataFrame,
+                        threshold: Double = JaccardThreshold): DataFrame = {
     // Prefix filtering (Bayardo/Chaudhuri all-pairs): order every document's
     // shingles by global rarity and index only the first
     // |sh| - ceil(t·|sh|) + 1 of them. Any pair with Jaccard ≥ t must share
@@ -238,30 +259,12 @@ object Dedup {
     ngramJaccardPairs(documents(spark, dir)).orderBy("doc_a", "doc_b")
 
   /** Shared oracle for the MinHash and exact-Jaccard queries: the exact
-    * threshold join in DuckDB (word-3-gram shingles, distinct). */
-  val jaccardPairsOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-      |                   for i in range(1, len(ws) - 1)]) AS shingles
-      |  FROM w WHERE len(ws) >= 3
-      |), ex AS (
-      |  SELECT doc_id, unnest(shingles) AS sh FROM sh
-      |), common AS (
-      |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS n_common
-      |  FROM ex x JOIN ex y USING (sh)
-      |  WHERE x.doc_id < y.doc_id
-      |  GROUP BY 1, 2
-      |), sz AS (SELECT doc_id, len(shingles) AS sz FROM sh)
-      |SELECT doc_a, doc_b,
-      |  CAST(n_common AS DOUBLE) / (a.sz + b.sz - n_common) AS jaccard
-      |FROM common
-      |JOIN sz a ON a.doc_id = doc_a
-      |JOIN sz b ON b.doc_id = doc_b
-      |WHERE CAST(n_common AS DOUBLE) / (a.sz + b.sz - n_common) >= 0.8
-      |ORDER BY doc_a, doc_b""".stripMargin
+    * threshold join in DuckDB ([[ShingleSize]]-word shingles, distinct, at
+    * [[JaccardThreshold]]). */
+  val jaccardPairsOracle: String = sql(
+    sharedShingles(ShingleSize) :+ ("sz" -> shingleCounts),
+    s"""|${jaccardJoin(pairJaccard, JaccardThreshold, "")}
+        |ORDER BY doc_a, doc_b""".stripMargin)
 
   // ------------------------------------------------------------- SimHash
 
@@ -332,30 +335,25 @@ object Dedup {
     * 64-char bit string so no signed-64-bit overflow ever enters SQL; the
     * pair stage is the exact all-pairs Hamming-≤3 join (the engine's block
     * banding is result-identical by pigeonhole). */
-  val simHashPairsOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), h AS (
-      |  SELECT doc_id, list_transform(ws, x -> substr(md5(x), 1, 16)) AS hs FROM w
-      |), bts AS (
-      |  SELECT doc_id,
-      |    list_transform(range(64), b ->
-      |      CASE WHEN 2 * len(list_filter(hs, s ->
-      |        ((strpos('0123456789abcdef', substr(s, CAST(16 - b // 4 AS INT), 1)) - 1)
-      |         // (CASE WHEN b % 4 = 0 THEN 1 WHEN b % 4 = 1 THEN 2
-      |                WHEN b % 4 = 2 THEN 4 ELSE 8 END)) % 2 = 1
-      |      )) > len(hs) THEN '1' ELSE '0' END) AS bits
-      |  FROM h
-      |), s AS (
-      |  SELECT doc_id, array_to_string(bits, '') AS sim FROM bts
-      |), p AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-      |    CAST(len(list_filter(range(64), i ->
-      |      substr(a.sim, CAST(i + 1 AS INT), 1) <> substr(b.sim, CAST(i + 1 AS INT), 1))) AS INT) AS hamming
-      |  FROM s a JOIN s b ON a.doc_id < b.doc_id
-      |)
-      |SELECT doc_a, doc_b, hamming FROM p WHERE hamming <= 3
-      |ORDER BY doc_a, doc_b""".stripMargin
+  val simHashPairsOracle: String = sql(Seq(words(),
+    "h" -> "  SELECT doc_id, list_transform(ws, x -> substr(md5(x), 1, 16)) AS hs FROM w",
+    "bts" ->
+      """|  SELECT doc_id,
+         |    list_transform(range(64), b ->
+         |      CASE WHEN 2 * len(list_filter(hs, s ->
+         |        ((strpos('0123456789abcdef', substr(s, CAST(16 - b // 4 AS INT), 1)) - 1)
+         |         // (CASE WHEN b % 4 = 0 THEN 1 WHEN b % 4 = 1 THEN 2
+         |                WHEN b % 4 = 2 THEN 4 ELSE 8 END)) % 2 = 1
+         |      )) > len(hs) THEN '1' ELSE '0' END) AS bits
+         |  FROM h""".stripMargin,
+    "s" -> "  SELECT doc_id, array_to_string(bits, '') AS sim FROM bts",
+    "p" ->
+      """|  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |    CAST(len(list_filter(range(64), i ->
+         |      substr(a.sim, CAST(i + 1 AS INT), 1) <> substr(b.sim, CAST(i + 1 AS INT), 1))) AS INT) AS hamming
+         |  FROM s a JOIN s b ON a.doc_id < b.doc_id""".stripMargin),
+    """|SELECT doc_a, doc_b, hamming FROM p WHERE hamming <= 3
+       |ORDER BY doc_a, doc_b""".stripMargin)
 
   // ------------------------------------------------------- edit distance
 
@@ -456,7 +454,7 @@ object Dedup {
    * The pair kernel is the codegen'd [[graft.functions.DotProduct]],
    * bit-identical to the aggregate(zip_with(...)) fold it replaces.
    */
-  def embeddingNearDupPairs(emb: DataFrame, threshold: Double = 0.45,
+  def embeddingNearDupPairs(emb: DataFrame, threshold: Double = BulkCosine,
                             blocks: Int = 8): DataFrame = {
     val par = emb.sparkSession.sparkContext.defaultParallelism
     val unit = emb.repartition(par)
@@ -487,24 +485,16 @@ object Dedup {
   def embeddingNearDupQuery(spark: SparkSession, dir: String): DataFrame =
     embeddingNearDupPairs(embeddings(spark, dir)).orderBy("vec_a", "vec_b")
 
-  val embeddingNearDupOracle: String =
-    """WITH ex AS (
-      |  SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS v,
-      |    generate_subscripts(embedding, 1) AS i
-      |  FROM embeddings
-      |), n AS (
-      |  SELECT vec_id, SQRT(SUM(v * v)) AS nrm FROM ex GROUP BY vec_id
-      |), u AS (
-      |  SELECT ex.vec_id, v / nrm AS u, i FROM ex JOIN n USING (vec_id)
-      |), p AS (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.u * b.u) AS cosine
-      |  FROM u a JOIN u b ON a.i = b.i AND a.vec_id < b.vec_id
-      |  GROUP BY 1, 2
-      |)
-      |SELECT vec_a, vec_b, cosine
-      |FROM p
-      |WHERE cosine >= 0.45
-      |ORDER BY vec_a, vec_b""".stripMargin
+  val embeddingNearDupOracle: String = sql(
+    ("ex" -> embeddingValues) +: unitVectors() :+ cosinePairs,
+    cosineRows(BulkCosine))
+
+  /** The pairs of `p` at cosine ≥ `threshold`, the pair frame's order. */
+  private def cosineRows(threshold: Double): String =
+    s"""|SELECT vec_a, vec_b, cosine
+        |FROM p
+        |WHERE cosine >= $threshold
+        |ORDER BY vec_a, vec_b""".stripMargin
 
   // ------------------------------------------- near-dup clustering (n27)
 
@@ -545,7 +535,7 @@ object Dedup {
    * job that also counts the pairs, one collect, and a union-find on the
    * driver — the rounds' jobs are gone, pair generation remains.
    */
-  def nearDupClusters(docs: DataFrame, threshold: Double = 0.8,
+  def nearDupClusters(docs: DataFrame, threshold: Double = JaccardThreshold,
                       maxIters: Int = 50): DataFrame =
     minLabelComponents(
       minHashNearDupPairs(docs, threshold).select("doc_a", "doc_b"),
@@ -795,89 +785,28 @@ object Dedup {
   }
 
   /** n27's recursive closure plus the anti-join and per-source rollup. */
-  val dedupedCorpusOracle: String =
-    """WITH RECURSIVE w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-      |                   for i in range(1, len(ws) - 1)]) AS shingles
-      |  FROM w WHERE len(ws) >= 3
-      |), ex AS (
-      |  SELECT doc_id, unnest(shingles) AS sh FROM sh
-      |), common AS (
-      |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS n_common
-      |  FROM ex x JOIN ex y USING (sh)
-      |  WHERE x.doc_id < y.doc_id
-      |  GROUP BY 1, 2
-      |), sz AS (SELECT doc_id, len(shingles) AS sz FROM sh
-      |), pairs AS (
-      |  SELECT doc_a, doc_b
-      |  FROM common
-      |  JOIN sz a ON a.doc_id = doc_a
-      |  JOIN sz b ON b.doc_id = doc_b
-      |  WHERE CAST(n_common AS DOUBLE) / (a.sz + b.sz - n_common) >= 0.8
-      |), edges AS (
-      |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-      |  UNION ALL
-      |  SELECT doc_b AS src, doc_a AS dst FROM pairs
-      |), reach AS (
-      |  SELECT DISTINCT src AS doc_id, src AS r FROM edges
-      |  UNION
-      |  SELECT e.dst AS doc_id, reach.r
-      |  FROM reach JOIN edges e ON e.src = reach.doc_id
-      |), losers AS (
-      |  SELECT doc_id FROM reach GROUP BY doc_id HAVING doc_id <> MIN(r)
-      |)
-      |SELECT d.source,
-      |  COUNT(*) AS n_total,
-      |  CAST(COUNT(*) FILTER (l.doc_id IS NULL) AS BIGINT) AS n_kept,
-      |  CAST(COUNT(*) FILTER (l.doc_id IS NOT NULL) AS BIGINT) AS n_dropped,
-      |  CAST(SUM(CASE WHEN l.doc_id IS NULL THEN d.n_chars ELSE 0 END) AS BIGINT)
-      |    AS chars_kept
-      |FROM documents d LEFT JOIN losers l USING (doc_id)
-      |GROUP BY d.source
-      |ORDER BY d.source""".stripMargin
+  val dedupedCorpusOracle: String = sql(textClosure() :+ losers("doc_id"),
+    """|SELECT d.source,
+       |  COUNT(*) AS n_total,
+       |  CAST(COUNT(*) FILTER (l.doc_id IS NULL) AS BIGINT) AS n_kept,
+       |  CAST(COUNT(*) FILTER (l.doc_id IS NOT NULL) AS BIGINT) AS n_dropped,
+       |  CAST(SUM(CASE WHEN l.doc_id IS NULL THEN d.n_chars ELSE 0 END) AS BIGINT)
+       |    AS chars_kept
+       |FROM documents d LEFT JOIN losers l USING (doc_id)
+       |GROUP BY d.source
+       |ORDER BY d.source""".stripMargin, recursive = true)
+
+  /** The exact Jaccard pairs ([[jaccardPairsOracle]]'s CTE chain) and
+    * their recursive closure. */
+  private def textClosure(ex: String = "ex"): Seq[Cte] =
+    jaccardPairs(ShingleSize, JaccardThreshold, ex) ++
+      closure("doc_a", "doc_b", "doc_id")
 
   /** Transitive closure of the exact Jaccard pair join (same CTE chain as
     * [[jaccardPairsOracle]]) via a recursive CTE, then min reachable id per
     * doc — tractable in DuckDB because near-dup clusters are tiny. */
   val nearDupClustersOracle: String =
-    """WITH RECURSIVE w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-      |                   for i in range(1, len(ws) - 1)]) AS shingles
-      |  FROM w WHERE len(ws) >= 3
-      |), ex AS (
-      |  SELECT doc_id, unnest(shingles) AS sh FROM sh
-      |), common AS (
-      |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS n_common
-      |  FROM ex x JOIN ex y USING (sh)
-      |  WHERE x.doc_id < y.doc_id
-      |  GROUP BY 1, 2
-      |), sz AS (SELECT doc_id, len(shingles) AS sz FROM sh
-      |), pairs AS (
-      |  SELECT doc_a, doc_b
-      |  FROM common
-      |  JOIN sz a ON a.doc_id = doc_a
-      |  JOIN sz b ON b.doc_id = doc_b
-      |  WHERE CAST(n_common AS DOUBLE) / (a.sz + b.sz - n_common) >= 0.8
-      |), edges AS (
-      |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-      |  UNION ALL
-      |  SELECT doc_b AS src, doc_a AS dst FROM pairs
-      |), reach AS (
-      |  SELECT DISTINCT src AS doc_id, src AS r FROM edges
-      |  UNION
-      |  SELECT e.dst AS doc_id, reach.r
-      |  FROM reach JOIN edges e ON e.src = reach.doc_id
-      |)
-      |SELECT doc_id, MIN(r) AS cluster_id, doc_id = MIN(r) AS is_canonical
-      |FROM reach
-      |GROUP BY doc_id
-      |ORDER BY doc_id""".stripMargin
+    sql(textClosure(), clusterRows("doc_id"), recursive = true)
 
   // ---------------------------------- embedding LSH-banded near-dup (n26)
 
@@ -962,14 +891,13 @@ object Dedup {
     * measured copy-to-original cosine is ≥ 0.992 and the max cross-pair
     * background cosine ≤ 0.62 (sf0.1) — the separation real near-dup
     * corpora have and the uniform-random embeddings table lacks. */
-  private[graft] val PlantOffset = 1000000L
   private[graft] def plantedCopies(emb: DataFrame): DataFrame =
     // two selects: with the shift and the re-key in ONE projection, lateral
     // column alias resolution binds the col("vec_id") inside the lambda to
     // the just-aliased vec_id + offset, silently shifting the k pattern
     emb.select(col("vec_id"),
         transform(col("embedding"), (x, i) =>
-          x.cast("double") + lit(0.0078125) *
+          x.cast("double") + lit(PlantJitter) *
             (pmod(col("vec_id") * 31 + i + 1, lit(7)) - 3)).as("v"))
       .select((col("vec_id") + lit(PlantOffset)).as("vec_id"), col("v"))
 
@@ -991,7 +919,8 @@ object Dedup {
    * exact all-pairs form ([[embeddingNearDupPairs]]) stays the oracle-
    * checkable verifier for thresholds inside the background distribution.
    */
-  def embeddingLshNearDupPairs(emb: DataFrame, threshold: Double = 0.9,
+  def embeddingLshNearDupPairs(emb: DataFrame,
+                               threshold: Double = NearDupCosine,
                                maxBandBucket: Int = Int.MaxValue): DataFrame = {
     val base = emb.select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("v"))
@@ -1071,7 +1000,8 @@ object Dedup {
    * threshold are identical up to the ~2e-20 per-pair banding miss bound
    * ([[lshBitsFor]]).
    */
-  def embeddingNearDupPairsAuto(emb: DataFrame, threshold: Double = 0.9,
+  def embeddingNearDupPairsAuto(emb: DataFrame,
+                                threshold: Double = NearDupCosine,
                                 maxBandBucket: Int = Int.MaxValue,
                                 allowQuadratic: Boolean = false): DataFrame =
     if (threshold >= CosineSeparationBound)
@@ -1093,7 +1023,7 @@ object Dedup {
    * [[nearDupClusters]], with the [[embeddingNearDupPairsAuto]] routing
    * guard in front of the shared [[minLabelComponents]] engine.
    */
-  def embeddingClusters(emb: DataFrame, threshold: Double = 0.9,
+  def embeddingClusters(emb: DataFrame, threshold: Double = NearDupCosine,
                         maxBandBucket: Int = Int.MaxValue,
                         allowQuadratic: Boolean = false,
                         maxIters: Int = 50): DataFrame =
@@ -1106,33 +1036,17 @@ object Dedup {
     embeddingLshNearDupPairs(embeddings(spark, dir)).orderBy("vec_a", "vec_b")
 
   /** Exact all-pairs oracle over the same union-with-planted-copies
-    * construction (the CAST(0.0078125 AS DOUBLE) keeps DuckDB's decimal
-    * literal out of the arithmetic — both engines then do the identical
-    * double multiply/add; operands of % are non-negative so DuckDB's
-    * sign-of-dividend % equals Spark's pmod). */
+    * construction ([[OracleSql.planted]]: the CAST of [[PlantJitter]] to
+    * DOUBLE keeps DuckDB's decimal literal out of the arithmetic — both
+    * engines then do the identical double multiply/add; operands of % are
+    * non-negative so DuckDB's sign-of-dividend % equals Spark's pmod). */
   val embeddingLshOracle: String =
-    """WITH base AS (
-      |  SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS v,
-      |    generate_subscripts(embedding, 1) AS i
-      |  FROM embeddings
-      |), pl AS (
-      |  SELECT vec_id + 1000000 AS vec_id, pv AS v, i FROM
-      |    (SELECT vec_id, v + CAST(0.0078125 AS DOUBLE) * ((vec_id*31 + i) % 7 - 3) AS pv, i FROM base)
-      |), ex AS (
-      |  SELECT * FROM base UNION ALL SELECT * FROM pl
-      |), n AS (
-      |  SELECT vec_id, SQRT(SUM(v * v)) AS nrm FROM ex GROUP BY vec_id
-      |), u AS (
-      |  SELECT ex.vec_id, v / nrm AS u, i FROM ex JOIN n USING (vec_id)
-      |), p AS (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.u * b.u) AS cosine
-      |  FROM u a JOIN u b ON a.i = b.i AND a.vec_id < b.vec_id
-      |  GROUP BY 1, 2
-      |)
-      |SELECT vec_a, vec_b, cosine
-      |FROM p
-      |WHERE cosine >= 0.9
-      |ORDER BY vec_a, vec_b""".stripMargin
+    sql(plantedEmbeddingPairs.init, cosineRows(NearDupCosine))
+
+  /** The embeddings ∪ their planted copies to the (vec_a, vec_b) pairs at
+    * [[NearDupCosine]]. */
+  private def plantedEmbeddingPairs: Seq[Cte] = ("base" -> embeddingValues) +:
+    plantedPairs(PlantOffset, PlantJitter, NearDupCosine)
 
   // ------------------------------------- embedding near-dup clusters (n37)
 
@@ -1165,43 +1079,14 @@ object Dedup {
       embeddingLshNearDupPairs(embeddings(spark, dir)).select("vec_a", "vec_b"),
       "vec_a", "vec_b", "vec_id").orderBy("vec_id")
 
-  /** The n26 exact-cosine pair CTE chain (union with planted copies,
-    * threshold 0.9) plus the recursive closure of
+  /** The n26 exact-cosine pair CTE chain (union with planted copies, at
+    * [[NearDupCosine]]) plus the recursive closure of
     * [[nearDupClustersOracle]]. */
-  val embeddingClustersOracle: String =
-    """WITH RECURSIVE base AS (
-      |  SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS v,
-      |    generate_subscripts(embedding, 1) AS i
-      |  FROM embeddings
-      |), pl AS (
-      |  SELECT vec_id + 1000000 AS vec_id, pv AS v, i FROM
-      |    (SELECT vec_id, v + CAST(0.0078125 AS DOUBLE) * ((vec_id*31 + i) % 7 - 3) AS pv, i FROM base)
-      |), ex AS (
-      |  SELECT * FROM base UNION ALL SELECT * FROM pl
-      |), n AS (
-      |  SELECT vec_id, SQRT(SUM(v * v)) AS nrm FROM ex GROUP BY vec_id
-      |), u AS (
-      |  SELECT ex.vec_id, v / nrm AS u, i FROM ex JOIN n USING (vec_id)
-      |), p AS (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.u * b.u) AS cosine
-      |  FROM u a JOIN u b ON a.i = b.i AND a.vec_id < b.vec_id
-      |  GROUP BY 1, 2
-      |), pairs AS (
-      |  SELECT vec_a, vec_b FROM p WHERE cosine >= 0.9
-      |), edges AS (
-      |  SELECT vec_a AS src, vec_b AS dst FROM pairs
-      |  UNION ALL
-      |  SELECT vec_b AS src, vec_a AS dst FROM pairs
-      |), reach AS (
-      |  SELECT DISTINCT src AS vec_id, src AS r FROM edges
-      |  UNION
-      |  SELECT e.dst AS vec_id, reach.r
-      |  FROM reach JOIN edges e ON e.src = reach.vec_id
-      |)
-      |SELECT vec_id, MIN(r) AS cluster_id, vec_id = MIN(r) AS is_canonical
-      |FROM reach
-      |GROUP BY vec_id
-      |ORDER BY vec_id""".stripMargin
+  val embeddingClustersOracle: String = sql(embeddingClosure,
+    clusterRows("vec_id"), recursive = true)
+
+  private def embeddingClosure: Seq[Cte] =
+    plantedEmbeddingPairs ++ closure("vec_a", "vec_b", "vec_id")
 
   /**
    * The consumable end of the EMBEDDING dedup family (n53) — the n36 shape
@@ -1240,48 +1125,9 @@ object Dedup {
 
   /** The n37 recursive closure plus the anti-join and per-label rollup
     * (the [[dedupedCorpusOracle]] shape on the embedding modality). */
-  val dedupedEmbeddingCorpusOracle: String =
-    """WITH RECURSIVE base AS (
-      |  SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS v,
-      |    generate_subscripts(embedding, 1) AS i
-      |  FROM embeddings
-      |), pl AS (
-      |  SELECT vec_id + 1000000 AS vec_id, pv AS v, i FROM
-      |    (SELECT vec_id, v + CAST(0.0078125 AS DOUBLE) * ((vec_id*31 + i) % 7 - 3) AS pv, i FROM base)
-      |), ex AS (
-      |  SELECT * FROM base UNION ALL SELECT * FROM pl
-      |), n AS (
-      |  SELECT vec_id, SQRT(SUM(v * v)) AS nrm FROM ex GROUP BY vec_id
-      |), u AS (
-      |  SELECT ex.vec_id, v / nrm AS u, i FROM ex JOIN n USING (vec_id)
-      |), p AS (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.u * b.u) AS cosine
-      |  FROM u a JOIN u b ON a.i = b.i AND a.vec_id < b.vec_id
-      |  GROUP BY 1, 2
-      |), pairs AS (
-      |  SELECT vec_a, vec_b FROM p WHERE cosine >= 0.9
-      |), edges AS (
-      |  SELECT vec_a AS src, vec_b AS dst FROM pairs
-      |  UNION ALL
-      |  SELECT vec_b AS src, vec_a AS dst FROM pairs
-      |), reach AS (
-      |  SELECT DISTINCT src AS vec_id, src AS r FROM edges
-      |  UNION
-      |  SELECT e.dst AS vec_id, reach.r
-      |  FROM reach JOIN edges e ON e.src = reach.vec_id
-      |), losers AS (
-      |  SELECT vec_id FROM reach GROUP BY vec_id HAVING vec_id <> MIN(r)
-      |), corp AS (
-      |  SELECT vec_id, label FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 1000000 AS vec_id, label FROM embeddings
-      |)
-      |SELECT c.label, COUNT(*) AS n_total,
-      |  CAST(COUNT(*) FILTER (l.vec_id IS NULL) AS BIGINT) AS n_kept,
-      |  CAST(COUNT(*) FILTER (l.vec_id IS NOT NULL) AS BIGINT) AS n_dropped
-      |FROM corp c LEFT JOIN losers l USING (vec_id)
-      |GROUP BY c.label
-      |ORDER BY c.label""".stripMargin
+  val dedupedEmbeddingCorpusOracle: String = sql(embeddingClosure ++ Seq(
+    losers("vec_id"), plantedCorpus("vec_id", "label", "embeddings", PlantOffset)),
+    keptRollup("label", "USING (vec_id)"), recursive = true)
 
   // -------------------------------------------- dedup manifest (n38)
 
@@ -1338,55 +1184,14 @@ object Dedup {
 
   /** md5-group keepers + the n27 recursive closure, composed with the same
     * precedence CASE (is_canonical ⟺ doc_id = cluster_id). */
-  val dedupManifestOracle: String =
-    """WITH RECURSIVE w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-      |                   for i in range(1, len(ws) - 1)]) AS shingles
-      |  FROM w WHERE len(ws) >= 3
-      |), exg AS (
-      |  SELECT doc_id, unnest(shingles) AS sh FROM sh
-      |), common AS (
-      |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS n_common
-      |  FROM exg x JOIN exg y USING (sh)
-      |  WHERE x.doc_id < y.doc_id
-      |  GROUP BY 1, 2
-      |), sz AS (SELECT doc_id, len(shingles) AS sz FROM sh
-      |), pairs AS (
-      |  SELECT doc_a, doc_b
-      |  FROM common
-      |  JOIN sz a ON a.doc_id = doc_a
-      |  JOIN sz b ON b.doc_id = doc_b
-      |  WHERE CAST(n_common AS DOUBLE) / (a.sz + b.sz - n_common) >= 0.8
-      |), edges AS (
-      |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-      |  UNION ALL
-      |  SELECT doc_b AS src, doc_a AS dst FROM pairs
-      |), reach AS (
-      |  SELECT DISTINCT src AS doc_id, src AS r FROM edges
-      |  UNION
-      |  SELECT e.dst AS doc_id, reach.r
-      |  FROM reach JOIN edges e ON e.src = reach.doc_id
-      |), lab AS (
-      |  SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id
-      |), f AS (
-      |  SELECT doc_id, source, md5(text) AS fp FROM documents
-      |), k AS (
-      |  SELECT fp, MIN(doc_id) AS fp_keep FROM f GROUP BY fp
-      |)
-      |SELECT f.doc_id, f.source,
-      |  CASE WHEN f.doc_id <> k.fp_keep THEN 'exact_dup'
-      |       WHEN l.cluster_id IS NOT NULL AND f.doc_id <> l.cluster_id
-      |         THEN 'near_dup'
-      |       ELSE 'keep' END AS verdict,
-      |  CASE WHEN f.doc_id <> k.fp_keep THEN k.fp_keep
-      |       WHEN l.cluster_id IS NOT NULL AND f.doc_id <> l.cluster_id
-      |         THEN l.cluster_id
-      |       ELSE f.doc_id END AS keep_doc
-      |FROM f
-      |JOIN k USING (fp)
-      |LEFT JOIN lab l USING (doc_id)
-      |ORDER BY f.doc_id""".stripMargin
+  val dedupManifestOracle: String = sql(textClosure("exg") ++ Seq(
+    labels("doc_id"),
+    "f" -> "  SELECT doc_id, source, md5(text) AS fp FROM documents",
+    keepers("doc_id", "f")),
+    s"""|SELECT f.doc_id, f.source,
+        |${verdict("f.doc_id", "keep_doc")}
+        |FROM f
+        |JOIN k USING (fp)
+        |LEFT JOIN lab l USING (doc_id)
+        |ORDER BY f.doc_id""".stripMargin, recursive = true)
 }

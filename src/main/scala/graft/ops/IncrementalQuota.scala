@@ -49,7 +49,7 @@ import graft.queries.Tables
  * tiering, crash windows, and pruned-read parity are the base machine's,
  * exercised over this subclass in `IncrementalQuotaSpec`.
  */
-final class IncrementalQuota(root: Path, perHost: Int = 10,
+final class IncrementalQuota(root: Path, perHost: Int = Pipeline.DomainQuota,
                              hostBuckets: Int = 64,
                              override protected val maxLevels: Int = 4)
   extends IncrementalStateMachine(root) {

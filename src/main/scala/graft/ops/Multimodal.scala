@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.Tables._
+import OracleSql._
 
 /** A multimodal record: opaque media bytes plus typed metadata. The binary
   * payload is the engine-level representation for image/audio/video columns —
@@ -48,6 +49,33 @@ final case class MediaFeatureVec(media_id: Long, kind: String,
  * and partition-parallel execution with no driver materialization.
  */
 object Multimodal {
+
+  /** The salted digests behind [[featureExtractWide]]'s 64 components. */
+  final val WideSalts = 16
+
+  /** The media records of [[mediaFromDocuments]] in SQL: the kind by id,
+    * then `cols` over the payload (the document text). */
+  private def records(cols: String): Cte = "m" ->
+    s"""|  SELECT doc_id AS media_id,
+        |    ['image', 'audio', 'video'][(doc_id % 3 + 1)::INT] AS kind,
+        |    $cols
+        |  FROM documents""".stripMargin
+
+  /** The payload length `n` every [[decodeStub]] figure derives from. */
+  private val stubBytes = "octet_length(encode(text)) AS n"
+
+  /** [[decodeStub]]'s visual dims and audio rate from `n`, kind-gated. */
+  private val stubDims =
+    """|    CASE WHEN kind IN ('image', 'video') THEN 320 + n % 320 ELSE 0 END AS width,
+       |    CASE WHEN kind IN ('image', 'video') THEN 240 + n % 240 ELSE 0 END AS height,""".stripMargin
+  private val stubRate =
+    "    CASE WHEN kind = 'audio' THEN 8000 + (n % 3) * 8000 ELSE 0 END AS sample_rate"
+
+  /** The 8 hex digits of `h` from `at` + 1 as an unsigned 32-bit integer,
+    * by digit arithmetic and shifts; `in` indents the second line. */
+  private def hexChunk(at: String, in: String): String =
+    s"""|list_sum([(strpos('0123456789abcdef', substr(h, $at + d + 1, 1)) - 1)
+        |$in* (1 << (4 * (7 - d))) for d in range(8)])""".stripMargin
 
   /** Deterministic fake decode — REPLACE with a real codec in production.
     * Metadata is a pure function of (kind, payload length) so the oracle can
@@ -116,26 +144,20 @@ object Multimodal {
       .toDF()
       .orderBy("media_id", "frame_idx")
 
-  val frameSampleOracle: String =
-    """WITH m AS (
-      |  SELECT doc_id AS media_id,
-      |    ['image', 'audio', 'video'][(doc_id % 3 + 1)::INT] AS kind,
-      |    octet_length(encode(text)) AS n
-      |  FROM documents
-      |), v AS (
-      |  SELECT media_id, n AS n_bytes, 1 + n % 100 AS n_frames,
-      |    least(4, 1 + n % 100) AS k
-      |  FROM m WHERE kind = 'video'
-      |), f AS (
-      |  SELECT media_id, n_bytes, n_frames, k,
-      |    unnest(range(0, k)) AS i
-      |  FROM v
-      |)
-      |SELECT media_id, CAST(n_frames AS BIGINT) AS n_frames,
-      |  CAST((i * n_frames) // k AS BIGINT) AS frame_idx,
-      |  CAST(((i * n_frames) // k) * (n_bytes // n_frames) AS BIGINT) AS frame_off
-      |FROM f
-      |ORDER BY media_id, frame_idx""".stripMargin
+  val frameSampleOracle: String = sql(Seq(records(stubBytes),
+    "v" ->
+      """|  SELECT media_id, n AS n_bytes, 1 + n % 100 AS n_frames,
+         |    least(4, 1 + n % 100) AS k
+         |  FROM m WHERE kind = 'video'""".stripMargin,
+    "f" ->
+      """|  SELECT media_id, n_bytes, n_frames, k,
+         |    unnest(range(0, k)) AS i
+         |  FROM v""".stripMargin),
+    """|SELECT media_id, CAST(n_frames AS BIGINT) AS n_frames,
+       |  CAST((i * n_frames) // k AS BIGINT) AS frame_idx,
+       |  CAST(((i * n_frames) // k) * (n_bytes // n_frames) AS BIGINT) AS frame_off
+       |FROM f
+       |ORDER BY media_id, frame_idx""".stripMargin)
 
   /**
    * Resize stage (n54): every visual record mapped to its target-box fit —
@@ -169,22 +191,16 @@ object Multimodal {
       .toDF().orderBy("media_id")
 
   /** The decode-stub dims plus the integer box fit. */
-  val resizeOracle: String =
-    """WITH m AS (
-      |  SELECT doc_id AS media_id,
-      |    ['image', 'audio', 'video'][(doc_id % 3 + 1)::INT] AS kind,
-      |    octet_length(encode(text)) AS n
-      |  FROM documents
-      |), d AS (
-      |  SELECT media_id, kind, 320 + n % 320 AS width, 240 + n % 240 AS height
-      |  FROM m WHERE kind IN ('image', 'video')
-      |)
-      |SELECT media_id, kind,
-      |  CAST(width AS BIGINT) AS width, CAST(height AS BIGINT) AS height,
-      |  CAST(width * 256 // greatest(width, height) AS BIGINT) AS out_w,
-      |  CAST(height * 256 // greatest(width, height) AS BIGINT) AS out_h
-      |FROM d
-      |ORDER BY media_id""".stripMargin
+  val resizeOracle: String = sql(Seq(records(stubBytes),
+    "d" ->
+      """|  SELECT media_id, kind, 320 + n % 320 AS width, 240 + n % 240 AS height
+         |  FROM m WHERE kind IN ('image', 'video')""".stripMargin),
+    """|SELECT media_id, kind,
+       |  CAST(width AS BIGINT) AS width, CAST(height AS BIGINT) AS height,
+       |  CAST(width * 256 // greatest(width, height) AS BIGINT) AS out_w,
+       |  CAST(height * 256 // greatest(width, height) AS BIGINT) AS out_h
+       |FROM d
+       |ORDER BY media_id""".stripMargin)
 
   /**
    * Feature-extraction stage (n55): a fixed-dim embedding per media
@@ -227,24 +243,15 @@ object Multimodal {
 
   /** md5(payload) = md5(text) (the payload IS the UTF-8 text bytes); each
     * feature from one 8-hex chunk via digit arithmetic and shifts. */
-  val featureOracle: String =
-    """WITH m AS (
-      |  SELECT doc_id AS media_id,
-      |    ['image', 'audio', 'video'][(doc_id % 3 + 1)::INT] AS kind,
-      |    md5(text) AS h
-      |  FROM documents
-      |)
-      |SELECT media_id, kind,
-      |  CAST(list_sum([(strpos('0123456789abcdef', substr(h, 0 * 8 + d + 1, 1)) - 1)
-      |    * (1 << (4 * (7 - d))) for d in range(8)]) AS DOUBLE) / 2147483648.0 - 1.0 AS f0,
-      |  CAST(list_sum([(strpos('0123456789abcdef', substr(h, 1 * 8 + d + 1, 1)) - 1)
-      |    * (1 << (4 * (7 - d))) for d in range(8)]) AS DOUBLE) / 2147483648.0 - 1.0 AS f1,
-      |  CAST(list_sum([(strpos('0123456789abcdef', substr(h, 2 * 8 + d + 1, 1)) - 1)
-      |    * (1 << (4 * (7 - d))) for d in range(8)]) AS DOUBLE) / 2147483648.0 - 1.0 AS f2,
-      |  CAST(list_sum([(strpos('0123456789abcdef', substr(h, 3 * 8 + d + 1, 1)) - 1)
-      |    * (1 << (4 * (7 - d))) for d in range(8)]) AS DOUBLE) / 2147483648.0 - 1.0 AS f3
-      |FROM m
-      |ORDER BY media_id""".stripMargin
+  val featureOracle: String = {
+    val fs = (0 until 4).map(c =>
+      s"  CAST(${hexChunk(s"$c * 8", "    ")} AS DOUBLE) / 2147483648.0 - 1.0 AS f$c")
+    sql(Seq(records("md5(text) AS h")),
+      s"""|SELECT media_id, kind,
+          |${fs.mkString(",\n")}
+          |FROM m
+          |ORDER BY media_id""".stripMargin)
+  }
 
   // ------------------------------ media end-to-end dedup (n56)
 
@@ -264,7 +271,7 @@ object Multimodal {
    * [-1, 1)), so DuckDB rebuilds bit-identical doubles; a real vision /
    * audio encoder replaces the digest call and nothing else.
    */
-  def featureExtractWide(media: Dataset[MediaRecord], salts: Int = 16,
+  def featureExtractWide(media: Dataset[MediaRecord], salts: Int = WideSalts,
                          batchSize: Int = 64): Dataset[MediaFeatureVec] = {
     val spark = media.sparkSession
     import spark.implicits._
@@ -314,7 +321,7 @@ object Multimodal {
   private[graft] def plantedMediaCopies(feats: DataFrame): DataFrame =
     feats.select(col("media_id"),
         transform(col("fv"), (x, i) =>
-          x + lit(0.0078125) *
+          x + lit(Dedup.PlantJitter) *
             (pmod(col("media_id") * 31 + i + 1, lit(7)) - 3)).as("v"))
       .select((col("media_id") + lit(Dedup.PlantOffset)).as("vec_id"), col("v"))
 
@@ -327,7 +334,8 @@ object Multimodal {
    * scale story (candidates linear in rows × bands, constant-width shuffle
    * keys, no driver materialization) is inherited, not re-implemented.
    */
-  def mediaNearDupPairs(feats: DataFrame, threshold: Double = 0.9,
+  def mediaNearDupPairs(feats: DataFrame,
+                        threshold: Double = Dedup.NearDupCosine,
                         maxBandBucket: Int = Int.MaxValue): DataFrame = {
     val base = feats.select(col("media_id").as("vec_id"), col("fv").as("v"))
     Dedup.bandedCosinePairs(base.unionByName(plantedMediaCopies(feats)),
@@ -381,74 +389,39 @@ object Multimodal {
     * the 0.9 threshold sits ≥ 0.09 from every actual value (planted
     * ≈ 0.9996, exact dups 1.0, bulk ≤ ~0.6), so cross-engine summation
     * order cannot flip a verdict. */
-  val mediaDedupManifestOracle: String =
-    """WITH RECURSIVE m AS (
-      |  SELECT doc_id AS media_id,
-      |    ['image', 'audio', 'video'][(doc_id % 3 + 1)::INT] AS kind,
-      |    text
-      |  FROM documents
-      |), hs AS (
-      |  SELECT media_id, s, md5(text || '|' || CAST(s AS VARCHAR)) AS h
-      |  FROM m, (SELECT unnest(range(16)) AS s)
-      |), base AS (
-      |  -- column order (vec_id, v, i) must match pl's: the UNION ALL in ex
-      |  -- is positional
-      |  SELECT media_id AS vec_id,
-      |    CAST(list_sum([(strpos('0123456789abcdef', substr(h, c * 8 + d + 1, 1)) - 1)
-      |      * (1 << (4 * (7 - d))) for d in range(8)]) AS DOUBLE)
-      |      / 2147483648.0 - 1.0 AS v,
-      |    s * 4 + c + 1 AS i
-      |  FROM hs, (SELECT unnest(range(4)) AS c)
-      |), pl AS (
-      |  SELECT vec_id + 1000000 AS vec_id, pv AS v, i FROM
-      |    (SELECT vec_id, v + CAST(0.0078125 AS DOUBLE) * ((vec_id*31 + i) % 7 - 3) AS pv, i FROM base)
-      |), ex AS (
-      |  SELECT * FROM base UNION ALL SELECT * FROM pl
-      |), n AS (
-      |  SELECT vec_id, SQRT(SUM(v * v)) AS nrm FROM ex GROUP BY vec_id
-      |), u AS (
-      |  SELECT ex.vec_id, v / nrm AS u, i FROM ex JOIN n USING (vec_id)
-      |), p AS (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.u * b.u) AS cosine
-      |  FROM u a JOIN u b ON a.i = b.i AND a.vec_id < b.vec_id
-      |  GROUP BY 1, 2
-      |), pairs AS (
-      |  SELECT vec_a, vec_b FROM p WHERE cosine >= 0.9
-      |), edges AS (
-      |  SELECT vec_a AS src, vec_b AS dst FROM pairs
-      |  UNION ALL
-      |  SELECT vec_b AS src, vec_a AS dst FROM pairs
-      |), reach AS (
-      |  SELECT DISTINCT src AS vec_id, src AS r FROM edges
-      |  UNION
-      |  SELECT e.dst AS vec_id, reach.r
-      |  FROM reach JOIN edges e ON e.src = reach.vec_id
-      |), lab AS (
-      |  SELECT vec_id, MIN(r) AS cluster_id FROM reach GROUP BY vec_id
-      |), f AS (
-      |  SELECT media_id, kind, md5(text) AS fp FROM m
-      |), pf AS (
-      |  SELECT media_id + 1000000 AS media_id, kind,
-      |    'reenc:' || CAST(media_id + 1000000 AS VARCHAR) AS fp
-      |  FROM f
-      |), corp AS (
-      |  SELECT * FROM f UNION ALL SELECT * FROM pf
-      |), k AS (
-      |  SELECT fp, MIN(media_id) AS fp_keep FROM corp GROUP BY fp
-      |)
-      |SELECT c.media_id, c.kind,
-      |  CASE WHEN c.media_id <> k.fp_keep THEN 'exact_dup'
-      |       WHEN l.cluster_id IS NOT NULL AND c.media_id <> l.cluster_id
-      |         THEN 'near_dup'
-      |       ELSE 'keep' END AS verdict,
-      |  CASE WHEN c.media_id <> k.fp_keep THEN k.fp_keep
-      |       WHEN l.cluster_id IS NOT NULL AND c.media_id <> l.cluster_id
-      |         THEN l.cluster_id
-      |       ELSE c.media_id END AS keep_media
-      |FROM corp c
-      |JOIN k USING (fp)
-      |LEFT JOIN lab l ON l.vec_id = c.media_id
-      |ORDER BY c.media_id""".stripMargin
+  val mediaDedupManifestOracle: String = sql(mediaClosure(records("text"),
+    """|  -- column order (vec_id, v, i) must match pl's: the UNION ALL in ex
+       |  -- is positional
+       |""".stripMargin) ++ Seq(labels("vec_id"),
+    "f" -> "  SELECT media_id, kind, md5(text) AS fp FROM m",
+    "pf" ->
+      s"""|  SELECT media_id + ${Dedup.PlantOffset} AS media_id, kind,
+          |    'reenc:' || CAST(media_id + ${Dedup.PlantOffset} AS VARCHAR) AS fp
+          |  FROM f""".stripMargin,
+    "corp" -> "  SELECT * FROM f UNION ALL SELECT * FROM pf",
+    keepers("media_id", "corp")),
+    s"""|SELECT c.media_id, c.kind,
+        |${verdict("c.media_id", "keep_media")}
+        |FROM corp c
+        |JOIN k USING (fp)
+        |LEFT JOIN lab l ON l.vec_id = c.media_id
+        |ORDER BY c.media_id""".stripMargin, recursive = true)
+
+  /** The media records `m` to [[featureExtractWide]]'s components (`hs`,
+    * `base`, with `note` ahead of `base`'s body), their planted re-encode
+    * copies, the pairs at [[Dedup.NearDupCosine]] and their closure. */
+  private def mediaClosure(m: Cte, note: String = ""): Seq[Cte] = Seq(m,
+    "hs" ->
+      s"""|  SELECT media_id, s, md5(text || '|' || CAST(s AS VARCHAR)) AS h
+          |  FROM m, (SELECT unnest(range($WideSalts)) AS s)""".stripMargin,
+    "base" ->
+      s"""|$note  SELECT media_id AS vec_id,
+          |    CAST(${hexChunk("c * 8", "      ")} AS DOUBLE)
+          |      / 2147483648.0 - 1.0 AS v,
+          |    s * 4 + c + 1 AS i
+          |  FROM hs, (SELECT unnest(range(4)) AS c)""".stripMargin) ++
+    plantedPairs(Dedup.PlantOffset, Dedup.PlantJitter, Dedup.NearDupCosine) ++
+    closure("vec_a", "vec_b", "vec_id")
 
   /**
    * The consumable end of the media dedup family (n57) — the n36/n53 shape
@@ -487,59 +460,9 @@ object Multimodal {
 
   /** The n56 closure CTEs plus the anti-join and per-kind rollup (the
     * dedupedEmbeddingCorpusOracle shape on the media modality). */
-  val mediaDedupCorpusOracle: String =
-    """WITH RECURSIVE m AS (
-      |  SELECT doc_id AS media_id,
-      |    ['image', 'audio', 'video'][(doc_id % 3 + 1)::INT] AS kind,
-      |    text
-      |  FROM documents
-      |), hs AS (
-      |  SELECT media_id, s, md5(text || '|' || CAST(s AS VARCHAR)) AS h
-      |  FROM m, (SELECT unnest(range(16)) AS s)
-      |), base AS (
-      |  SELECT media_id AS vec_id,
-      |    CAST(list_sum([(strpos('0123456789abcdef', substr(h, c * 8 + d + 1, 1)) - 1)
-      |      * (1 << (4 * (7 - d))) for d in range(8)]) AS DOUBLE)
-      |      / 2147483648.0 - 1.0 AS v,
-      |    s * 4 + c + 1 AS i
-      |  FROM hs, (SELECT unnest(range(4)) AS c)
-      |), pl AS (
-      |  SELECT vec_id + 1000000 AS vec_id, pv AS v, i FROM
-      |    (SELECT vec_id, v + CAST(0.0078125 AS DOUBLE) * ((vec_id*31 + i) % 7 - 3) AS pv, i FROM base)
-      |), ex AS (
-      |  SELECT * FROM base UNION ALL SELECT * FROM pl
-      |), n AS (
-      |  SELECT vec_id, SQRT(SUM(v * v)) AS nrm FROM ex GROUP BY vec_id
-      |), u AS (
-      |  SELECT ex.vec_id, v / nrm AS u, i FROM ex JOIN n USING (vec_id)
-      |), p AS (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.u * b.u) AS cosine
-      |  FROM u a JOIN u b ON a.i = b.i AND a.vec_id < b.vec_id
-      |  GROUP BY 1, 2
-      |), pairs AS (
-      |  SELECT vec_a, vec_b FROM p WHERE cosine >= 0.9
-      |), edges AS (
-      |  SELECT vec_a AS src, vec_b AS dst FROM pairs
-      |  UNION ALL
-      |  SELECT vec_b AS src, vec_a AS dst FROM pairs
-      |), reach AS (
-      |  SELECT DISTINCT src AS vec_id, src AS r FROM edges
-      |  UNION
-      |  SELECT e.dst AS vec_id, reach.r
-      |  FROM reach JOIN edges e ON e.src = reach.vec_id
-      |), losers AS (
-      |  SELECT vec_id FROM reach GROUP BY vec_id HAVING vec_id <> MIN(r)
-      |), corp AS (
-      |  SELECT media_id, kind FROM m
-      |  UNION ALL
-      |  SELECT media_id + 1000000 AS media_id, kind FROM m
-      |)
-      |SELECT c.kind, COUNT(*) AS n_total,
-      |  CAST(COUNT(*) FILTER (l.vec_id IS NULL) AS BIGINT) AS n_kept,
-      |  CAST(COUNT(*) FILTER (l.vec_id IS NOT NULL) AS BIGINT) AS n_dropped
-      |FROM corp c LEFT JOIN losers l ON l.vec_id = c.media_id
-      |GROUP BY c.kind
-      |ORDER BY c.kind""".stripMargin
+  val mediaDedupCorpusOracle: String = sql(mediaClosure(records("text")) ++
+    Seq(losers("vec_id"), plantedCorpus("media_id", "kind", "m", Dedup.PlantOffset)),
+    keptRollup("kind", "ON l.vec_id = c.media_id"), recursive = true)
 
   /**
    * Incremental / streaming media dedup (n58): the media feature corpus
@@ -588,49 +511,13 @@ object Multimodal {
 
   /** The n56 closure emitting the cluster table (every matched media id —
     * here all of them, since every record has a planted partner). */
-  val streamingMediaClustersOracle: String =
-    """WITH RECURSIVE m AS (
-      |  SELECT doc_id AS media_id, text FROM documents
-      |), hs AS (
-      |  SELECT media_id, s, md5(text || '|' || CAST(s AS VARCHAR)) AS h
-      |  FROM m, (SELECT unnest(range(16)) AS s)
-      |), base AS (
-      |  SELECT media_id AS vec_id,
-      |    CAST(list_sum([(strpos('0123456789abcdef', substr(h, c * 8 + d + 1, 1)) - 1)
-      |      * (1 << (4 * (7 - d))) for d in range(8)]) AS DOUBLE)
-      |      / 2147483648.0 - 1.0 AS v,
-      |    s * 4 + c + 1 AS i
-      |  FROM hs, (SELECT unnest(range(4)) AS c)
-      |), pl AS (
-      |  SELECT vec_id + 1000000 AS vec_id, pv AS v, i FROM
-      |    (SELECT vec_id, v + CAST(0.0078125 AS DOUBLE) * ((vec_id*31 + i) % 7 - 3) AS pv, i FROM base)
-      |), ex AS (
-      |  SELECT * FROM base UNION ALL SELECT * FROM pl
-      |), n AS (
-      |  SELECT vec_id, SQRT(SUM(v * v)) AS nrm FROM ex GROUP BY vec_id
-      |), u AS (
-      |  SELECT ex.vec_id, v / nrm AS u, i FROM ex JOIN n USING (vec_id)
-      |), p AS (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.u * b.u) AS cosine
-      |  FROM u a JOIN u b ON a.i = b.i AND a.vec_id < b.vec_id
-      |  GROUP BY 1, 2
-      |), pairs AS (
-      |  SELECT vec_a, vec_b FROM p WHERE cosine >= 0.9
-      |), edges AS (
-      |  SELECT vec_a AS src, vec_b AS dst FROM pairs
-      |  UNION ALL
-      |  SELECT vec_b AS src, vec_a AS dst FROM pairs
-      |), reach AS (
-      |  SELECT DISTINCT src AS vec_id, src AS r FROM edges
-      |  UNION
-      |  SELECT e.dst AS vec_id, reach.r
-      |  FROM reach JOIN edges e ON e.src = reach.vec_id
-      |)
-      |SELECT vec_id AS media_id, MIN(r) AS cluster_id,
-      |  vec_id = MIN(r) AS is_canonical
-      |FROM reach
-      |GROUP BY vec_id
-      |ORDER BY media_id""".stripMargin
+  val streamingMediaClustersOracle: String = sql(
+    mediaClosure("m" -> "  SELECT doc_id AS media_id, text FROM documents"),
+    """|SELECT vec_id AS media_id, MIN(r) AS cluster_id,
+       |  vec_id = MIN(r) AS is_canonical
+       |FROM reach
+       |GROUP BY vec_id
+       |ORDER BY media_id""".stripMargin, recursive = true)
 
   /**
    * Composed media pipeline (n59) — the [[Pipeline.pipelineQuery]] (n33)
@@ -669,41 +556,26 @@ object Multimodal {
 
   /** Decode-stub metadata from octet lengths + md5 keep-first + the gate
     * predicates + the n14 hash-bucket split + the rollup. */
-  val mediaPipelineOracle: String =
-    """WITH m AS (
-      |  SELECT doc_id AS media_id,
-      |    ['image', 'audio', 'video'][(doc_id % 3 + 1)::INT] AS kind,
-      |    octet_length(encode(text)) AS n, md5(text) AS fp
-      |  FROM documents
-      |), d AS (
-      |  SELECT media_id, kind, fp, n AS n_bytes,
-      |    CASE WHEN kind IN ('image', 'video') THEN 320 + n % 320 ELSE 0 END AS width,
-      |    CASE WHEN kind IN ('image', 'video') THEN 240 + n % 240 ELSE 0 END AS height,
-      |    CASE WHEN kind = 'audio' THEN 8000 + (n % 3) * 8000 ELSE 0 END AS sample_rate
-      |  FROM m
-      |), dd AS (
-      |  SELECT * FROM (
-      |    SELECT media_id, kind, n_bytes, width, height, sample_rate,
-      |      row_number() OVER (PARTITION BY fp ORDER BY media_id) AS rk
-      |    FROM d) WHERE rk = 1
-      |), q AS (
-      |  SELECT * FROM dd
-      |  WHERE (kind IN ('image', 'video') AND width >= 360 AND height >= 270)
-      |     OR (kind = 'audio' AND sample_rate >= 16000)
-      |), s AS (
-      |  SELECT *, CAST(('0x' || substring(md5('graft:' || CAST(media_id AS VARCHAR)), 1, 8))
-      |                 AS UBIGINT) % 100 AS b
-      |  FROM q
-      |)
-      |SELECT kind,
-      |  CASE WHEN b < 80 THEN 'train'
-      |       WHEN b < 90 THEN 'validation'
-      |       ELSE 'test' END AS split,
-      |  COUNT(*) AS n_media,
-      |  CAST(SUM(n_bytes) AS BIGINT) AS total_bytes
-      |FROM s
-      |GROUP BY 1, 2
-      |ORDER BY kind, split""".stripMargin
+  val mediaPipelineOracle: String = sql(Seq(
+    records(s"$stubBytes, md5(text) AS fp"),
+    "d" ->
+      s"""|  SELECT media_id, kind, fp, n AS n_bytes,
+          |$stubDims
+          |$stubRate
+          |  FROM m""".stripMargin,
+    "dd" ->
+      """|  SELECT * FROM (
+         |    SELECT media_id, kind, n_bytes, width, height, sample_rate,
+         |      row_number() OVER (PARTITION BY fp ORDER BY media_id) AS rk
+         |    FROM d) WHERE rk = 1""".stripMargin,
+    "q" ->
+      """|  SELECT * FROM dd
+         |  WHERE (kind IN ('image', 'video') AND width >= 360 AND height >= 270)
+         |     OR (kind = 'audio' AND sample_rate >= 16000)""".stripMargin,
+    splitBuckets("media_id")),
+    splitRollup("kind",
+      """|  COUNT(*) AS n_media,
+         |  CAST(SUM(n_bytes) AS BIGINT) AS total_bytes""".stripMargin))
 
   /** Per-kind metadata rollup over the decoded media — the oracle reproduces
     * the stub's arithmetic from octet lengths. */
@@ -717,28 +589,21 @@ object Multimodal {
         max(col("sample_rate")).as("max_sample_rate"))
       .orderBy("kind")
 
-  val multimodalOracle: String =
-    """WITH m AS (
-      |  SELECT doc_id AS media_id,
-      |    ['image', 'audio', 'video'][(doc_id % 3 + 1)::INT] AS kind,
-      |    octet_length(encode(text)) AS n
-      |  FROM documents
-      |), d AS (
-      |  SELECT media_id, kind, n AS n_bytes,
-      |    CASE WHEN kind IN ('image', 'video') THEN 320 + n % 320 ELSE 0 END AS width,
-      |    CASE WHEN kind IN ('image', 'video') THEN 240 + n % 240 ELSE 0 END AS height,
-      |    CASE WHEN kind = 'image' THEN 1
-      |         WHEN kind = 'video' THEN 1 + n % 100 ELSE 0 END AS n_frames,
-      |    CASE WHEN kind = 'audio' THEN 8000 + (n % 3) * 8000 ELSE 0 END AS sample_rate
-      |  FROM m
-      |)
-      |SELECT kind,
-      |  COUNT(*) AS n_media,
-      |  CAST(SUM(n_bytes) AS BIGINT) AS total_bytes,
-      |  CAST(SUM(width) AS DOUBLE) / COUNT(*) AS avg_width,
-      |  CAST(SUM(n_frames) AS BIGINT) AS total_frames,
-      |  CAST(MAX(sample_rate) AS BIGINT) AS max_sample_rate
-      |FROM d
-      |GROUP BY kind
-      |ORDER BY kind""".stripMargin
+  val multimodalOracle: String = sql(Seq(records(stubBytes),
+    "d" ->
+      s"""|  SELECT media_id, kind, n AS n_bytes,
+          |$stubDims
+          |    CASE WHEN kind = 'image' THEN 1
+          |         WHEN kind = 'video' THEN 1 + n % 100 ELSE 0 END AS n_frames,
+          |$stubRate
+          |  FROM m""".stripMargin),
+    """|SELECT kind,
+       |  COUNT(*) AS n_media,
+       |  CAST(SUM(n_bytes) AS BIGINT) AS total_bytes,
+       |  CAST(SUM(width) AS DOUBLE) / COUNT(*) AS avg_width,
+       |  CAST(SUM(n_frames) AS BIGINT) AS total_frames,
+       |  CAST(MAX(sample_rate) AS BIGINT) AS max_sample_rate
+       |FROM d
+       |GROUP BY kind
+       |ORDER BY kind""".stripMargin)
 }

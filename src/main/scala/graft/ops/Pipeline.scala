@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.queries.Tables._
+import OracleSql._
 
 /**
  * Composed corpus-pipeline operators: the stages the rest of `graft.ops`
@@ -16,6 +17,10 @@ import graft.queries.Tables._
  * imperative pipeline would.
  */
 object Pipeline {
+
+  /** [[Corpus.hostCol]] in the twins, rebuilt by concatenation (the
+    * fixture's URL embeds source and lang). */
+  private val host = "source || '.example-' || lang || '.com'"
 
   // --------------------------------------------- n32 host canonicalization
   /**
@@ -46,25 +51,28 @@ object Pipeline {
       .orderBy("host")
   }
 
-  val hostCanonicalOracle: String =
-    """WITH s AS (
-      |  SELECT doc_id,
-      |    source || '.example-' || lang || '.com' AS host,
-      |    CAST(len(string_split_regex(lower(text), '\s+')) AS BIGINT) AS n_words,
-      |    CAST(len(list_distinct(string_split_regex(lower(text), '\s+'))) AS BIGINT) AS n_distinct
-      |  FROM documents
-      |), r AS (
-      |  SELECT host, doc_id, n_words, n_distinct,
-      |    CAST(n_distinct AS DOUBLE) / n_words AS ttr,
-      |    row_number() OVER (PARTITION BY host
-      |                       ORDER BY CAST(n_distinct AS DOUBLE) / n_words DESC, doc_id ASC) AS rk
-      |  FROM s
-      |)
-      |SELECT host, doc_id, n_words, n_distinct, ttr
-      |FROM r WHERE rk = 1
-      |ORDER BY host""".stripMargin
+  val hostCanonicalOracle: String = sql(Seq(
+    "s" ->
+      s"""|  SELECT doc_id,
+          |    $host AS host,
+          |    CAST(len($splitWords) AS BIGINT) AS n_words,
+          |    CAST(len(list_distinct($splitWords)) AS BIGINT) AS n_distinct
+          |  FROM documents""".stripMargin,
+    "r" ->
+      """|  SELECT host, doc_id, n_words, n_distinct,
+         |    CAST(n_distinct AS DOUBLE) / n_words AS ttr,
+         |    row_number() OVER (PARTITION BY host
+         |                       ORDER BY CAST(n_distinct AS DOUBLE) / n_words DESC, doc_id ASC) AS rk
+         |  FROM s""".stripMargin),
+    """|SELECT host, doc_id, n_words, n_distinct, ttr
+       |FROM r WHERE rk = 1
+       |ORDER BY host""".stripMargin)
 
   // --------------------------------------------------- n62 per-domain quota
+
+  /** The documents each host keeps (n62, n67). */
+  final val DomainQuota = 10
+
   /**
    * Per-domain quota enforcement — the crawl-balancing pass that keeps a
    * corpus from being dominated by its largest hosts (the quota n24's
@@ -89,7 +97,7 @@ object Pipeline {
    * fabricating its own key (round-14 verdict #6).
    */
   def domainCapQuery(spark: SparkSession, dir: String,
-                     perHost: Int = 10): DataFrame = {
+                     perHost: Int = DomainQuota): DataFrame = {
     val scored = documents(spark, dir)
       .select(col("doc_id"), Corpus.hostCol.as("host"),
         TextAnalysis.qualityScoreCol(col("text")).as("quality_score"))
@@ -104,32 +112,22 @@ object Pipeline {
 
   /** The n09 score arithmetic (bit-identical doubles), a row_number cut
     * per host, quota = 10. */
-  val domainCapOracle: String =
-    s"""WITH c AS (
-       |  SELECT doc_id,
-       |    source || '.example-' || lang || '.com' AS host,
-       |    CAST(length(text) AS BIGINT) AS n_chars,
-       |    CAST(len(string_split_regex(lower(text), '\\s+')) AS BIGINT) AS n_words,
-       |    CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-       |          w -> w IN (${TextAnalysis.qualityStopwords.map(w => s"'$w'").mkString(", ")}))) AS BIGINT) AS n_stopwords,
-       |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT) AS alpha_cnt
-       |  FROM documents
-       |), s AS (
-       |  SELECT doc_id, host,
-       |    least(CAST(n_chars AS DOUBLE) / 500.0, 1.0) * 0.25
-       |      + (CAST(n_stopwords AS DOUBLE) / n_words) * 0.25
-       |      + (CAST(alpha_cnt AS DOUBLE) / n_chars) * 0.25
-       |      + least((CAST(alpha_cnt AS DOUBLE) / n_words) / 8.0, 1.0) * 0.25 AS quality_score
-       |  FROM c
-       |), r AS (
-       |  SELECT host, doc_id, quality_score,
-       |    CAST(row_number() OVER (PARTITION BY host
-       |                            ORDER BY quality_score DESC, doc_id) AS BIGINT) AS rank
-       |  FROM s
-       |)
-       |SELECT host, rank, doc_id, quality_score
-       |FROM r WHERE rank <= 10
-       |ORDER BY host, rank""".stripMargin
+  val domainCapOracle: String = sql(Seq(
+    "c" -> qualityCounts(
+      s"""|doc_id,
+          |    $host AS host""".stripMargin, TextAnalysis.qualityStopwords),
+    "s" ->
+      s"""|  SELECT doc_id, host,
+          |    ${qualityTerms("      ")} AS quality_score
+          |  FROM c""".stripMargin,
+    "r" ->
+      """|  SELECT host, doc_id, quality_score,
+         |    CAST(row_number() OVER (PARTITION BY host
+         |                            ORDER BY quality_score DESC, doc_id) AS BIGINT) AS rank
+         |  FROM s""".stripMargin),
+    s"""|SELECT host, rank, doc_id, quality_score
+        |FROM r WHERE rank <= $DomainQuota
+        |ORDER BY host, rank""".stripMargin)
 
   // ----------------------------------------------------- n64 split leakage
   /**
@@ -161,45 +159,22 @@ object Pipeline {
 
   /** The n02 exact-Jaccard pair SQL with the n14 split CASE applied to
     * both endpoints and a straddle filter. */
-  val splitLeakageOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), sh AS (
-      |  SELECT doc_id,
-      |    list_distinct([ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
-      |                   for i in range(1, len(ws) - 1)]) AS shingles
-      |  FROM w WHERE len(ws) >= 3
-      |), ex AS (
-      |  SELECT doc_id, unnest(shingles) AS sh FROM sh
-      |), common AS (
-      |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS n_common
-      |  FROM ex x JOIN ex y USING (sh)
-      |  WHERE x.doc_id < y.doc_id
-      |  GROUP BY 1, 2
-      |), sz AS (SELECT doc_id, len(shingles) AS sz FROM sh
-      |), p AS (
-      |  SELECT doc_a, doc_b,
-      |    CAST(n_common AS DOUBLE) / (a.sz + b.sz - n_common) AS jaccard
-      |  FROM common
-      |  JOIN sz a ON a.doc_id = doc_a
-      |  JOIN sz b ON b.doc_id = doc_b
-      |  WHERE CAST(n_common AS DOUBLE) / (a.sz + b.sz - n_common) >= 0.8
-      |), s AS (
-      |  SELECT doc_id,
-      |    CASE WHEN b < 80 THEN 'train'
-      |         WHEN b < 90 THEN 'validation'
-      |         ELSE 'test' END AS split
-      |  FROM (SELECT doc_id,
-      |          CAST(('0x' || substring(md5('graft:' || CAST(doc_id AS VARCHAR)), 1, 8))
-      |               AS UBIGINT) % 100 AS b
-      |        FROM documents)
-      |)
-      |SELECT p.doc_a, sa.split AS split_a, p.doc_b, sb.split AS split_b, p.jaccard
-      |FROM p
-      |JOIN s sa ON sa.doc_id = p.doc_a
-      |JOIN s sb ON sb.doc_id = p.doc_b
-      |WHERE sa.split <> sb.split
-      |ORDER BY p.doc_a, p.doc_b""".stripMargin
+  val splitLeakageOracle: String = sql(
+    jaccardPairs(Dedup.ShingleSize, Dedup.JaccardThreshold,
+      select = pairJaccard, name = "p") :+
+    "s" ->
+      s"""|  SELECT doc_id,
+          |${splitCase("    ")}
+          |  FROM (SELECT doc_id,
+          |          CAST(('0x' || substring(md5('graft:' || CAST(doc_id AS VARCHAR)), 1, 8))
+          |               AS UBIGINT) % 100 AS b
+          |        FROM documents)""".stripMargin,
+    """|SELECT p.doc_a, sa.split AS split_a, p.doc_b, sb.split AS split_b, p.jaccard
+       |FROM p
+       |JOIN s sa ON sa.doc_id = p.doc_a
+       |JOIN s sb ON sb.doc_id = p.doc_b
+       |WHERE sa.split <> sb.split
+       |ORDER BY p.doc_a, p.doc_b""".stripMargin)
 
   // ------------------------------------------------ n33 end-to-end pipeline
   /**
@@ -237,31 +212,20 @@ object Pipeline {
       .orderBy("source", "split")
   }
 
-  val pipelineOracle: String =
-    """WITH base AS (
-      |  SELECT doc_id, source, md5(text) AS fp,
-      |    CAST(len(string_split_regex(lower(text), '\s+')) AS BIGINT) AS n_words,
-      |    n_chars
-      |  FROM documents
-      |), dd AS (
-      |  SELECT * FROM (
-      |    SELECT doc_id, source, n_words, n_chars,
-      |      row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rk
-      |    FROM base) WHERE rk = 1
-      |), q AS (
-      |  SELECT * FROM dd WHERE n_words >= 20 AND n_chars < n_words * 12
-      |), s AS (
-      |  SELECT *, CAST(('0x' || substring(md5('graft:' || CAST(doc_id AS VARCHAR)), 1, 8))
-      |                 AS UBIGINT) % 100 AS b
-      |  FROM q
-      |)
-      |SELECT source,
-      |  CASE WHEN b < 80 THEN 'train'
-      |       WHEN b < 90 THEN 'validation'
-      |       ELSE 'test' END AS split,
-      |  COUNT(*) AS n_docs,
-      |  CAST(SUM(n_words) AS BIGINT) AS n_tokens
-      |FROM s
-      |GROUP BY 1, 2
-      |ORDER BY source, split""".stripMargin
+  val pipelineOracle: String = sql(Seq(
+    "base" ->
+      s"""|  SELECT doc_id, source, md5(text) AS fp,
+          |    CAST(len($splitWords) AS BIGINT) AS n_words,
+          |    n_chars
+          |  FROM documents""".stripMargin,
+    "dd" ->
+      """|  SELECT * FROM (
+         |    SELECT doc_id, source, n_words, n_chars,
+         |      row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rk
+         |    FROM base) WHERE rk = 1""".stripMargin,
+    "q" -> "  SELECT * FROM dd WHERE n_words >= 20 AND n_chars < n_words * 12",
+    splitBuckets("doc_id")),
+    splitRollup("source",
+      """|  COUNT(*) AS n_docs,
+         |  CAST(SUM(n_words) AS BIGINT) AS n_tokens""".stripMargin))
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.Tables._
+import OracleSql._
 
 /**
  * Approximate-nearest-neighbor search and exact similarity over the
@@ -132,55 +133,47 @@ object Similarity {
     * against vec 0, and rank them with the d19 cosine formulation (the
     * final float ranking keeps d19's full-table aggregation shape, the
     * construction the driver gate has hash-proven since round 1). */
-  val annLshOracle: String =
-    s"""WITH pl AS (
-       |  SELECT p, i,
-       |    CAST(list_sum([(strpos('0123456789abcdef',
-       |        substr(md5('p_' || p || '_' || i), d + 1, 1)) - 1)
-       |        * (1 << (4 * (7 - d))) for d in range(8)]) AS BIGINT)
-       |      - 2147483648 AS comp
-       |  FROM range(${AnnBands * AnnBits}) t(p), range(64) s(i)
-       |), ex AS (
-       |  SELECT vec_id, CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS i,
-       |    unnest(CAST(embedding AS DOUBLE[])) AS x
-       |  FROM embeddings
-       |), dots AS (
-       |  SELECT vec_id, p,
-       |    SUM(CAST(floor(x * 1048576.0) AS BIGINT) * comp) AS dot
-       |  FROM ex JOIN pl USING (i)
-       |  GROUP BY 1, 2
-       |), bnd AS (
-       |  SELECT vec_id, p // $AnnBits AS band,
-       |    SUM(CASE WHEN dot > 0
-       |        THEN 1 << CAST(${AnnBits - 1} - (p % $AnnBits) AS INT)
-       |        ELSE 0 END) AS bh
-       |  FROM dots GROUP BY 1, 2
-       |), cand AS (
-       |  SELECT DISTINCT e.vec_id
-       |  FROM bnd e JOIN bnd q ON e.band = q.band AND e.bh = q.bh
-       |  WHERE q.vec_id = 0 AND e.vec_id <> 0
-       |), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-       |ex2 AS (
-       |  SELECT vec_id, label, unnest(CAST(embedding AS DOUBLE[])) AS a,
-       |    generate_subscripts(embedding, 1) AS i
-       |  FROM embeddings WHERE vec_id <> 0
-       |), qx AS (
-       |  SELECT unnest(CAST(qv AS DOUBLE[])) AS b,
-       |    generate_subscripts(qv, 1) AS i
-       |  FROM q
-       |), s AS (
-       |  -- scored over the FULL table in d19's exact shape, candidates
+  val annLshOracle: String = d19Scored(Seq(
+    planes("pl", "p", AnnBands * AnnBits), components, dots("p", "pl"),
+    "bnd" ->
+      s"""|  SELECT vec_id, p // $AnnBits AS band,
+          |    SUM(CASE WHEN dot > 0
+          |        THEN 1 << CAST(${AnnBits - 1} - (p % $AnnBits) AS INT)
+          |        ELSE 0 END) AS bh
+          |  FROM dots GROUP BY 1, 2""".stripMargin,
+    "cand" ->
+      """|  SELECT DISTINCT e.vec_id
+         |  FROM bnd e JOIN bnd q ON e.band = q.band AND e.bh = q.bh
+         |  WHERE q.vec_id = 0 AND e.vec_id <> 0""".stripMargin),
+    """|  -- scored over the FULL table in d19's exact shape, candidates
        |  -- applied AFTER aggregation: restricting the scan first perturbs
        |  -- the summation order and drifts the last ulp off the d19-proven
        |  -- cross-engine agreement
-       |  SELECT vec_id, any_value(label) AS label,
-       |    SUM(a * b) AS dot, SUM(a * a) AS na2, SUM(b * b) AS nb2
-       |  FROM ex2 JOIN qx USING (i) GROUP BY vec_id
-       |)
-       |SELECT vec_id, label, dot / (SQRT(na2) * SQRT(nb2)) AS score
+       |""".stripMargin,
+    """|SELECT vec_id, label, dot / (SQRT(na2) * SQRT(nb2)) AS score
        |FROM s JOIN cand USING (vec_id)
        |ORDER BY score DESC, vec_id
-       |LIMIT 5""".stripMargin
+       |LIMIT 5""".stripMargin)
+
+  /** `head`, then d19's exact cosine of every vector against vec 0 over
+    * the full table (`s`, with `note` ahead of its body), then `tail`. */
+  private def d19Scored(head: Seq[Cte], note: String, tail: String): String = {
+    val q = "q" -> "SELECT embedding AS qv FROM embeddings WHERE vec_id = 0"
+    val scored = Seq(
+      "ex2" ->
+        """|  SELECT vec_id, label, unnest(CAST(embedding AS DOUBLE[])) AS a,
+           |    generate_subscripts(embedding, 1) AS i
+           |  FROM embeddings WHERE vec_id <> 0""".stripMargin,
+      "qx" ->
+        """|  SELECT unnest(CAST(qv AS DOUBLE[])) AS b,
+           |    generate_subscripts(qv, 1) AS i
+           |  FROM q""".stripMargin,
+      "s" -> (note +
+        """|  SELECT vec_id, any_value(label) AS label,
+           |    SUM(a * b) AS dot, SUM(a * a) AS na2, SUM(b * b) AS nb2
+           |  FROM ex2 JOIN qx USING (i) GROUP BY vec_id""".stripMargin))
+    s"WITH ${ctes(head :+ q)},\n${ctes(scored)}\n$tail"
+  }
 
   // ----------------------------------------------------------- IVF path
 
@@ -238,50 +231,15 @@ object Similarity {
     * both engines by construction), probe the query's top-nProbe
     * cells, and rank probed-cell members with the d19 cosine formulation —
     * the final float ranking keeps d19's full-table aggregation shape. */
-  val ivfOracle: String =
-    s"""WITH dirs AS (
-       |  SELECT c, i,
-       |    CAST(list_sum([(strpos('0123456789abcdef',
-       |        substr(md5('c_' || c || '_' || i), d + 1, 1)) - 1)
-       |        * (1 << (4 * (7 - d))) for d in range(8)]) AS BIGINT)
-       |      - 2147483648 AS comp
-       |  FROM range(${IvfGeometry.Default.nlist}) t(c), range(64) s(i)
-       |), ex AS (
-       |  SELECT vec_id, CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS i,
-       |    unnest(CAST(embedding AS DOUBLE[])) AS x
-       |  FROM embeddings
-       |), dots AS (
-       |  SELECT vec_id, c,
-       |    SUM(CAST(floor(x * 1048576.0) AS BIGINT) * comp) AS dot
-       |  FROM ex JOIN dirs USING (i)
-       |  GROUP BY 1, 2
-       |), assigned AS (
-       |  SELECT vec_id, c AS cell FROM dots
-       |  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id
-       |                             ORDER BY dot DESC, c) = 1
-       |), probed AS (
-       |  SELECT c AS cell FROM dots WHERE vec_id = 0
-       |  ORDER BY dot DESC, c LIMIT ${IvfGeometry.Default.nProbe}
-       |), q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-       |ex2 AS (
-       |  SELECT vec_id, label, unnest(CAST(embedding AS DOUBLE[])) AS a,
-       |    generate_subscripts(embedding, 1) AS i
-       |  FROM embeddings WHERE vec_id <> 0
-       |), qx AS (
-       |  SELECT unnest(CAST(qv AS DOUBLE[])) AS b,
-       |    generate_subscripts(qv, 1) AS i
-       |  FROM q
-       |), s AS (
-       |  SELECT vec_id, any_value(label) AS label,
-       |    SUM(a * b) AS dot, SUM(a * a) AS na2, SUM(b * b) AS nb2
-       |  FROM ex2 JOIN qx USING (i) GROUP BY vec_id
-       |)
-       |SELECT s.vec_id, s.label, s.dot / (SQRT(s.na2) * SQRT(s.nb2)) AS score
+  val ivfOracle: String = d19Scored(Seq(
+    planes("dirs", "c", IvfGeometry.Default.nlist), components, dots(), assigned,
+    probedQuery(0, IvfGeometry.Default.nProbe)), "",
+    """|SELECT s.vec_id, s.label, s.dot / (SQRT(s.na2) * SQRT(s.nb2)) AS score
        |FROM s
        |JOIN assigned ON assigned.vec_id = s.vec_id
        |JOIN probed ON probed.cell = assigned.cell
        |ORDER BY score DESC, s.vec_id
-       |LIMIT 5""".stripMargin
+       |LIMIT 5""".stripMargin)
 
   // ------------------------------------------------- n42 IVF kNN join
 
@@ -545,22 +503,21 @@ object Similarity {
       .orderBy("label", "dim")
   }
 
-  val labelCentroidOracle: String =
-    """WITH q AS (
-      |  SELECT CAST(label AS BIGINT) AS label,
-      |    CAST(i - 1 AS BIGINT) AS dim,
-      |    CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT) AS q
-      |  FROM (SELECT label, embedding[i] AS x, i
-      |        FROM embeddings,
-      |             LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i) r)
-      |)
-      |SELECT label, dim, COUNT(*) AS n_vecs,
-      |  CAST(SUM(q) AS BIGINT) AS sum_q,
-      |  CAST(CAST(SUM(q) AS BIGINT) AS DOUBLE) /
-      |    CAST(COUNT(*) * 1048576 AS DOUBLE) AS mean
-      |FROM q
-      |GROUP BY label, dim
-      |ORDER BY label, dim""".stripMargin
+  val labelCentroidOracle: String = sql(Seq(
+    "q" ->
+      """|  SELECT CAST(label AS BIGINT) AS label,
+         |    CAST(i - 1 AS BIGINT) AS dim,
+         |    CAST(floor(CAST(x AS DOUBLE) * 1048576.0) AS BIGINT) AS q
+         |  FROM (SELECT label, embedding[i] AS x, i
+         |        FROM embeddings,
+         |             LATERAL (SELECT unnest(range(1, len(embedding) + 1)) AS i) r)""".stripMargin),
+    """|SELECT label, dim, COUNT(*) AS n_vecs,
+       |  CAST(SUM(q) AS BIGINT) AS sum_q,
+       |  CAST(CAST(SUM(q) AS BIGINT) AS DOUBLE) /
+       |    CAST(COUNT(*) * 1048576 AS DOUBLE) AS mean
+       |FROM q
+       |GROUP BY label, dim
+       |ORDER BY label, dim""".stripMargin)
 
   // ------------------------------------------------------ n39 kNN graph
 
@@ -607,31 +564,19 @@ object Similarity {
 
   /** All-pairs cosine (the n05 CTE chain, no threshold), symmetrized, then
     * the same (cosine DESC, nbr ASC) row_number cut. */
-  val knnGraphOracle: String =
-    """WITH ex AS (
-      |  SELECT vec_id, unnest(CAST(embedding AS DOUBLE[])) AS v,
-      |    generate_subscripts(embedding, 1) AS i
-      |  FROM embeddings
-      |), n AS (
-      |  SELECT vec_id, SQRT(SUM(v * v)) AS nrm FROM ex GROUP BY vec_id
-      |), u AS (
-      |  SELECT ex.vec_id, v / nrm AS u, i FROM ex JOIN n USING (vec_id)
-      |), p AS (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, SUM(a.u * b.u) AS cosine
-      |  FROM u a JOIN u b ON a.i = b.i AND a.vec_id < b.vec_id
-      |  GROUP BY 1, 2
-      |), sym AS (
-      |  SELECT vec_a AS vec_id, vec_b AS nbr, cosine FROM p
-      |  UNION ALL
-      |  SELECT vec_b AS vec_id, vec_a AS nbr, cosine FROM p
-      |), r AS (
-      |  SELECT vec_id, nbr, cosine,
-      |    CAST(ROW_NUMBER() OVER (PARTITION BY vec_id
-      |                            ORDER BY cosine DESC, nbr) AS BIGINT) AS rank
-      |  FROM sym
-      |)
-      |SELECT vec_id, rank, nbr, cosine
-      |FROM r
-      |WHERE rank <= 3
-      |ORDER BY vec_id, rank""".stripMargin
+  val knnGraphOracle: String = sql((("ex" -> embeddingValues) +:
+    unitVectors()) ++ Seq(cosinePairs,
+    "sym" ->
+      """|  SELECT vec_a AS vec_id, vec_b AS nbr, cosine FROM p
+         |  UNION ALL
+         |  SELECT vec_b AS vec_id, vec_a AS nbr, cosine FROM p""".stripMargin,
+    "r" ->
+      """|  SELECT vec_id, nbr, cosine,
+         |    CAST(ROW_NUMBER() OVER (PARTITION BY vec_id
+         |                            ORDER BY cosine DESC, nbr) AS BIGINT) AS rank
+         |  FROM sym""".stripMargin),
+    """|SELECT vec_id, rank, nbr, cosine
+       |FROM r
+       |WHERE rank <= 3
+       |ORDER BY vec_id, rank""".stripMargin)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.Tables._
+import OracleSql._
 
 /**
  * Text-analysis operators for training-data pipelines (north-star surface):
@@ -13,6 +14,11 @@ import graft.queries.Tables._
  * want for a 100 TB document sweep; every one is DuckDB-oracle-checked.
  */
 object TextAnalysis {
+
+  /** The word width of the cross-document span windows (n28, n34). */
+  final val SpanWidth = 5
+  /** The word width of the dedup segments (n45, n50, n51). */
+  final val SegmentWidth = 4
 
   // -------------------------------------------------------- language ID
 
@@ -51,24 +57,23 @@ object TextAnalysis {
 
   val langIdOracle: String = {
     val cnt = langMarkers.map { case (lang, ms) =>
-      s"CAST(len(list_filter(ws, w -> w IN (${ms.map(m => s"'$m'").mkString(", ")}))) AS BIGINT) AS c_$lang"
+      s"CAST(len(list_filter(ws, w -> w IN (${quoted(ms)}))) AS BIGINT) AS c_$lang"
     }.mkString(",\n  ")
-    val m = s"greatest(${langMarkers.map { case (l, _) => s"c_$l" }.mkString(", ")})"
+    val cs = langMarkers.map { case (l, _) => s"c_$l" }.mkString(", ")
+    val m = s"greatest($cs)"
     val pred = langMarkers.reverse.foldLeft("'und'") { case (acc, (lang, _)) =>
       s"CASE WHEN c_$lang = $m AND $m > 0 THEN '$lang' ELSE $acc END"
     }
-    s"""WITH w AS (
-       |  SELECT doc_id, lang, string_split_regex(lower(text), '\\s+') AS ws FROM documents
-       |), c AS (
-       |  SELECT doc_id, lang,
-       |  $cnt
-       |  FROM w
-       |)
-       |SELECT doc_id, lang, c_en, c_de, c_es, c_fr, c_zh,
-       |  $pred AS predicted,
-       |  ($pred) = lang AS is_match
-       |FROM c
-       |ORDER BY doc_id""".stripMargin
+    sql(Seq(words("doc_id, lang"),
+      "c" ->
+        s"""|  SELECT doc_id, lang,
+            |  $cnt
+            |  FROM w""".stripMargin),
+      s"""|SELECT doc_id, lang, $cs,
+          |  $pred AS predicted,
+          |  ($pred) = lang AS is_match
+          |FROM c
+          |ORDER BY doc_id""".stripMargin)
   }
 
   // ------------------------------------------------------ quality score
@@ -119,25 +124,14 @@ object TextAnalysis {
   }
 
   val qualityScoreOracle: String =
-    s"""WITH c AS (
-       |  SELECT doc_id,
-       |    CAST(length(text) AS BIGINT) AS n_chars,
-       |    CAST(len(string_split_regex(lower(text), '\\s+')) AS BIGINT) AS n_words,
-       |    CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-       |          w -> w IN (${qualityStopwords.map(w => s"'$w'").mkString(", ")}))) AS BIGINT) AS n_stopwords,
-       |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT) AS alpha_cnt
-       |  FROM documents
-       |)
-       |SELECT doc_id, n_chars, n_words, n_stopwords,
-       |  CAST(alpha_cnt AS DOUBLE) / n_words AS avg_word_len,
-       |  CAST(n_stopwords AS DOUBLE) / n_words AS stopword_ratio,
-       |  CAST(alpha_cnt AS DOUBLE) / n_chars AS alpha_ratio,
-       |  least(CAST(n_chars AS DOUBLE) / 500.0, 1.0) * 0.25
-       |    + (CAST(n_stopwords AS DOUBLE) / n_words) * 0.25
-       |    + (CAST(alpha_cnt AS DOUBLE) / n_chars) * 0.25
-       |    + least((CAST(alpha_cnt AS DOUBLE) / n_words) / 8.0, 1.0) * 0.25 AS quality_score
-       |FROM c
-       |ORDER BY doc_id""".stripMargin
+    sql(Seq("c" -> qualityCounts("doc_id", qualityStopwords)),
+      s"""|SELECT doc_id, n_chars, n_words, n_stopwords,
+          |  CAST(alpha_cnt AS DOUBLE) / n_words AS avg_word_len,
+          |  CAST(n_stopwords AS DOUBLE) / n_words AS stopword_ratio,
+          |  CAST(alpha_cnt AS DOUBLE) / n_chars AS alpha_ratio,
+          |  ${qualityTerms("    ")} AS quality_score
+          |FROM c
+          |ORDER BY doc_id""".stripMargin)
 
   // ------------------------------------- quality quantile filtering (n29)
 
@@ -177,28 +171,17 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val qualityQuantileOracle: String =
-    s"""WITH c AS (
-       |  SELECT doc_id, lang,
-       |    CAST(length(text) AS BIGINT) AS n_chars,
-       |    CAST(len(string_split_regex(lower(text), '\\s+')) AS BIGINT) AS n_words,
-       |    CAST(len(list_filter(string_split_regex(lower(text), '\\s+'),
-       |          w -> w IN (${qualityStopwords.map(w => s"'$w'").mkString(", ")}))) AS BIGINT) AS n_stopwords,
-       |    CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS BIGINT) AS alpha_cnt
-       |  FROM documents
-       |), s AS (
-       |  SELECT doc_id, lang,
-       |    least(CAST(n_chars AS DOUBLE) / 500.0, 1.0) * 0.25
-       |      + (CAST(n_stopwords AS DOUBLE) / n_words) * 0.25
-       |      + (CAST(alpha_cnt AS DOUBLE) / n_chars) * 0.25
-       |      + least((CAST(alpha_cnt AS DOUBLE) / n_words) / 8.0, 1.0) * 0.25 AS quality_score
-       |  FROM c
-       |)
-       |SELECT doc_id, lang, quality_score,
+  val qualityQuantileOracle: String = sql(Seq(
+    "c" -> qualityCounts("doc_id, lang", qualityStopwords),
+    "s" ->
+      s"""|  SELECT doc_id, lang,
+          |    ${qualityTerms("      ")} AS quality_score
+          |  FROM c""".stripMargin),
+    """|SELECT doc_id, lang, quality_score,
        |  percent_rank() OVER (PARTITION BY lang ORDER BY quality_score, doc_id) AS pr,
        |  percent_rank() OVER (PARTITION BY lang ORDER BY quality_score, doc_id) >= 0.25 AS kept
        |FROM s
-       |ORDER BY doc_id""".stripMargin
+       |ORDER BY doc_id""".stripMargin)
 
   // -------------------------------------------------- repetition signals
 
@@ -224,22 +207,20 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val repetitionStatsOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS w
-      |  FROM documents
-      |), c AS (
-      |  SELECT doc_id, w, COUNT(*) AS c FROM w GROUP BY 1, 2
-      |), s AS (
-      |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_words,
-      |    COUNT(*) AS n_distinct, CAST(MAX(c) AS BIGINT) AS top_count
-      |  FROM c GROUP BY 1
-      |)
-      |SELECT doc_id, n_words, n_distinct, top_count,
-      |  CAST(n_words - n_distinct AS DOUBLE) / n_words AS dup_word_ratio,
-      |  CAST(top_count AS DOUBLE) / n_words AS top_word_ratio
-      |FROM s
-      |ORDER BY doc_id""".stripMargin
+  val repetitionStatsOracle: String = sql(Seq(
+    "w" ->
+      s"""|  SELECT doc_id, unnest($splitWords) AS w
+          |  FROM documents""".stripMargin,
+    "c" -> "  SELECT doc_id, w, COUNT(*) AS c FROM w GROUP BY 1, 2",
+    "s" ->
+      """|  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_words,
+         |    COUNT(*) AS n_distinct, CAST(MAX(c) AS BIGINT) AS top_count
+         |  FROM c GROUP BY 1""".stripMargin),
+    """|SELECT doc_id, n_words, n_distinct, top_count,
+       |  CAST(n_words - n_distinct AS DOUBLE) / n_words AS dup_word_ratio,
+       |  CAST(top_count AS DOUBLE) / n_words AS top_word_ratio
+       |FROM s
+       |ORDER BY doc_id""".stripMargin)
 
   // -------------------------------------- cross-doc duplicated spans (n28)
 
@@ -260,7 +241,7 @@ object TextAnalysis {
    * [[graft.ops.Dedup.wordShingles]]).
    */
   def dupSpanStatsQuery(spark: SparkSession, dir: String): DataFrame = {
-    val n = 5
+    val n = SpanWidth
     val gramsOf: Column => Column = ws => {
       val grams = transform(sequence(lit(0), size(ws) - n),
         i => concat_ws(" ", (0 until n).map(k => element_at(ws, i + k + 1)): _*))
@@ -282,24 +263,18 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val dupSpanStatsOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), g AS (
-      |  SELECT doc_id,
-      |    unnest([md5(ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' ||
-      |                ws[i+3] || ' ' || ws[i+4])
-      |            for i in range(1, len(ws) - 3)]) AS h
-      |  FROM w WHERE len(ws) >= 5
-      |), f AS (
-      |  SELECT h, MIN(doc_id) <> MAX(doc_id) AS is_cross FROM g GROUP BY h
-      |)
-      |SELECT g.doc_id, COUNT(*) AS n_windows,
-      |  CAST(SUM(CASE WHEN is_cross THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_windows,
-      |  CAST(SUM(CASE WHEN is_cross THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*) AS dup_frac
-      |FROM g JOIN f USING (h)
-      |GROUP BY g.doc_id
-      |ORDER BY doc_id""".stripMargin
+  val dupSpanStatsOracle: String = sql(spanHashes :+
+    "f" -> "  SELECT h, MIN(doc_id) <> MAX(doc_id) AS is_cross FROM g GROUP BY h",
+    flaggedShare("is_cross", "n_dup_windows", "dup_frac", "h"))
+
+  /** Every document's [[SpanWidth]]-word windows as md5s, with their
+    * multiplicity (n28, n34). */
+  private def spanHashes: Seq[Cte] = Seq(words(),
+    "g" ->
+      s"""|  SELECT doc_id,
+          |    unnest([md5(${gram(SpanWidth, " " * 16)})
+          |            for i in range(1, len(ws) - ${SpanWidth - 2})]) AS h
+          |  FROM w WHERE len(ws) >= $SpanWidth""".stripMargin)
 
   // ---------------------------------------- n34 first-occurrence novelty
 
@@ -318,7 +293,7 @@ object TextAnalysis {
    * on a constant-width key), then one join back and a per-doc count.
    */
   def noveltyQuery(spark: SparkSession, dir: String): DataFrame = {
-    val n = 5
+    val n = SpanWidth
     val gramsOf: Column => Column = ws => {
       val grams = transform(sequence(lit(0), size(ws) - n),
         i => concat_ws(" ", (0 until n).map(k => element_at(ws, i + k + 1)): _*))
@@ -339,25 +314,15 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val noveltyOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), g AS (
-      |  SELECT doc_id,
-      |    unnest([md5(ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' ||
-      |                ws[i+3] || ' ' || ws[i+4])
-      |            for i in range(1, len(ws) - 3)]) AS h
-      |  FROM w WHERE len(ws) >= 5
-      |), f AS (
-      |  SELECT h, MIN(doc_id) AS first_doc FROM g GROUP BY h
-      |)
-      |SELECT g.doc_id, COUNT(*) AS n_windows,
-      |  CAST(SUM(CASE WHEN g.doc_id = first_doc THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
-      |  CAST(SUM(CASE WHEN g.doc_id = first_doc THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
-      |    AS novelty_frac
-      |FROM g JOIN f USING (h)
-      |GROUP BY g.doc_id
-      |ORDER BY doc_id""".stripMargin
+  val noveltyOracle: String = sql(spanHashes :+
+    "f" -> "  SELECT h, MIN(doc_id) AS first_doc FROM g GROUP BY h",
+    """|SELECT g.doc_id, COUNT(*) AS n_windows,
+       |  CAST(SUM(CASE WHEN g.doc_id = first_doc THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
+       |  CAST(SUM(CASE WHEN g.doc_id = first_doc THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
+       |    AS novelty_frac
+       |FROM g JOIN f USING (h)
+       |GROUP BY g.doc_id
+       |ORDER BY doc_id""".stripMargin)
 
   // ------------------------------------------------------ token counting
 
@@ -417,28 +382,25 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val tfidfOracle: String =
-    s"""WITH terms AS (
-       |  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
-       |  FROM documents
-       |), t AS (
-       |  SELECT doc_id, term FROM terms
-       |  WHERE term <> '' AND term NOT IN (${qualityStopwords.map(w => s"'$w'").mkString(", ")})
-       |), tf AS (
-       |  SELECT doc_id, term, COUNT(*) AS tf FROM t GROUP BY 1, 2
-       |), df AS (
-       |  SELECT term, COUNT(DISTINCT doc_id) AS df FROM t GROUP BY 1
-       |), scored AS (
-       |  SELECT doc_id, term,
-       |    tf * (((SELECT COUNT(*) FROM documents) + 1.0) / (df + 1)) AS tfidf
-       |  FROM tf JOIN df USING (term)
-       |)
-       |SELECT doc_id,
+  val tfidfOracle: String = sql(Seq(
+    "terms" ->
+      """|  SELECT doc_id, unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
+         |  FROM documents""".stripMargin,
+    "t" ->
+      s"""|  SELECT doc_id, term FROM terms
+          |  WHERE term <> '' AND term NOT IN (${quoted(qualityStopwords)})""".stripMargin,
+    "tf" -> "  SELECT doc_id, term, COUNT(*) AS tf FROM t GROUP BY 1, 2",
+    "df" -> "  SELECT term, COUNT(DISTINCT doc_id) AS df FROM t GROUP BY 1",
+    "scored" ->
+      """|  SELECT doc_id, term,
+         |    tf * (((SELECT COUNT(*) FROM documents) + 1.0) / (df + 1)) AS tfidf
+         |  FROM tf JOIN df USING (term)""".stripMargin),
+    """|SELECT doc_id,
        |  (MAX({'tfidf': tfidf, 'term': term})).term AS top_term,
        |  (MAX({'tfidf': tfidf, 'term': term})).tfidf AS top_score
        |FROM scored
        |GROUP BY doc_id
-       |ORDER BY doc_id""".stripMargin
+       |ORDER BY doc_id""".stripMargin)
 
   // -------------------------------------------------- fingerprinting
 
@@ -466,22 +428,20 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val fingerprintOracle: String =
-    """WITH n AS (
-      |  SELECT doc_id, regexp_replace(lower(text), '\s+', ' ', 'g') AS norm FROM documents
-      |), s AS (
-      |  SELECT doc_id, norm,
-      |    greatest(CAST(floor((length(norm) - 20) / 7.0) AS BIGINT) + 1, 0) AS n_sh
-      |  FROM n
-      |)
-      |SELECT doc_id,
-      |  md5(norm) AS fingerprint,
-      |  CASE WHEN n_sh > 0
-      |    THEN list_min([md5(norm[i * 7 + 1 : i * 7 + 20]) for i in range(0, n_sh)])
-      |    ELSE md5(norm) END AS winnow_fp,
-      |  CAST(length(norm) AS BIGINT) AS norm_len
-      |FROM s
-      |ORDER BY doc_id""".stripMargin
+  val fingerprintOracle: String = sql(Seq(
+    "n" -> "  SELECT doc_id, regexp_replace(lower(text), '\\s+', ' ', 'g') AS norm FROM documents",
+    "s" ->
+      """|  SELECT doc_id, norm,
+         |    greatest(CAST(floor((length(norm) - 20) / 7.0) AS BIGINT) + 1, 0) AS n_sh
+         |  FROM n""".stripMargin),
+    """|SELECT doc_id,
+       |  md5(norm) AS fingerprint,
+       |  CASE WHEN n_sh > 0
+       |    THEN list_min([md5(norm[i * 7 + 1 : i * 7 + 20]) for i in range(0, n_sh)])
+       |    ELSE md5(norm) END AS winnow_fp,
+       |  CAST(length(norm) AS BIGINT) AS norm_len
+       |FROM s
+       |ORDER BY doc_id""".stripMargin)
 
   // ----------------------------------------- n43 corpus-trained bigram LM
 
@@ -549,26 +509,26 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val bigramLmOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), bg AS (
-      |  SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
-      |  FROM w, LATERAL (SELECT unnest(range(1, len(ws))) AS i) r
-      |), c2 AS (
-      |  SELECT w1, w2, COUNT(*) AS c2 FROM bg GROUP BY 1, 2
-      |), c1 AS (
-      |  SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1
-      |), model AS (
-      |  SELECT w1, w2, CAST((c2 * 1073741824) // c1 AS BIGINT) AS q
-      |  FROM c2 JOIN c1 USING (w1)
-      |)
-      |SELECT doc_id, COUNT(*) AS n_bigrams, CAST(SUM(q) AS BIGINT) AS sum_q,
-      |  CAST(SUM(q) AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1073741824.0)
-      |    AS lm_score
-      |FROM bg JOIN model USING (w1, w2)
-      |GROUP BY doc_id
-      |ORDER BY doc_id""".stripMargin
+  val bigramLmOracle: String = sql(bigramModel("w"),
+    """|SELECT doc_id, COUNT(*) AS n_bigrams, CAST(SUM(q) AS BIGINT) AS sum_q,
+       |  CAST(SUM(q) AS DOUBLE) / (CAST(COUNT(*) AS DOUBLE) * 1073741824.0)
+       |    AS lm_score
+       |FROM bg JOIN model USING (w1, w2)
+       |GROUP BY doc_id
+       |ORDER BY doc_id""".stripMargin)
+
+  /** The corpus-trained model of [[bigramLm]] over the word split `w`:
+    * each document's bigrams, their counts and the quantized
+    * probabilities `q` (n43, n49). */
+  private[ops] def bigramModel(w: String): Seq[Cte] = Seq(words(name = w),
+    "bg" ->
+      s"""|  SELECT doc_id, ws[i] AS w1, ws[i + 1] AS w2
+          |  FROM $w, LATERAL (SELECT unnest(range(1, len(ws))) AS i) r""".stripMargin,
+    "c2" -> "  SELECT w1, w2, COUNT(*) AS c2 FROM bg GROUP BY 1, 2",
+    "c1" -> "  SELECT w1, CAST(SUM(c2) AS BIGINT) AS c1 FROM c2 GROUP BY 1",
+    "model" ->
+      """|  SELECT w1, w2, CAST((c2 * 1073741824) // c1 AS BIGINT) AS q
+         |  FROM c2 JOIN c1 USING (w1)""".stripMargin)
 
   // ------------------------------------ n45 segment-level cross-doc dedup
 
@@ -593,10 +553,11 @@ object TextAnalysis {
    * — collect_list's arrival order is not deterministic, the sort is what
    * makes the output exact.
    */
-  def segmentDedupQuery(spark: SparkSession, dir: String, width: Int = 4): DataFrame =
+  def segmentDedupQuery(spark: SparkSession, dir: String,
+                        width: Int = SegmentWidth): DataFrame =
     segmentDedup(documents(spark, dir), width)
 
-  def segmentDedup(docs: DataFrame, width: Int = 4): DataFrame = {
+  def segmentDedup(docs: DataFrame, width: Int = SegmentWidth): DataFrame = {
     val segsOf: Column => Column = ws =>
       transform(sequence(lit(0), size(ws) - 1, lit(width)),
         st => concat_ws(" ", slice(ws, st + 1, lit(width))))
@@ -638,10 +599,10 @@ object TextAnalysis {
    * map-side-only pass under a bucketing on doc_id.
    */
   def innerSegmentDedupQuery(spark: SparkSession, dir: String,
-                             width: Int = 4): DataFrame =
+                             width: Int = SegmentWidth): DataFrame =
     innerSegmentDedup(documents(spark, dir), width)
 
-  def innerSegmentDedup(docs: DataFrame, width: Int = 4): DataFrame = {
+  def innerSegmentDedup(docs: DataFrame, width: Int = SegmentWidth): DataFrame = {
     val segsOf: Column => Column = ws =>
       transform(sequence(lit(0), size(ws) - 1, lit(width)),
         st => concat_ws(" ", slice(ws, st + 1, lit(width))))
@@ -667,27 +628,34 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val innerSegmentDedupOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), seg AS (
-      |  SELECT doc_id, CAST(st / 4 AS BIGINT) AS pos,
-      |    md5(array_to_string(list_slice(ws, st + 1, st + 4), ' ')) AS h,
-      |    array_to_string(list_slice(ws, st + 1, st + 4), ' ') AS seg
-      |  FROM w, LATERAL (SELECT unnest(range(0, len(ws), 4)) AS st) r
-      |), f AS (
-      |  SELECT doc_id, h, MIN(pos) AS first_pos FROM seg GROUP BY 1, 2
-      |)
-      |SELECT doc_id, COUNT(*) AS n_segs,
-      |  CAST(SUM(CASE WHEN pos = first_pos THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS n_kept,
-      |  CAST(SUM(CASE WHEN pos = first_pos THEN 1 ELSE 0 END) AS DOUBLE)
-      |    / COUNT(*) AS kept_frac,
-      |  COALESCE(string_agg(CASE WHEN pos = first_pos THEN seg END,
-      |    ' ' ORDER BY pos), '') AS kept_text
-      |FROM seg JOIN f USING (doc_id, h)
-      |GROUP BY doc_id
-      |ORDER BY doc_id""".stripMargin
+  val innerSegmentDedupOracle: String = sql(segments :+
+    "f" -> "  SELECT doc_id, h, MIN(pos) AS first_pos FROM seg GROUP BY 1, 2",
+    keptSegments("pos = first_pos", "doc_id, h"))
+
+  /** Each document's [[SegmentWidth]]-word segments in order (`pos`), as
+    * text and md5 (n45, n50). */
+  private def segments: Seq[Cte] = Seq(words(),
+    "seg" ->
+      s"""|  SELECT doc_id, CAST(st / $SegmentWidth AS BIGINT) AS pos,
+          |    md5($segmentText) AS h,
+          |    $segmentText AS seg
+          |  $segmentStarts""".stripMargin)
+
+  private def segmentText: String =
+    s"array_to_string(list_slice(ws, st + 1, st + $SegmentWidth), ' ')"
+  private def segmentStarts: String =
+    s"FROM w, LATERAL (SELECT unnest(range(0, len(ws), $SegmentWidth)) AS st) r"
+
+  /** Per document, its segments, the `kept` ones' count and share, and
+    * their text in order. */
+  private def keptSegments(kept: String, using: String): String =
+    s"""|SELECT doc_id, COUNT(*) AS n_segs,
+        |${keptShare(kept)},
+        |  COALESCE(string_agg(CASE WHEN $kept THEN seg END,
+        |    ' ' ORDER BY pos), '') AS kept_text
+        |FROM seg JOIN f USING ($using)
+        |GROUP BY doc_id
+        |ORDER BY doc_id""".stripMargin
 
   // ----------------------------------- n51 duplicated-segment leaderboard
 
@@ -710,10 +678,10 @@ object TextAnalysis {
    * table ever materializes.
    */
   def dupSegmentTopQuery(spark: SparkSession, dir: String,
-                         width: Int = 4, k: Int = 20): DataFrame =
+                         width: Int = SegmentWidth, k: Int = 20): DataFrame =
     dupSegmentTop(documents(spark, dir), width, k)
 
-  def dupSegmentTop(docs: DataFrame, width: Int = 4, k: Int = 20): DataFrame = {
+  def dupSegmentTop(docs: DataFrame, width: Int = SegmentWidth, k: Int = 20): DataFrame = {
     val segsOf: Column => Column = ws =>
       transform(sequence(lit(0), size(ws) - 1, lit(width)),
         st => concat_ws(" ", slice(ws, st + 1, lit(width))))
@@ -729,41 +697,20 @@ object TextAnalysis {
       .limit(k)
   }
 
-  val dupSegmentTopOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), seg AS (
-      |  SELECT doc_id,
-      |    array_to_string(list_slice(ws, st + 1, st + 4), ' ') AS seg
-      |  FROM w, LATERAL (SELECT unnest(range(0, len(ws), 4)) AS st) r
-      |)
-      |SELECT md5(seg) AS h, seg,
-      |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-      |  COUNT(*) AS n_occ
-      |FROM seg
-      |GROUP BY seg
-      |ORDER BY n_docs DESC, h
-      |LIMIT 20""".stripMargin
+  val dupSegmentTopOracle: String = sql(Seq(words(),
+    "seg" ->
+      s"""|  SELECT doc_id,
+          |    $segmentText AS seg
+          |  $segmentStarts""".stripMargin),
+    """|SELECT md5(seg) AS h, seg,
+       |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
+       |  COUNT(*) AS n_occ
+       |FROM seg
+       |GROUP BY seg
+       |ORDER BY n_docs DESC, h
+       |LIMIT 20""".stripMargin)
 
-  val segmentDedupOracle: String =
-    """WITH w AS (
-      |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS ws FROM documents
-      |), seg AS (
-      |  SELECT doc_id, CAST(st / 4 AS BIGINT) AS pos,
-      |    md5(array_to_string(list_slice(ws, st + 1, st + 4), ' ')) AS h,
-      |    array_to_string(list_slice(ws, st + 1, st + 4), ' ') AS seg
-      |  FROM w, LATERAL (SELECT unnest(range(0, len(ws), 4)) AS st) r
-      |), f AS (
-      |  SELECT h, MIN(doc_id) AS first_doc FROM seg GROUP BY h
-      |)
-      |SELECT doc_id, COUNT(*) AS n_segs,
-      |  CAST(SUM(CASE WHEN doc_id = first_doc THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS n_kept,
-      |  CAST(SUM(CASE WHEN doc_id = first_doc THEN 1 ELSE 0 END) AS DOUBLE)
-      |    / COUNT(*) AS kept_frac,
-      |  COALESCE(string_agg(CASE WHEN doc_id = first_doc THEN seg END,
-      |    ' ' ORDER BY pos), '') AS kept_text
-      |FROM seg JOIN f USING (h)
-      |GROUP BY doc_id
-      |ORDER BY doc_id""".stripMargin
+  val segmentDedupOracle: String = sql(segments :+
+    "f" -> "  SELECT h, MIN(doc_id) AS first_doc FROM seg GROUP BY h",
+    keptSegments("doc_id = first_doc", "h"))
 }

@@ -50,6 +50,37 @@ object Sessions {
       v
     }.getOrElse(default)
 
+  /** A byte-size env override, checked with Spark's own byte-string parser
+    * (`JavaUtils.byteStringAsBytes`: "268435456", "64m", "1g") and
+    * forwarded as given. */
+  private[graft] def envBytes(name: String,
+                              env: String => Option[String] = sys.env.get): Option[String] =
+    env(name).map { s =>
+      val v = try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
+        catch { case _: NumberFormatException => 0L }
+      require(v > 0, s"$name must be a positive byte size such as '256m', got '$s'")
+      s
+    }
+
+  /** Spark's short compression-codec names (its `CompressionCodec` table
+    * is private to Spark; `SessionsEnvSpec` pins this copy to it). */
+  private[graft] val ShortCodecs = Seq("lz4", "lzf", "snappy", "zstd")
+
+  /** A compression-codec env override: one of [[ShortCodecs]] (any case,
+    * as Spark resolves them) or a loadable
+    * [[org.apache.spark.io.CompressionCodec]] class. */
+  private[graft] def envCodec(name: String,
+                              env: String => Option[String] = sys.env.get): Option[String] =
+    env(name).map { s =>
+      def isCodecClass = try classOf[org.apache.spark.io.CompressionCodec]
+        .isAssignableFrom(Class.forName(s, false, getClass.getClassLoader))
+        catch { case _: ClassNotFoundException | _: LinkageError => false }
+      require(ShortCodecs.contains(s.toLowerCase(java.util.Locale.ROOT)) || isCodecClass,
+        s"$name must be one of ${ShortCodecs.mkString(", ")} or a " +
+          s"CompressionCodec class, got '$s'")
+      s
+    }
+
   def local(cpus: Int, logLevel: String = "WARN"): SparkSession = {
     val builder = SparkSession.builder()
       .config("spark.sql.warehouse.dir",
@@ -71,9 +102,9 @@ object Sessions {
     //  - SPARK_GRAFT_SHUFFLE_CODEC: shuffle/spill compression codec —
     //    "zstd" usually wins markedly on ratio at cluster NIC speeds for
     //    a bit more CPU; measure per §2.3, there is no universal answer.
-    sys.env.get("SPARK_GRAFT_ADVISORY_PARTITION_BYTES").foreach(v =>
+    envBytes("SPARK_GRAFT_ADVISORY_PARTITION_BYTES").foreach(v =>
       builder.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", v))
-    sys.env.get("SPARK_GRAFT_SHUFFLE_CODEC").foreach(v =>
+    envCodec("SPARK_GRAFT_SHUFFLE_CODEC").foreach(v =>
       builder.config("spark.io.compression.codec", v))
     val spark = builder
       .config("spark.sql.adaptive.enabled", "true")
